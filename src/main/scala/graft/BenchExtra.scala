@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused per-query benchmark for optimization work (guide §1.4): times a
   * NAMED subset of `SparkEntry.queries` with the same action as the frozen
   * driver bench (`.count()`, best of N reps) so numbers are comparable,
@@ -27,14 +25,7 @@ object BenchExtra {
     val explainOnly = sys.env.get("SPARK_GRAFT_EXPLAIN_ONLY").contains("1")
     val explainSuffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     val all = SparkEntry.queries
     val selected =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Skew-stress artifact (north rule: "handles size-skewed documents via
@@ -32,14 +32,7 @@ object BenchSkew {
     val heavyPages = sys.env.getOrElse("SPARK_GRAFT_SKEW_PAGES", "5000").toInt
     val parts = cpus
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     import spark.implicits._
 
     val monster = graft.core.SynthPdf.multiPage(heavyPages)

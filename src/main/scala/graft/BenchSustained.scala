@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sustained-scale rehearsal (VERDICT r4 task #10): drive the size-routed
@@ -19,13 +18,7 @@ object BenchSustained {
     val minMinutes = sys.env.getOrElse("SPARK_GRAFT_SUSTAIN_MIN", "10").toInt
     val minDocs = sys.env.getOrElse("SPARK_GRAFT_SUSTAIN_DOCS", "6000000").toLong
     val batchDocs = sys.env.getOrElse("SPARK_GRAFT_SUSTAIN_BATCH", "600000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     // heap sampler: high-water of used heap, bucketed per minute
     val heapPerMin = scala.collection.concurrent.TrieMap[Int, Long]()

@@ -1210,7 +1210,7 @@ object SparkEntry {
           "BT /F1 12 Tf 50 700 Td (carrier) Tj ET"), "").toOption.get
         graft.core.PdfWriter.writeEdited(base, graft.core.EditSpec(newAttachments = Seq(
           "bundle.zip" -> Array[Byte]('P', 'K', 3, 4, 0, 0),
-          "evil.exe" -> "MZ payload".getBytes("ISO-8859-1"),
+          "evil.exe" -> "MZ\u0000payload".getBytes("ISO-8859-1"),
           "notes.txt" -> "plain notes".getBytes("UTF-8"),
           "run.sh" -> "#!/bin/sh\necho x\n".getBytes("UTF-8"))))
       }
@@ -1418,7 +1418,7 @@ object SparkEntry {
     "pdf_sql_surface" -> ((s, _) => {
       // ScalaUDF SQL registration (SURVEY.md §2.11): the parser callable
       // straight from spark.sql
-      graft.functions.PdfFunctions.register(s)
+      graft.functions.NativeRegistry.register(s)
       PagesTable.ofFixtures(s, Seq("text.pdf", "multipage.pdf", "empty.pdf"))
         .toDF().createOrReplaceTempView("pages_v")
       s.sql("""SELECT url, CAST(pdf_page_count(html) AS BIGINT) AS n_pages,

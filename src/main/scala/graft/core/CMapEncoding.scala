@@ -91,8 +91,6 @@ final class CMapEncoding(
     }
   }
 
-  def hasCidData: Boolean = identityCid || cidSingle.nonEmpty || cidRanges.nonEmpty
-
   /** True when every codespace range is exactly 2 bytes covering 0..FFFF
     * (lets the hot path keep the branch-free 2-byte split). */
   def isPlainTwoByte: Boolean =

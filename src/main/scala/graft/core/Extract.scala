@@ -17,8 +17,6 @@ final case class DocExtract(
   def cliReport: String =
     pages.map(p => s"# Page ${p.pageIndex + 1}\n" + p.text.replace("\r\n", "\n"))
       .mkString("", "\n\n", "\n")
-
-  def fullText: String = pages.map(_.text).mkString("\r\n")
 }
 
 object Extract {

@@ -468,12 +468,6 @@ final class PdfDocument private (
     ch.toString * reps
   }
 
-  /** AcroForm field tree flattened to (qualified name, field type) —
-    * reference formenv surface (document.py:598-632; fixture forms.pdf has
-    * 7 choice fields). */
-  def formFields: Vector[(String, String)] =
-    formFieldsDetailed.map(f => (f.name, f.fieldType))
-
   /** One terminal AcroForm field: qualified name, /FT, current /V rendered
     * as text (names and strings; arrays joined with ','), and /Ff flag bits
     * — the form-env field-state surface (document.py:598-632 formenv;

@@ -330,7 +330,7 @@ object TextPage {
                 rc.ox, rc.oy, rc.fontSize, objIdx)
               lastEmitted = rc.code.toChar
             } else {
-              entries += CharEntry(' ', generated = false, rc.tight, Some(rc.loose),
+              entries += CharEntry('\u0000', generated = false, rc.tight, Some(rc.loose),
                 rc.ox, rc.oy, rc.fontSize, objIdx, excluded = true)
             }
           } else if (uni == " " && lastEmitted == ' ') {

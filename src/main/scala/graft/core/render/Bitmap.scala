@@ -48,9 +48,6 @@ final class Bitmap(val width: Int, val height: Int, background: Int = 0xFFFFFFFF
     out.toByteArray
   }
 
-  /** Raw bytes in BGRA order (PDFium's native byte layout). */
-  def toBgra: Array[Byte] = toBytes("BGRA")
-
   /** Raw pixel bytes in one of the reference's bitmap formats
     * (bitmap.py:36-67 FPDFBitmap_Gray/BGR/BGRx/BGRA, with the
     * `rev_byteorder` variants RGB/RGBx/RGBA). Gray is the ITU-R BT.601

@@ -294,10 +294,6 @@ object Rasterizer {
     @inline def allows(x: Int, y: Int): Boolean =
       x >= x0 && x <= x1 && y >= y0 && y <= y1 &&
         (mask == null || mask(y * maskW + x) != 0)
-    /** Intersect with a rect (no new mask). */
-    def intersectRect(rx0: Int, ry0: Int, rx1: Int, ry1: Int): ClipRegion =
-      new ClipRegion(math.max(x0, rx0), math.max(y0, ry0),
-        math.min(x1, rx1), math.min(y1, ry1), mask, maskW)
     /** Intersect with another region (AND of masks where both have one). */
     def intersect(o: ClipRegion): ClipRegion = {
       val m =

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftExprShim, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ScalaUDF, UnaryExpression}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
 
@@ -14,12 +16,14 @@ import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, 
   * unchanged — what disappears is the per-row UDF boundary. */
 object NativeFns {
   // static entry points referenced from generated code (stable names)
+  def extract(b: Array[Byte]): graft.core.DocExtract =
+    graft.core.Extract.extractText(if (b == null) Array.emptyByteArray else b)
   def pageCount(b: Array[Byte]): Int = {
-    val r = graft.core.Extract.extractText(if (b == null) Array.emptyByteArray else b)
+    val r = extract(b)
     if (r.ok) r.nPages else -1
   }
   def charCount(b: Array[Byte]): Long = {
-    val r = graft.core.Extract.extractText(if (b == null) Array.emptyByteArray else b)
+    val r = extract(b)
     if (r.ok) r.pages.map(_.nChars.toLong).sum else -1L
   }
   def simhash(s: String): Long =
@@ -81,7 +85,7 @@ object NativeFns {
 
   def stats(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
     statsCalls.incrementAndGet()
-    val r = graft.core.Extract.extractText(if (b == null) Array.emptyByteArray else b)
+    val r = extract(b)
     if (r.ok)
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
         r.nPages, r.pages.map(_.nChars.toLong).sum,
@@ -291,8 +295,8 @@ object FusePdfStatsRule
 
 /** Session-extension entry point:
   * `spark-submit --conf spark.sql.extensions=graft.functions.GraftSparkExtensions`
-  * injects the native functions AND the stat-fusion optimizer rule into
-  * every session built on the cluster. */
+  * injects the SQL surface ([[NativeRegistry.entries]]) AND the stat-fusion
+  * optimizer rule into every session built on the cluster. */
 class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     NativeRegistry.entries.foreach { case (name, info, builder) =>
@@ -302,50 +306,82 @@ class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions 
   }
 }
 
+/** The SQL surface: the `*_native` expressions plus the ScalaUDF wrappers
+  * over the core parser (SURVEY.md §2.11 — the function body dominates
+  * cost there, so they stay deliberate UDFs at the boundary). DataFrame
+  * code does not look these names up; it builds [[NativeColumns]]. */
 object NativeRegistry {
   type Builder = Seq[Expression] => Expression
+
+  private def native(name: String, cls: Class[_], build: Expression => Expression) =
+    (name, new ExpressionInfo(cls.getName, name), (args: Seq[Expression]) => build(args.head))
+
+  private def scalaUdf(name: String, f: UserDefinedFunction) =
+    (name, new ExpressionInfo(classOf[ScalaUDF].getName, name), GraftExprShim.udfBuilder(name, f))
+
   val entries: Seq[(String, ExpressionInfo, Builder)] = Seq(
-    ("pdf_page_count_native",
-      new ExpressionInfo(classOf[PdfPageCountExpr].getName, "pdf_page_count_native"),
-      (args: Seq[Expression]) => PdfPageCountExpr(args.head)),
-    ("pdf_char_count_native",
-      new ExpressionInfo(classOf[PdfCharCountExpr].getName, "pdf_char_count_native"),
-      (args: Seq[Expression]) => PdfCharCountExpr(args.head)),
-    ("simhash64_native",
-      new ExpressionInfo(classOf[SimhashExpr].getName, "simhash64_native"),
-      (args: Seq[Expression]) => SimhashExpr(args.head)),
-    ("pdf_stats_native",
-      new ExpressionInfo(classOf[PdfStatsExpr].getName, "pdf_stats_native"),
-      (args: Seq[Expression]) => PdfStatsExpr(args.head)),
-    ("text_normalize_native",
-      new ExpressionInfo(classOf[TextNormalizeExpr].getName, "text_normalize_native"),
-      (args: Seq[Expression]) => TextNormalizeExpr(args.head)),
-    ("url_canonicalize_native",
-      new ExpressionInfo(classOf[UrlCanonicalizeExpr].getName, "url_canonicalize_native"),
-      (args: Seq[Expression]) => UrlCanonicalizeExpr(args.head)),
-    ("url_host_native",
-      new ExpressionInfo(classOf[UrlHostExpr].getName, "url_host_native"),
-      (args: Seq[Expression]) => UrlHostExpr(args.head)),
-    ("url_domain_native",
-      new ExpressionInfo(classOf[UrlDomainExpr].getName, "url_domain_native"),
-      (args: Seq[Expression]) => UrlDomainExpr(args.head)))
+    native("pdf_page_count_native", classOf[PdfPageCountExpr], PdfPageCountExpr),
+    native("pdf_char_count_native", classOf[PdfCharCountExpr], PdfCharCountExpr),
+    native("simhash64_native", classOf[SimhashExpr], SimhashExpr),
+    native("pdf_stats_native", classOf[PdfStatsExpr], PdfStatsExpr),
+    native("text_normalize_native", classOf[TextNormalizeExpr], TextNormalizeExpr),
+    native("url_canonicalize_native", classOf[UrlCanonicalizeExpr], UrlCanonicalizeExpr),
+    native("url_host_native", classOf[UrlHostExpr], UrlHostExpr),
+    native("url_domain_native", classOf[UrlDomainExpr], UrlDomainExpr),
+    scalaUdf("pdf_extract_text", udf((html: Array[Byte]) => {
+      val r = NativeFns.extract(html)
+      if (r.ok) r.cliReport else null
+    })),
+    scalaUdf("pdf_page_count", udf((html: Array[Byte]) => NativeFns.pageCount(html))),
+    scalaUdf("pdf_char_count", udf((html: Array[Byte]) => NativeFns.charCount(html))),
+    scalaUdf("pdf_err_code", udf((html: Array[Byte]) => NativeFns.extract(html).errCode)),
+    scalaUdf("simhash64", udf((text: String) => NativeFns.simhash(text))))
 
-  /** In-session registration (same builders as the extension path) for
-    * sessions created without `spark.sql.extensions`; also installs the
-    * stat-fusion optimizer rule (idempotent). */
+  /** Installs [[entries]] and the stat-fusion rule on a session built
+    * without `spark.sql.extensions`. Idempotent: a name the session
+    * already resolves is left as it is, so repeat calls replace nothing. */
   def register(spark: SparkSession): Unit = {
-    entries.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      entries.foreach { case (name, info, builder) =>
+        val id = FunctionIdentifier(name)
+        if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+      }
+      if (!spark.experimental.extraOptimizations.contains(FusePdfStatsRule))
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ FusePdfStatsRule
     }
-    if (!spark.experimental.extraOptimizations.contains(FusePdfStatsRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FusePdfStatsRule
   }
+}
 
-  /** Register a bloom-probe function bound to a CONCRETE serialized filter
-    * (the builder closure captures the bytes — the data-dependent analog
-    * of the static entries above; used by Dedup.dedupAgainstSnapshot). */
-  def registerBloomProbe(spark: SparkSession, name: String, bloomBytes: Array[Byte]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, (args: Seq[Expression]) => BloomProbeExpr(args.head, bloomBytes), "built-in")
+/** Session-independent Columns over the native expressions: each wraps the
+  * expression itself, so no function name is looked up and no session is
+  * touched (PartitionInvarianceSpec runs the same query on sibling
+  * sessions). This is how DataFrame code reaches them; SQL goes through
+  * [[NativeRegistry]]. */
+object NativeColumns {
+  import org.apache.spark.sql.GraftExprShim.{column, expression => e}
+
+  def urlCanonicalize(url: Column): Column = column(UrlCanonicalizeExpr(e(url)))
+  def urlHost(url: Column): Column = column(UrlHostExpr(e(url)))
+  def urlDomain(url: Column): Column = column(UrlDomainExpr(e(url)))
+  def bloomProbe(key: Column, bloomBytes: Array[Byte]): Column =
+    column(BloomProbeExpr(e(key), bloomBytes))
+  def md5Mod(s: Column, m: Long): Column = column(Md5ModExpr(e(s), m))
+
+  def vecCosine(a: Column, b: Column): Column = column(VecCosineExpr(e(a), e(b)))
+  def vecQuantDot(a: Column, b: Column): Column = column(VecQuantDotExpr(e(a), e(b)))
+  def vecQuantMilli(emb: Column): Column = column(VecQuantMilliExpr(e(emb)))
+  def vecPqCodes(emb: Column, dim: Int, m: Int, ks: Int): Column =
+    column(VecPqCodesExpr(e(emb), dim, m, ks))
+  def vecPqEncode(emb: Column, dim: Int, m: Int, ks: Int): Column =
+    column(VecPqEncodeExpr(e(emb), dim, m, ks))
+  def vecIvfCell(emb: Column, dim: Int, nlist: Int): Column =
+    column(VecIvfCellExpr(e(emb), dim, nlist))
+  def vecIvfProbes(emb: Column, dim: Int, nlist: Int, nprobe: Int): Column =
+    column(VecIvfProbesExpr(e(emb), dim, nlist, nprobe))
+  def vecAdcLut(emb: Column, dim: Int, m: Int, ks: Int): Column =
+    column(VecAdcLutExpr(e(emb), dim, m, ks))
+  def vecAdcDist(lut: Column, codes: Column, ks: Int): Column =
+    column(VecAdcDistExpr(e(lut), e(codes), ks))
 }

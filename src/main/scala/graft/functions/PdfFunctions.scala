@@ -2,31 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 
-/** SQL-surface registration: thin ScalaUDF wrappers over the core parser so
-  * `spark.sql` users can call the engine directly (SURVEY.md §2.11 — the
-  * function body dominates cost, so codegen'd Expressions would buy nothing
-  * here; these are deliberate UDFs at the boundary, with everything after
-  * extraction staying in built-in codegen'd functions). */
+/** Same as [[NativeRegistry.register]]; kept under this name for `Bench`. */
 object PdfFunctions {
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("pdf_extract_text", (html: Array[Byte]) => {
-      val r = graft.core.Extract.extractText(if (html == null) Array.emptyByteArray else html)
-      if (r.ok) r.cliReport else null
-    })
-    spark.udf.register("pdf_page_count", (html: Array[Byte]) => {
-      val r = graft.core.Extract.extractText(if (html == null) Array.emptyByteArray else html)
-      if (r.ok) r.nPages else -1
-    })
-    spark.udf.register("pdf_char_count", (html: Array[Byte]) => {
-      val r = graft.core.Extract.extractText(if (html == null) Array.emptyByteArray else html)
-      if (r.ok) r.pages.map(_.nChars.toLong).sum else -1L
-    })
-    spark.udf.register("pdf_err_code", (html: Array[Byte]) => {
-      graft.core.Extract.extractText(if (html == null) Array.emptyByteArray else html).errCode
-    })
-    spark.udf.register("simhash64", (text: String) => {
-      graft.ops.Dedup.simhash64(graft.ops.Dedup.shingleStrings(if (text == null) "" else text).toSeq)
-    })
-  }
+  def register(spark: SparkSession): Unit = NativeRegistry.register(spark)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -385,53 +384,6 @@ final case class VecAdcDistExpr(left: Expression, right: Expression, ks: Int) ex
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VecAdcDistExpr =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "vec_adc_dist_native"
-}
-
-/** Session registration for the vector expressions (same temp-function
-  * discipline as [[NativeRegistry]]): ops call `register(df.sparkSession)`
-  * before building a plan that uses `call_function("vec_..._native", ...)`,
-  * so the function resolves on exactly the session that analyzes the plan
-  * (PartitionInvarianceSpec runs the same query on sibling sessions). */
-object VecRegistry {
-  private def intOf(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
-  type Builder = Seq[Expression] => Expression
-  val entries: Seq[(String, ExpressionInfo, Builder)] = Seq(
-    ("vec_cosine_native",
-      new ExpressionInfo(classOf[VecCosineExpr].getName, "vec_cosine_native"),
-      (args: Seq[Expression]) => VecCosineExpr(args(0), args(1))),
-    ("vec_quant_dot_native",
-      new ExpressionInfo(classOf[VecQuantDotExpr].getName, "vec_quant_dot_native"),
-      (args: Seq[Expression]) => VecQuantDotExpr(args(0), args(1))),
-    ("vec_quant_milli_native",
-      new ExpressionInfo(classOf[VecQuantMilliExpr].getName, "vec_quant_milli_native"),
-      (args: Seq[Expression]) => VecQuantMilliExpr(args(0))),
-    ("vec_pq_codes_native",
-      new ExpressionInfo(classOf[VecPqCodesExpr].getName, "vec_pq_codes_native"),
-      (args: Seq[Expression]) => VecPqCodesExpr(args(0), intOf(args(1)), intOf(args(2)), intOf(args(3)))),
-    ("vec_pq_encode_native",
-      new ExpressionInfo(classOf[VecPqEncodeExpr].getName, "vec_pq_encode_native"),
-      (args: Seq[Expression]) => VecPqEncodeExpr(args(0), intOf(args(1)), intOf(args(2)), intOf(args(3)))),
-    ("vec_ivf_cell_native",
-      new ExpressionInfo(classOf[VecIvfCellExpr].getName, "vec_ivf_cell_native"),
-      (args: Seq[Expression]) => VecIvfCellExpr(args(0), intOf(args(1)), intOf(args(2)))),
-    ("vec_ivf_probes_native",
-      new ExpressionInfo(classOf[VecIvfProbesExpr].getName, "vec_ivf_probes_native"),
-      (args: Seq[Expression]) => VecIvfProbesExpr(args(0), intOf(args(1)), intOf(args(2)), intOf(args(3)))),
-    ("vec_adc_lut_native",
-      new ExpressionInfo(classOf[VecAdcLutExpr].getName, "vec_adc_lut_native"),
-      (args: Seq[Expression]) => VecAdcLutExpr(args(0), intOf(args(1)), intOf(args(2)), intOf(args(3)))),
-    ("vec_adc_dist_native",
-      new ExpressionInfo(classOf[VecAdcDistExpr].getName, "vec_adc_dist_native"),
-      (args: Seq[Expression]) => VecAdcDistExpr(args(0), args(1), intOf(args(2)))))
-
-  def register(spark: SparkSession): Unit =
-    entries.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
 }
 
 /** md5_mod_native(s string, m) → bigint: pmod(unsigned-LE-64(md5(s)[0..7]), m)

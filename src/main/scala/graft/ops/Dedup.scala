@@ -161,11 +161,6 @@ object Dedup {
     z ^ (z >>> 31)
   }
 
-  /** MinHash signature: k seeded avalanche hashes, unsigned-min per seed.
-    * Seeds derive from the index — deterministic, no RNG state. */
-  def minhashSignature(shingles: Seq[String], k: Int): Array[Long] =
-    minhashOfHashes(shingles.map(shingleHash).toArray, k)
-
   /** MinHash+LSH near-dup pairs with exact verification.
     * k hashes split into `bands`; docs sharing any band bucket become
     * candidates; candidates are verified with exact shingle-set Jaccard and
@@ -1229,14 +1224,13 @@ object Dedup {
   def dedupAgainstSnapshot(snapshot: DataFrame, fresh: DataFrame,
                            expectedItems: Long = 1000000L,
                            fpp: Double = 0.01): DataFrame = {
-    val spark = snapshot.sparkSession
     val snapFp = snapshot.select(md5(col("text")).as("fp"))
     val bloom = snapFp.stat.bloomFilter("fp", expectedItems, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    graft.functions.NativeRegistry.registerBloomProbe(spark, "bloom_probe_snapshot", bos.toByteArray)
     val freshFp = fresh.select(col("doc_id"), md5(col("text")).as("fp"))
-    val candidates = freshFp.where(expr("bloom_probe_snapshot(fp)"))
+    val candidates = freshFp.where(
+      graft.functions.NativeColumns.bloomProbe(col("fp"), bos.toByteArray))
     val confirmedFp = snapFp.join(broadcast(candidates.select("fp").distinct()), Seq("fp"), "left_semi")
     val confirmed = candidates.join(broadcast(confirmedFp.distinct()), Seq("fp"), "left_semi")
       .select(col("doc_id"), lit(true).as("hit"))

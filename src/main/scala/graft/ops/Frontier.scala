@@ -25,8 +25,6 @@ object Frontier {
     * Priority within a domain: in-degree desc, url asc (deterministic). */
   def nextFrontier(pages: Dataset[PageRow], crawledUrls: DataFrame,
                    robots: DataFrame, agent: String, perDomain: Int): DataFrame = {
-    val spark = pages.sparkSession
-    graft.functions.NativeRegistry.register(spark)
     // nofollow excluded from discovery; boilerplate nav links kept —
     // site chrome is how new sections are found
     val links = LinkGraph.outlinks(pages).toDF().where(!col("nofollow"))
@@ -40,7 +38,7 @@ object Frontier {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("domain")).orderBy(col("n_refs").desc, col("url").asc)
     gated
-      .withColumn("domain", expr("url_domain_native(url)"))
+      .withColumn("domain", graft.functions.NativeColumns.urlDomain(col("url")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= perDomain)
       .select("url", "domain", "n_refs", "rank")

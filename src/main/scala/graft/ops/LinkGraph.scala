@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.html.HtmlLinks
+import graft.functions.NativeColumns
 import graft.spark.PageRow
 
 /** Link-graph construction from raw HTML payloads — the piece that turns a
@@ -44,16 +45,13 @@ object LinkGraph {
     * internal linkage is a real signal, consumers filter. `n_unique_dst`
     * makes the aggregate value-sensitive to every resolved byte of `dst`,
     * which is what lets the oracle pin resolution end-to-end. */
-  def domainEdges(links: Dataset[LinkRow]): DataFrame = {
-    val spark = links.sparkSession
-    graft.functions.NativeRegistry.register(spark)
+  def domainEdges(links: Dataset[LinkRow]): DataFrame =
     links.toDF().where(!col("nofollow") && !col("boilerplate"))
-      .selectExpr("url_domain_native(url) AS src_domain",
-        "url_domain_native(dst) AS dst_domain", "dst")
+      .select(NativeColumns.urlDomain(col("url")).as("src_domain"),
+        NativeColumns.urlDomain(col("dst")).as("dst_domain"), col("dst"))
       .groupBy("src_domain", "dst_domain")
       .agg(count(lit(1)).as("n_links"),
         countDistinct(col("dst")).as("n_unique_dst"))
-  }
 
   /** Deterministic formula corpus: page p lives on site(p%8).example at
     * /a/p{p} and carries three content links whose RAW forms exercise the

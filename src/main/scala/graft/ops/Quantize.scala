@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeColumns
 
 /** Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
   * embedding-compression step every planet-scale vector store ships:
@@ -42,27 +43,23 @@ object Quantize {
                ks: Int = 16): DataFrame = {
     require(dim % m == 0, "dim must split evenly into m subspaces")
     require(ks == 16, "ks fixed at 16: the packed argmin decodes by >> 4")
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     embeddings.select(col("vec_id"),
-      explode(call_function("vec_pq_encode_native",
-        col("embedding"), lit(dim), lit(m), lit(ks))).as("e"))
+      explode(NativeColumns.vecPqEncode(col("embedding"), dim, m, ks)).as("e"))
       .select(col("vec_id"), col("e.sub").as("sub"),
         col("e.code").as("code"), col("e.err").as("err"))
   }
 
   /** Codes array column (m entries) for an embedding column — the
     * serving-table layout. Same argmin as [[pqEncode]], same codegen'd
-    * kernel. Callers must have registered [[graft.functions.VecRegistry]]
-    * on the session that analyzes the plan. */
+    * kernel. */
   private def codesCol(emb: Column, dim: Int, m: Int, ks: Int): Column =
-    call_function("vec_pq_codes_native", emb, lit(dim), lit(m), lit(ks))
+    NativeColumns.vecPqCodes(emb, dim, m, ks)
 
   /** Codes as one array<long> per vector (the serving-table layout: m
     * codes per row instead of m rows). Same argmin as [[pqEncode]]. */
   def pqCodes(embeddings: DataFrame, dim: Int = 64, m: Int = 4,
               ks: Int = 16): DataFrame = {
     require(dim % m == 0 && ks == 16)
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     embeddings.select(col("vec_id"),
       codesCol(col("embedding"), dim, m, ks).as("codes"))
   }
@@ -82,7 +79,6 @@ object Quantize {
     * window). Output: (vec_id, rank, neighbor_id, dist). */
   def adcTopK(embeddings: DataFrame, nQueries: Int, k: Int,
               dim: Int = 64, m: Int = 4): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     val codes = pqCodes(embeddings, dim, m)
     // each query ships its m·ks ADC lookup table instead of the raw
     // embedding: LUT[s][j] = Σ_t (q_t − c(j,t))², so per-candidate work
@@ -90,10 +86,8 @@ object Quantize {
     // integer addition is associative, the regrouped sum is bit-identical
     val queries = embeddings.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"),
-        call_function("vec_adc_lut_native",
-          col("embedding"), lit(dim), lit(m), lit(16)).as("lut"))
-    val dist = call_function("vec_adc_dist_native",
-      col("lut"), col("codes"), lit(16))
+        NativeColumns.vecAdcLut(col("embedding"), dim, m, 16).as("lut"))
+    val dist = NativeColumns.vecAdcDist(col("lut"), col("codes"), 16)
     val scored = codes.crossJoin(broadcast(queries))
       .where(col("vec_id") =!= col("qid")) // self is trivially nearest
       .select(col("qid"), col("vec_id").as("cid"),
@@ -110,7 +104,7 @@ object Quantize {
     * PQ codebook, over the FULL dimension. Packed argmin (dist·nlist+j),
     * deterministic ties. */
   private def cellOf(emb: Column, dim: Int, nlist: Int): Column =
-    call_function("vec_ivf_cell_native", emb, lit(dim), lit(nlist))
+    NativeColumns.vecIvfCell(emb, dim, nlist)
 
   /** IVF + ADC — the composed 10^12-row serve pipeline: a coarse router
     * prunes the scan to each query's `nprobe` nearest cells, and PQ
@@ -126,7 +120,6 @@ object Quantize {
   def ivfAdcTopK(embeddings: DataFrame, nQueries: Int, k: Int,
                  dim: Int = 64, m: Int = 4, nlist: Int = 16,
                  nprobe: Int = 4): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     // codes and routing cell in ONE narrow projection — no second
     // embedding scan, no vec_id self-join; both are codegen'd kernels
     val corpus = embeddings.select(col("vec_id"),
@@ -137,12 +130,9 @@ object Quantize {
     // packed (dist, j) sort as before, in one codegen'd kernel
     val queries = embeddings.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"),
-        call_function("vec_adc_lut_native",
-          col("embedding"), lit(dim), lit(m), lit(16)).as("lut"),
-        explode(call_function("vec_ivf_probes_native",
-          col("embedding"), lit(dim), lit(nlist), lit(nprobe))).as("cell"))
-    val dist = call_function("vec_adc_dist_native",
-      col("lut"), col("codes"), lit(16))
+        NativeColumns.vecAdcLut(col("embedding"), dim, m, 16).as("lut"),
+        explode(NativeColumns.vecIvfProbes(col("embedding"), dim, nlist, nprobe)).as("cell"))
+    val dist = NativeColumns.vecAdcDist(col("lut"), col("codes"), 16)
     val scored = corpus.join(broadcast(queries), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"), (-dist).cast("double").as("sim"))
@@ -175,7 +165,6 @@ object Quantize {
                     threshold: Double = 0.95, maxCell: Int = 10000): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    graft.functions.VecRegistry.register(spark)
     val routed = embeddings
       .select(col("vec_id"), col("embedding"),
         cellOf(col("embedding"), dim, nlist).as("cell"))

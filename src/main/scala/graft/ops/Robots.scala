@@ -173,9 +173,8 @@ object Robots {
       .flatMap { case (d, txt) =>
         rulesFor(if (txt == null) "" else txt, agent).map(r => (d, r.allow, r.path))
       }.toDF("domain", "rule_allow", "rule_path")
-    graft.functions.NativeRegistry.register(spark)
     val withPath = urls
-      .withColumn("u_domain", expr("url_domain_native(url)"))
+      .withColumn("u_domain", graft.functions.NativeColumns.urlDomain(col("url")))
       .withColumn("u_path", regexp_replace(col("url"), "^[a-z]+://[^/]*", ""))
     withPath.join(broadcast(ruleRows),
         col("u_domain") === col("domain") &&

@@ -30,9 +30,7 @@ object Sampling {
     * formatting, 8 substring+concat nodes and a decimal parse per call —
     * this column sits under the draw generators that evaluate it
     * millions of times per query (guide step 4). */
-  def md5Mod(s: Column, m: Long): Column =
-    org.apache.spark.sql.GraftExprShim.column(
-      graft.functions.Md5ModExpr(org.apache.spark.sql.GraftExprShim.expression(s), m))
+  def md5Mod(s: Column, m: Long): Column = graft.functions.NativeColumns.md5Mod(s, m)
 
   /** Priority sampling (Duffield, Lund & Thorup, JACM 2007): a weighted
     * WITHOUT-replacement sample of k documents with unbiased subset-sum

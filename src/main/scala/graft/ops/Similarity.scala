@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Encoder, Encoders}
+import graft.functions.NativeColumns
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]): brute-force cosine top-k as the exactness baseline, and an
@@ -103,14 +104,8 @@ object Similarity {
     * paid ~400 interpreted lambda steps (and three array allocations) per
     * candidate pair; the kernel runs the IDENTICAL sequential double fold
     * (dot and both norms ascending, then dot/(√na·√nb)) in one primitive
-    * loop, so every similarity value is bit-identical (guide step 4).
-    * Callers register [[graft.functions.VecRegistry]] on the session that
-    * analyzes the plan. */
-  def cosineCol: Column = {
-    try graft.functions.VecRegistry.register(SparkSession.active)
-    catch { case _: Throwable => () }
-    call_function("vec_cosine_native", col("qe"), col("ce"))
-  }
+    * loop, so every similarity value is bit-identical (guide step 4). */
+  def cosineCol: Column = NativeColumns.vecCosine(col("qe"), col("ce"))
 
   /** Brute-force cosine top-k: queries (vec_id < nQueries) × corpus. The
     * query side is broadcast; ties break by neighbor id. Output:
@@ -129,7 +124,6 @@ object Similarity {
     * identically — apply the ceiling after the exact re-rank. */
   def hardNegatives(embeddings: DataFrame, nQueries: Int, k: Int,
                     simCeiling: Double = 0.98): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("embedding"))
     val replicas = base.where(col("vec_id") < nQueries)
       .select((col("vec_id") + lit(100000L)).as("vec_id"),
@@ -146,7 +140,6 @@ object Similarity {
   }
 
   def bruteForceTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     val queries = embeddings.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val corpus = embeddings.select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -176,7 +169,6 @@ object Similarity {
     * [[bruteForceTopK]]; the serving path stays IVF/LSH. */
   def filteredTopK(embeddings: DataFrame, nQueries: Int, k: Int,
                    nTags: Int = 4, overfetch: Int = 3): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("embedding"))
     val queries = base.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -221,7 +213,6 @@ object Similarity {
     * serving path stays IVF/PQ). */
   def truncationRecall(embeddings: DataFrame, nQueries: Int, k: Int,
                        dims: Int): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("embedding"))
     val queries = base.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -248,11 +239,9 @@ object Similarity {
     * quantized vectors are EXACT int64 (|dot| ≤ dim·10⁶ ≪ 2⁵³, so they
     * survive the Double leg of [[TopKAgg]] bit-exactly and DuckDB replays
     * them), the trick that makes margin/power-iteration ops oracle-able. */
-  private def quantCol(c: Column): Column =
-    call_function("vec_quant_milli_native", c)
+  private def quantCol(c: Column): Column = NativeColumns.vecQuantMilli(c)
 
-  private def quantDotCol: Column =
-    call_function("vec_quant_dot_native", col("qe"), col("ce"))
+  private def quantDotCol: Column = NativeColumns.vecQuantDot(col("qe"), col("ce"))
 
   /** Margin-criterion bitext mining (Artetxe & Schwenk 2019, the CCMatrix/
     * WikiMatrix parallel-corpus miner): for each source-side document, its
@@ -273,8 +262,6 @@ object Similarity {
     * throughout); margins only need the candidates' exact dots. */
   def bitextMargin(queriesA: DataFrame, corpusA: DataFrame, corpusB: DataFrame,
                    k: Int): DataFrame = {
-    val spark = queriesA.sparkSession
-    graft.functions.VecRegistry.register(spark)
     val topk = udaf(new TopKAgg(2 * k))
     val qa = queriesA.select(col("vec_id").as("qid"), quantCol(col("embedding")).as("qe"))
     val cb = corpusB.select(col("vec_id").as("cid"), quantCol(col("embedding")).as("ce"))
@@ -557,7 +544,6 @@ object Similarity {
   def lshTopK(embeddings: DataFrame, nQueries: Int, k: Int, bits: Int = 12,
               probes: Int = 24): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.VecRegistry.register(spark)
     import spark.implicits._
     val corpusB = embeddings.select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])]
@@ -596,7 +582,6 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int, nlist: Int = 16,
               nprobe: Int = 4, iters: Int = 3): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.VecRegistry.register(spark)
     import spark.implicits._
     val corpus = embeddings.select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])]
@@ -667,29 +652,6 @@ object Similarity {
     out
   }
 
-  /** Value-level recall gate for the LSH-ANN scale path: per query, how many
-    * of the exact brute-force top-k neighbors the multi-probe LSH search
-    * recovered, and whether that clears `floorHits`. The output is
-    * engine-independent — the DuckDB oracle asserts every query row reports
-    * `recall_floor_met = true` — so the "recall < 1 by design" path still
-    * carries a hash-checked correctness row instead of a rows-only count
-    * (VERDICT r3 next-round #2). */
-  def lshRecallFloor(embeddings: DataFrame, nQueries: Int, k: Int,
-                     floorHits: Int, bits: Int = 12, probes: Int = 24): DataFrame = {
-    val truth = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("vec_id"), col("neighbor_id"))
-    val approx = lshTopK(embeddings, nQueries, k, bits, probes)
-      .select(col("vec_id"), col("neighbor_id"))
-    val hits = truth.join(approx, Seq("vec_id", "neighbor_id"), "left_semi")
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("n_hits"))
-    // left join from the full query-id set: a query with zero recovered
-    // neighbors must still appear (as a failing row), not vanish
-    embeddings.where(col("vec_id") < nQueries).select(col("vec_id"))
-      .join(hits, Seq("vec_id"), "left")
-      .select(col("vec_id"), lit(k.toLong).as("k"),
-        (coalesce(col("n_hits"), lit(0L)) >= floorHits).as("recall_floor_met"))
-  }
-
   /** Deterministic recall gate on PLANTED ground truth: the corpus is the
     * base set plus a ×1.1-scaled replica of each query vector (cosine 1.0 —
     * provably the brute-force top-1; positive scaling preserves every
@@ -733,7 +695,6 @@ object Similarity {
                             maxBucket: Int = 10000): DataFrame = {
     require(bands * bits <= 64, "bands*bits must fit one 64-bit signature")
     val spark = embeddings.sparkSession
-    graft.functions.VecRegistry.register(spark)
     import spark.implicits._
     val mask = (1L << bits) - 1
     val vecs = embeddings.select(col("vec_id"), col("embedding"))
@@ -784,7 +745,6 @@ object Similarity {
     * so the flag is exact. */
   def semanticDecontaminate(embeddings: DataFrame, nEval: Int = 20,
                             threshold: Double = 0.8): DataFrame = {
-    graft.functions.VecRegistry.register(embeddings.sparkSession)
     val evals = embeddings.where(col("vec_id") < nEval)
       .select(col("vec_id").as("eval_id"), col("embedding").as("qe"))
     val corpus = embeddings.where(col("vec_id") >= nEval)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Crawl snapshot diffing — classify every url across two crawl rounds as
@@ -29,12 +29,9 @@ object SnapshotDiff {
           .otherwise("changed").as("status"))
 
   /** Per-domain change rollup over a diff result. */
-  def domainSummary(diffed: DataFrame): DataFrame = {
-    val spark = diffed.sparkSession
-    graft.functions.NativeRegistry.register(spark)
-    diffed.withColumn("domain", expr("url_domain_native(url)"))
+  def domainSummary(diffed: DataFrame): DataFrame =
+    diffed.withColumn("domain", graft.functions.NativeColumns.urlDomain(col("url")))
       .groupBy("domain", "status").agg(count(lit(1)).as("n"))
-  }
 
   /** WARC revisit-record planning (the Common-Crawl storage dedup:
     * a recrawl whose payload digest matches the prior capture of the same

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeColumns
 
 /** URL operators for a Common-Crawl-style corpus: canonicalization,
   * registered-domain extraction, canonical-URL dedup, and per-domain
@@ -138,15 +139,9 @@ object UrlOps {
   /** doc_id → canonical url, host, registered domain. Uses the native
     * expression so the whole projection stays inside whole-stage codegen. */
   def normalize(docsWithUrl: DataFrame): DataFrame = {
-    val spark = docsWithUrl.sparkSession
-    graft.functions.NativeRegistry.register(spark)
-    docsWithUrl.createOrReplaceTempView("urls_raw_v")
-    spark.sql(
-      """SELECT doc_id, url,
-        |  url_canonicalize_native(url) AS url_canon,
-        |  url_host_native(url_canonicalize_native(url)) AS host,
-        |  url_domain_native(url_canonicalize_native(url)) AS domain
-        |FROM urls_raw_v""".stripMargin)
+    val canon = NativeColumns.urlCanonicalize(col("url"))
+    docsWithUrl.select(col("doc_id"), col("url"), canon.as("url_canon"),
+      NativeColumns.urlHost(canon).as("host"), NativeColumns.urlDomain(canon).as("domain"))
   }
 
   /** Canonical-URL dedup: first-occurrence (min doc_id) wins per canonical

@@ -1,16 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Emits `explain("formatted")` for the flagship plans (PLANS.md source).
   * Diagnostic main, not part of the library surface. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     def show(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {

@@ -1,19 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query runner for oracle authoring:
   * `sbt "runMain graft.tools.RunQuery <name> [<name>…]"` — prints each
   * query's result with truncate off so VALUES oracles can be pinned. */
 object RunQuery {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-runquery")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(8, "graft-runquery")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     args.foreach { name =>
       println(s"=== $name")

@@ -6,14 +6,6 @@ import org.apache.spark.sql.SparkSession
   * allocation-heavy work) to separate machine-level scaling limits from
   * engine-level ones. Not part of the library surface. */
 object ScalingProbe {
-  def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def cpuWork(spark: SparkSession, tasks: Int): Double = {
     import spark.implicits._
     val t0 = System.nanoTime()
@@ -48,7 +40,7 @@ object ScalingProbe {
 
   def main(args: Array[String]): Unit = {
     def at(level: Int, f: (SparkSession, Int) => Double): Double = {
-      val s = session(level)
+      val s = graft.LocalSession(level)
       f(s, level) // warm
       val t = f(s, level * 4) // 4 waves... no: tasks = level*4 gives 4 full waves
       s.stop(); SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()

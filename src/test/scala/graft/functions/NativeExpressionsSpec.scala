@@ -13,7 +13,6 @@ class NativeExpressionsSpec extends AnyFunSuite {
   lazy val spark = SparkSessionFixture.spark
 
   test("native expressions match the UDF results on the fixture corpus") {
-    PdfFunctions.register(spark)
     NativeRegistry.register(spark)
     PagesTable.ofFixtures(spark, Seq("text.pdf", "multipage.pdf", "empty.pdf"))
       .toDF().createOrReplaceTempView("pages_native_v")

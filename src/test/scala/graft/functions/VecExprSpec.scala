@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSessionFixture
 
 /** Equivalence guard for the round-6 codegen'd vector kernels: each
-  * vec_*_native expression must be BIT-IDENTICAL to the higher-order-
+  * vector expression must be BIT-IDENTICAL to the higher-order-
   * function formulation it replaced (the oracle SQL still replays the HOF
   * math, so any divergence is a correctness break, not a perf nit). The
   * old expressions are reproduced verbatim here and compared value-for-
@@ -19,7 +19,6 @@ class VecExprSpec extends AnyFunSuite {
     .select(col("vec_id"), col("embedding"))
 
   test("vec_cosine_native matches the aggregate(zip_with(...)) fold bit-for-bit") {
-    VecRegistry.register(spark)
     val oldCos = expr("""
       aggregate(zip_with(qe, ce, (x, y) -> cast(x as double) * cast(y as double)), 0D, (s, v) -> s + v)
       / (sqrt(aggregate(qe, 0D, (s, v) -> s + cast(v as double) * cast(v as double)))
@@ -30,33 +29,31 @@ class VecExprSpec extends AnyFunSuite {
       .crossJoin(emb.where(col("vec_id") >= 40 && col("vec_id") < 80)
         .select(col("vec_id").as("cid"), col("embedding").as("ce")))
     val diff = pairs
-      .select(oldCos.as("o"), call_function("vec_cosine_native", col("qe"), col("ce")).as("n"))
+      .select(oldCos.as("o"), NativeColumns.vecCosine(col("qe"), col("ce")).as("n"))
       .where(col("o") =!= col("n")) // bit-exact: any ULP difference fails
       .count()
     assert(diff == 0L, s"$diff cosine values differ from the HOF fold")
   }
 
   test("vec_quant_milli / vec_quant_dot match the transform/zip_with forms") {
-    VecRegistry.register(spark)
     val oldQuant = transform(col("embedding"),
       x => floor(x.cast("double") * lit(1000d)).cast("long"))
     val qdiff = emb.select(oldQuant.as("o"),
-        call_function("vec_quant_milli_native", col("embedding")).as("n"))
+        NativeColumns.vecQuantMilli(col("embedding")).as("n"))
       .where(not(col("o") <=> col("n"))).count()
     assert(qdiff == 0L, "quantMilli differs")
     val pairs = emb.where(col("vec_id") < 30)
-      .select(call_function("vec_quant_milli_native", col("embedding")).as("qe"))
+      .select(NativeColumns.vecQuantMilli(col("embedding")).as("qe"))
       .crossJoin(emb.where(col("vec_id") >= 30 && col("vec_id") < 60)
-        .select(call_function("vec_quant_milli_native", col("embedding")).as("ce")))
+        .select(NativeColumns.vecQuantMilli(col("embedding")).as("ce")))
     val oldDot = expr("aggregate(zip_with(qe, ce, (x, y) -> x * y), CAST(0 AS BIGINT), (s, v) -> s + v)")
     val ddiff = pairs.select(oldDot.as("o"),
-        call_function("vec_quant_dot_native", col("qe"), col("ce")).as("n"))
+        NativeColumns.vecQuantDot(col("qe"), col("ce")).as("n"))
       .where(col("o") =!= col("n")).count()
     assert(ddiff == 0L, "quantDot differs")
   }
 
   test("vec_pq_encode / vec_pq_codes match the nested transform/aggregate argmin") {
-    VecRegistry.register(spark)
     val (dim, m, ks) = (64, 4, 16)
     val d0 = dim / m
     val subs = transform(sequence(lit(0), lit(m - 1)), s => {
@@ -76,20 +73,17 @@ class VecExprSpec extends AnyFunSuite {
         shiftright(packed, 4).as("err"))
     })
     val diff = emb.select(subs.as("o"),
-        call_function("vec_pq_encode_native", col("embedding"),
-          lit(dim), lit(m), lit(ks)).as("n"))
+        NativeColumns.vecPqEncode(col("embedding"), dim, m, ks).as("n"))
       .where(not(col("o") <=> col("n"))).count()
     assert(diff == 0L, "pqEncode structs differ")
     val oldCodes = transform(subs, e => e.getField("code"))
     val cdiff = emb.select(oldCodes.as("o"),
-        call_function("vec_pq_codes_native", col("embedding"),
-          lit(dim), lit(m), lit(ks)).as("n"))
+        NativeColumns.vecPqCodes(col("embedding"), dim, m, ks).as("n"))
       .where(not(col("o") <=> col("n"))).count()
     assert(cdiff == 0L, "pqCodes differ")
   }
 
   test("vec_ivf_cell / vec_ivf_probes match the packed router argmin; LUT dist matches the direct sum") {
-    VecRegistry.register(spark)
     val (dim, m, ks, nlist, nprobe) = (64, 4, 16, 16, 4)
     val d0 = dim / m
     val packedArr = transform(sequence(lit(0), lit(nlist - 1)), j => {
@@ -105,12 +99,11 @@ class VecExprSpec extends AnyFunSuite {
     val oldProbes = transform(slice(array_sort(packedArr), 1, nprobe),
       p => pmod(p, lit(nlist.toLong)))
     val cdiff = emb.select(oldCell.as("o"),
-        call_function("vec_ivf_cell_native", col("embedding"), lit(dim), lit(nlist)).as("n"))
+        NativeColumns.vecIvfCell(col("embedding"), dim, nlist).as("n"))
       .where(col("o") =!= col("n")).count()
     assert(cdiff == 0L, "ivfCell differs")
     val pdiff = emb.select(oldProbes.as("o"),
-        call_function("vec_ivf_probes_native", col("embedding"),
-          lit(dim), lit(nlist), lit(nprobe)).as("n"))
+        NativeColumns.vecIvfProbes(col("embedding"), dim, nlist, nprobe).as("n"))
       .where(not(col("o") <=> col("n"))).count()
     assert(pdiff == 0L, "ivfProbes differ")
     // LUT-factorized ADC distance vs the direct Σ_s Σ_t integer sum
@@ -125,13 +118,11 @@ class VecExprSpec extends AnyFunSuite {
         }))
     val pairs = emb.where(col("vec_id") < 20)
       .select(col("embedding").as("qe"),
-        call_function("vec_adc_lut_native", col("embedding"),
-          lit(dim), lit(m), lit(ks)).as("lut"))
+        NativeColumns.vecAdcLut(col("embedding"), dim, m, ks).as("lut"))
       .crossJoin(emb.where(col("vec_id") >= 20 && col("vec_id") < 60)
-        .select(call_function("vec_pq_codes_native", col("embedding"),
-          lit(dim), lit(m), lit(ks)).as("codes")))
+        .select(NativeColumns.vecPqCodes(col("embedding"), dim, m, ks).as("codes")))
     val ddiff = pairs.select(oldDist.as("o"),
-        call_function("vec_adc_dist_native", col("lut"), col("codes"), lit(ks)).as("n"))
+        NativeColumns.vecAdcDist(col("lut"), col("codes"), ks).as("n"))
       .where(col("o") =!= col("n")).count()
     assert(ddiff == 0L, "ADC LUT distance differs from the direct sum")
   }

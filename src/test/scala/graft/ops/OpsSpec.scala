@@ -249,13 +249,14 @@ class OpsSpec extends AnyFunSuite {
     assert(r.take(50).forall(!_._2))
     assert(r.drop(50).forall(_._2))
     // the probe is a native codegen'd predicate, not a UDF
-    graft.functions.NativeRegistry.registerBloomProbe(spark, "bloom_probe_t", {
+    val bloomBytes = {
       val b = snapshot.select(md5(col("text")).as("fp")).stat.bloomFilter("fp", 1000L, 0.01)
       val bos = new java.io.ByteArrayOutputStream(); b.writeTo(bos); bos.toByteArray
-    })
+    }
     // repartition blocks ConvertToLocalRelation from pre-evaluating the
     // projection at plan time — keeps the probe visible in the physical plan
-    val df = fresh.repartition(2).select(expr("bloom_probe_t(md5(text))").as("hit"))
+    val df = fresh.repartition(2)
+      .select(graft.functions.NativeColumns.bloomProbe(md5(col("text")), bloomBytes).as("hit"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("bloom_probe") && !plan.contains("UDF"), plan.take(400))
     // filter semantics directly: every snapshot body hits, most fresh don't
