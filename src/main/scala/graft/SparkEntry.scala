@@ -22,12 +22,6 @@ object SparkEntry {
   private def docs(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Flagship: full extraction pipeline over a synthesized skewed corpus. */
-  def entry(spark: SparkSession): DataFrame = {
-    val pages = PagesTable.synthesize(spark, 200, 8)
-    ExtractPipeline.extract(pages).toDF()
-  }
-
   /** `fixture://name` → `name` (PagesTable.ofFixtures url scheme). */
   private def fixtureCol: Column =
     regexp_replace(col("url"), "^fixture://", "").as("fixture")
@@ -1429,7 +1423,7 @@ object SparkEntry {
     // ---- metrics / lineage (north-star requirement) ---------------------
     "extract_metrics" -> ((s, _) => {
       val pages = PagesTable.synthesize(s, 130, 8)
-      val ext = ExtractPipeline.extract(pages, numPartitions = 8)
+      val ext = ExtractPipeline.extract(pages)
       ExtractPipeline.metrics(ext, "verify")
         .agg(sum(col("docs")).as("docs"), sum(col("pages")).as("pages"),
           sum(col("chars")).as("chars"), sum(col("decode_failures")).as("decode_failures"),

@@ -1393,18 +1393,10 @@ object Dedup {
     // runs eager work (persist + checkpoint materialization); build them
     // on concurrent driver threads so their jobs overlap (guide §2.6) —
     // each detector's internal shape and its output are unchanged
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fMh = Future(minhashLsh(corpus).select(col("a"), col("b"))
-      .withColumn("f1", lit(1L)))
-    val fSh = Future(simhashPairs(corpus).select(col("a"), col("b"))
-      .withColumn("f2", lit(2L)))
-    val fJc = Future(jaccardBlocked(corpus).select(col("a"), col("b"))
-      .withColumn("f4", lit(4L)))
-    val mh = Await.result(fMh, Duration.Inf)
-    val sh = Await.result(fSh, Duration.Inf)
-    val jc = Await.result(fJc, Duration.Inf)
+    val Seq(mh, sh, jc) = Overlap.all("venn")(
+      () => minhashLsh(corpus).select(col("a"), col("b")).withColumn("f1", lit(1L)),
+      () => simhashPairs(corpus).select(col("a"), col("b")).withColumn("f2", lit(2L)),
+      () => jaccardBlocked(corpus).select(col("a"), col("b")).withColumn("f4", lit(4L)))
     mh.join(sh, Seq("a", "b"), "full_outer")
       .join(jc, Seq("a", "b"), "full_outer")
       .select((coalesce(col("f1"), lit(0L)) + coalesce(col("f2"), lit(0L)) +

@@ -1075,21 +1075,11 @@ object Graph {
     // the forward and backward BFS pairs are independent of each other —
     // run each pair on concurrent driver threads (guide §2.6); each
     // reachFrom is unchanged internally
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fFwd = Future(reachFrom(core, e))
-    val fBwd = Future(reachFrom(core, rev))
-    val fwd = Await.result(fFwd, Duration.Inf)
-    val bwd = Await.result(fBwd, Duration.Inf)
-    val fIn = Future(bwd.join(core, Seq("id"), "left_anti").localCheckpoint(true))
-    val fOut = Future(fwd.join(core, Seq("id"), "left_anti").localCheckpoint(true))
-    val inSet = Await.result(fIn, Duration.Inf)
-    val outSet = Await.result(fOut, Duration.Inf)
-    val fF2 = Future(reachFrom(inSet, e))
-    val fB2 = Future(reachFrom(outSet, rev))
-    val f2 = Await.result(fF2, Duration.Inf)
-    val b2 = Await.result(fB2, Duration.Inf)
+    val Seq(fwd, bwd) = Overlap.all("bowtie")(() => reachFrom(core, e), () => reachFrom(core, rev))
+    val Seq(inSet, outSet) = Overlap.all("bowtie")(
+      () => bwd.join(core, Seq("id"), "left_anti").localCheckpoint(true),
+      () => fwd.join(core, Seq("id"), "left_anti").localCheckpoint(true))
+    val Seq(f2, b2) = Overlap.all("bowtie")(() => reachFrom(inSet, e), () => reachFrom(outSet, rev))
     def flag(df: DataFrame, name: String): DataFrame =
       df.select(col("id"), lit(true).as(name))
     nodes.select(col("id"))

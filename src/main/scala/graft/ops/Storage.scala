@@ -48,10 +48,7 @@ object Storage {
     // concurrent driver threads (guide §2.6: overlap independent jobs so
     // one layout's straggling tail back-fills with the next layout's
     // tasks); results assemble in the declared layout order either way
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val evaluated = layouts.map { case (name, key) => Future {
+    val evaluated = Overlap.all("layouts")(layouts.map { case (name, key) => () =>
       val filed = rows.select(col("domain_idx"), col("ts_bucket"), key.as("k"))
         .withColumn("file_id",
           ((row_number().over(Window.orderBy(col("k"), col("domain_idx"),
@@ -85,14 +82,13 @@ object Storage {
       val dPm = avg.getLong(0) * 1000L / (avg.getLong(1) * nFiles)
       val tPm = avg.getLong(2) * 1000L / (avg.getLong(3) * nFiles)
       (name, nFiles, dPm, tPm)
-    } }
-    evaluated.map(Await.result(_, Duration.Inf))
-      .foldLeft(Option.empty[DataFrame]) { case (acc, row) =>
-        import rows.sparkSession.implicits._
-        val df = Seq(row).toDF("layout", "n_files",
-          "domain_scan_pm", "ts_scan_pm")
-        Some(acc.fold(df)(_ unionByName df))
-      }.get
+    }: _*)
+    evaluated.foldLeft(Option.empty[DataFrame]) { case (acc, row) =>
+      import rows.sparkSession.implicits._
+      val df = Seq(row).toDF("layout", "n_files",
+        "domain_scan_pm", "ts_scan_pm")
+      Some(acc.fold(df)(_ unionByName df))
+    }.get
   }
 
   /** Partition-skew planning for candidate partition keys: per-key row

@@ -609,7 +609,7 @@ object TextStats {
     // token list), same distinct-per-doc set feeding the same rollup.
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val toks = t.split(" ", -1).filter(_.nonEmpty)
+        val toks = if (t == null) Array.empty[String] else t.split(" ", -1).filter(_.nonEmpty)
         if (toks.length < n) Iterator.empty
         else {
           val seen = new java.util.LinkedHashSet[String]()
@@ -1118,7 +1118,8 @@ object TextStats {
     val toks = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
         var pos = 0
-        t.split(" ", -1).iterator.filter(_.nonEmpty).map { w =>
+        val words = if (t == null) Iterator.empty else t.split(" ", -1).iterator
+        words.filter(_.nonEmpty).map { w =>
           val r = (id, pos, w); pos += 1; r
         }
       }
@@ -1240,7 +1241,7 @@ object TextStats {
     val terms = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
         val counts = new java.util.LinkedHashMap[String, Long]()
-        t.split(" ", -1).foreach { w =>
+        if (t != null) t.split(" ", -1).foreach { w =>
           if (w.nonEmpty) counts.merge(w, 1L, (a, b) => a + b)
         }
         val out = new scala.collection.mutable.ArrayBuffer[(Long, String, Long)](counts.size)

@@ -33,10 +33,12 @@ final case class ExtractedDoc(
   * (open-once per worker, heavy work partition-local, ship only small
   * results; render.py:372-383 + changelog.md:447-457, SURVEY.md §3.2).
   *
-  * Scale design (SURVEY.md §4.2):
-  *  - salted repartition by xxhash64(url, salt) spreads size-skewed docs
-  *    uniformly across tasks (a million 1-pagers vs 5000-page monsters);
-  *  - AQE (enabled in session conf) re-splits residual skew;
+  * Scale design (SURVEY.md §4.2): two placement policies, chosen by the
+  * one thing the code can observe per row, the payload size:
+  *  - [[extract]] parses every row where the scan produced it (no Exchange);
+  *  - [[extractSizeRouted]] additionally spreads the heavy tail by
+  *    xxhash64(url) so monster documents stop gating their input partition,
+  *    and AQE (Spark's default) re-splits residual skew;
   *  - a max-payload guard turns pathological rows into error statuses
   *    instead of executor OOMs;
   *  - per-partition metrics ride on the rows (partition_id column) and
@@ -46,64 +48,47 @@ object ExtractPipeline {
 
   val MaxHtmlBytes: Int = 64 << 20 // 64 MiB per-row guard
 
+  /** The per-row payload guard of every entry point: why a payload must not
+    * be parsed, or None when it may be. */
+  private def rejected(html: Array[Byte]): Option[String] =
+    if (html == null) Some("null payload")
+    else if (html.length > MaxHtmlBytes) Some("payload too large")
+    else None
+
   /** Narrow (shuffle-free) extraction: parse rows where the scan produced
     * them. This is the default at scale — repartitioning would shuffle the
     * full binary payload, the exact anti-pattern the reference documents
     * ("bitmap transfer … outweighed parallelization", changelog.md:447-453).
     * Input-split sizing (spark.sql.files.maxPartitionBytes) + AQE already
-    * bound per-task work for file-backed scans; use [[extractSalted]] only
-    * when upstream partitioning is pathologically skewed. */
-  def extract(pages: Dataset[PageRow], password: String = "",
-              numPartitions: Int = 0): Dataset[ExtractedDoc] = {
-    // (no pages.rdd probe here — materializing the RDD lineage just to
-    // compare partition counts costs a full plan translation per call)
-    val repartitioned =
-      if (numPartitions > 0) pages.repartition(numPartitions, xxhash64(col("url")))
-      else pages
-    mapParse(repartitioned, password, "narrow")
-  }
-
-  /** Salted repartition variant for size-skewed upstreams (north-star
-    * "salted repartitioning" requirement): spreads documents uniformly by
-    * xxhash64(url, salt) at the cost of shuffling payloads once. */
-  def extractSalted(pages: Dataset[PageRow], password: String = "", salt: Int = 0,
-                    numPartitions: Int = 0): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    mapParse(pages.repartition(parts, xxhash64(col("url"), lit(salt))), password, "salted")
-  }
+    * bound per-task work for file-backed scans; use [[extractSizeRouted]]
+    * when a few huge payloads cluster in one input partition. */
+  def extract(pages: Dataset[PageRow], password: String = ""): Dataset[ExtractedDoc] =
+    mapParse(pages, password, "narrow")
 
   /** Size-routed extraction — the skew answer that doesn't pay for the
-    * common case: rows with payloads ≤ `heavyBytes` are parsed narrow
-    * (shuffle-free, where the scan produced them); only the heavy tail is
-    * salted-repartitioned so monster documents spread one-per-task instead
-    * of gating whichever input partition they clustered in. The shuffle
-    * then carries only the rare big payloads (BenchSkew: 32 monsters ≈
-    * 200 MB) instead of the whole corpus — full-corpus salting measurably
-    * LOSES wall time at realistic mixes because shipping every payload
-    * costs more than the straggler it removes (the reference's own
+    * common case: rows with payloads ≤ `heavyBytes` (and null payloads,
+    * which fail the guard without parsing) are parsed narrow; only the
+    * heavy tail is hash-repartitioned by xxhash64(url) into
+    * `spark.sql.shuffle.partitions` tasks, so monster documents spread
+    * one-per-task instead of gating whichever input partition they
+    * clustered in. The shuffle carries only the rare big payloads instead
+    * of the whole corpus: full-corpus salting measurably LOSES wall time at
+    * realistic mixes because shipping every payload costs more than the
+    * straggler it removes (BENCH_skew.json; the reference's own
     * parallel-processing lesson, changelog.md:447-453). Input is scanned
     * twice (once per branch) but the filter is a cheap length check
     * against a column the branch reads anyway, and each row is PARSED
     * exactly once. */
   def extractSizeRouted(pages: Dataset[PageRow], password: String = "",
-                        heavyBytes: Int = 1 << 20, numPartitions: Int = 0): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    import spark.implicits._
-    val small = pages.where(length(col("html")) <= heavyBytes)
-    val heavy = pages.where(length(col("html")) > heavyBytes)
-      .repartition(parts, xxhash64(col("url")))
+                        heavyBytes: Int = 1 << 20): Dataset[ExtractedDoc] = {
+    val size = length(col("html"))
+    val small = pages.where(col("html").isNull || size <= heavyBytes)
+    val heavy = pages.where(size > heavyBytes)
+      .repartition(pages.sparkSession.sessionState.conf.numShufflePartitions, xxhash64(col("url")))
     // Lineage key: (branch, partition_id). The explicit branch column makes
-    // the key collision-proof at ANY partition count (the old fixed
-    // +1000000 offset on the heavy branch collided once the light branch
-    // exceeded 10^6 partitions, which a 100-TB scan can reach; ADVICE r4 /
-    // VERDICT r4 wrong #5). partition_id itself is the TASK's id, and since
-    // both branches execute inside the one union stage Spark numbers their
-    // task partitions disjointly anyway — the branch column adds the
-    // which-path-parsed-this-row fact the id arithmetic was abusing.
+    // the key collision-proof at ANY partition count; partition_id itself
+    // is the TASK's id, and since both branches execute inside the one
+    // union stage Spark numbers their task partitions disjointly anyway.
     mapParse(small, password, "narrow")
       .unionByName(mapParse(heavy, password, "salted"))
   }
@@ -116,10 +101,10 @@ object ExtractPipeline {
       val pid = org.apache.spark.TaskContext.getPartitionId()
       it.map { row =>
         val t0 = System.nanoTime()
-        val res =
-          if (row.html == null) graft.core.DocExtract(ok = false, graft.core.ErrCodes.Format, "null payload", 0, Vector.empty)
-          else if (row.html.length > MaxHtmlBytes) graft.core.DocExtract(ok = false, graft.core.ErrCodes.Format, "payload too large", 0, Vector.empty)
-          else Extract.extractAny(row.html, password)
+        val res = rejected(row.html) match {
+          case Some(why) => graft.core.DocExtract(ok = false, graft.core.ErrCodes.Format, why, 0, Vector.empty)
+          case None => Extract.extractAny(row.html, password)
+        }
         val ms = (System.nanoTime() - t0) / 1000000L
         ExtractedDoc(
           url = row.url,
@@ -139,18 +124,12 @@ object ExtractPipeline {
     * extracted text and span/bbox structs"): one row per (url, page) with
     * the page text and its line rects in PDF canvas units. */
   def extractSpans(pages: Dataset[PageRow], password: String = ""): Dataset[PageSpans] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.flatMap { row =>
-      if (row.html == null || row.html.length > MaxHtmlBytes) Iterator.empty
-      else graft.core.PdfDocument.load(row.html, password) match {
-        case Left(_) => Iterator.empty
-        case Right(doc) =>
-          doc.pages.iterator.zipWithIndex.map { case (p, i) =>
-            val tp = p.textPage
-            val rects = tp.rects().map(r => SpanRect(r.left, r.bottom, r.right, r.top))
-            PageSpans(row.url, i, tp.text, tp.countChars.toLong, rects)
-          }
+    import pages.sparkSession.implicits._
+    mapDocs(pages, password) { (url, doc) =>
+      doc.pages.iterator.zipWithIndex.map { case (p, i) =>
+        val tp = p.textPage
+        val rects = tp.rects().map(r => SpanRect(r.left, r.bottom, r.right, r.top))
+        PageSpans(url, i, tp.text, tp.countChars.toLong, rects)
       }
     }
   }
@@ -168,8 +147,7 @@ object ExtractPipeline {
     import spark.implicits._
     pages.mapPartitions { it =>
       it.map { row =>
-        if (row.html == null || row.html.length > MaxHtmlBytes)
-          DocTable.error(row.url, graft.core.ErrCodes.Format)
+        if (rejected(row.html).isDefined) DocTable.error(row.url, graft.core.ErrCodes.Format)
         else graft.core.PdfDocument.load(row.html, password) match {
           case Left(err) => DocTable.error(row.url, err.code)
           case Right(doc) =>
@@ -188,7 +166,7 @@ object ExtractPipeline {
       f: (String, graft.core.PdfDocument) => IterableOnce[T]): Dataset[T] =
     pages.mapPartitions { it =>
       it.flatMap { row =>
-        if (row.html == null || row.html.length > MaxHtmlBytes) Iterator.empty
+        if (rejected(row.html).isDefined) Iterator.empty
         else graft.core.PdfDocument.load(row.html, password) match {
           case Left(_) => Iterator.empty
           case Right(doc) => f(row.url, doc).iterator

@@ -19,8 +19,6 @@ object StreamingExtract {
       .option("maxFilesPerTrigger", "16")
       .parquet(pagesDir)
       .as[PageRow]
-    // numPartitions is left 0 so extract() stays fully narrow (streaming
-    // Datasets reject rdd-based introspection and repartitioning anyway)
     val extracted = ExtractPipeline.extract(pages, password)
     val q = extracted.writeStream
       .format("parquet")

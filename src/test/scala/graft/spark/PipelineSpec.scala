@@ -29,14 +29,6 @@ class PipelineSpec extends AnyFunSuite {
     } finally ext.unpersist()
   }
 
-  test("salted extraction produces identical results to narrow plan") {
-    import spark.implicits._
-    val pages = PagesTable.synthesize(spark, 60, 4)
-    val a = ExtractPipeline.extract(pages).select("url", "n_chars").as[(String, Long)].collect().toMap
-    val b = ExtractPipeline.extractSalted(pages, salt = 3).select("url", "n_chars").as[(String, Long)].collect().toMap
-    assert(a == b)
-  }
-
   test("size-routed extraction: identical results, heavy rows routed to shuffled branch") {
     import spark.implicits._
     val pages = PagesTable.synthesize(spark, 60, 4) // includes 233 KB multipage.pdf heavies
