@@ -33,6 +33,31 @@ object VecFns {
   @inline private def q1000(x: Float): Long =
     math.floor(x.toDouble * 1000d).toLong
 
+  /** Null flags of `a`'s first n elements in groups of w (flag g: an
+    * element in [g·w, g·w + w) is null), or null when no element is null. */
+  private def nullGroups(a: ArrayData, n: Int, w: Int): Array[Boolean] = {
+    var out: Array[Boolean] = null
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) {
+        if (out == null) out = new Array[Boolean](n / w)
+        out(i / w) = true
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** True when one of `a`'s first n elements is null. */
+  def hasNull(a: ArrayData, n: Int): Boolean = nullGroups(a, n, n) != null
+  def hasNull(a: ArrayData): Boolean = hasNull(a, a.numElements())
+
+  /** `v` as an array value whose element i is null where `nulls(i)`
+    * (`nulls == null`: no element is). */
+  private def longArray(v: Array[Long], nulls: Array[Boolean]): ArrayData =
+    if (nulls == null) new GenericArrayData(v)
+    else new GenericArrayData(Array.tabulate[Any](v.length)(i => if (nulls(i)) null else v(i)))
+
   /** Exact mirror of Similarity.cosineCol's HOF fold: dot and both norms
     * accumulate in doubles over ascending indices, result =
     * dot / (sqrt(na) * sqrt(nb)). */
@@ -60,13 +85,14 @@ object VecFns {
     s
   }
 
-  /** Exact mirror of Similarity.quantCol: floor(x·1000) per element. */
+  /** Exact mirror of Similarity.quantCol: floor(x·1000) per element; a
+    * null element stays null, as in `transform`. */
   def quantMilli(a: ArrayData): ArrayData = {
     val n = a.numElements()
     val out = new Array[Long](n)
     var i = 0
     while (i < n) { out(i) = q1000(a.getFloat(i)); i += 1 }
-    new GenericArrayData(out)
+    longArray(out, nullGroups(a, n, 1))
   }
 
   /** PQ codebook value c(j, t) = ((j·31 + t·17) mod 2001) − 1000. */
@@ -105,23 +131,27 @@ object VecFns {
     out
   }
 
-  /** Codes array (m entries): pmod(packed, ks). */
+  /** Codes array (m entries): pmod(packed, ks); null for a subspace that
+    * holds a null element (its HOF argmin is over all-null distances). */
   def pqCodes(e: ArrayData, dim: Int, m: Int, ks: Int): ArrayData = {
     val p = pqPacked(e, dim, m, ks)
     val out = new Array[Long](m)
     var s = 0
     while (s < m) { out(s) = p(s) % ks; s += 1 }
-    new GenericArrayData(out)
+    longArray(out, nullGroups(e, dim, dim / m))
   }
 
-  /** (sub, code, err) struct rows, err = packed >> 4 (requires ks = 16). */
+  /** (sub, code, err) struct rows, err = packed >> 4 (requires ks = 16);
+    * code and err are null for a subspace that holds a null element. */
   def pqEncode(e: ArrayData, dim: Int, m: Int, ks: Int): ArrayData = {
     val p = pqPacked(e, dim, m, ks)
+    val nulls = nullGroups(e, dim, dim / m)
     val rows = new Array[Any](m)
     var s = 0
     while (s < m) {
       rows(s) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](s.toLong, p(s) % ks, p(s) >> 4))
+        if (nulls != null && nulls(s)) Array[Any](s.toLong, null, null)
+        else Array[Any](s.toLong, p(s) % ks, p(s) >> 4))
       s += 1
     }
     new GenericArrayData(rows)
@@ -157,7 +187,8 @@ object VecFns {
     best % nlist
   }
 
-  /** nprobe nearest cells, nearest first (array_sort + slice + pmod). */
+  /** nprobe nearest cells, nearest first (array_sort + slice + pmod). A
+    * null element makes every router distance null, so every probe is. */
   def ivfProbes(e: ArrayData, dim: Int, nlist: Int, nprobe: Int): ArrayData = {
     val p = ivfPacked(e, dim, nlist)
     java.util.Arrays.sort(p)
@@ -165,11 +196,11 @@ object VecFns {
     val out = new Array[Long](n)
     var i = 0
     while (i < n) { out(i) = p(i) % nlist; i += 1 }
-    new GenericArrayData(out)
+    longArray(out, if (hasNull(e, dim)) Array.fill(n)(true) else null)
   }
 
   /** Per-query ADC lookup table, flattened: LUT[s·ks + j] = Σ_t∈sub_s
-    * (q_t − c(j,t))². */
+    * (q_t − c(j,t))², null for a subspace s that holds a null element. */
   def adcLut(e: ArrayData, dim: Int, m: Int, ks: Int): ArrayData = {
     val d0 = dim / m
     val q = new Array[Long](dim)
@@ -193,7 +224,8 @@ object VecFns {
       }
       s += 1
     }
-    new GenericArrayData(out)
+    val nulls = nullGroups(e, dim, d0)
+    longArray(out, if (nulls == null) null else Array.tabulate(m * ks)(i => nulls(i / ks)))
   }
 
 
@@ -234,11 +266,19 @@ private object VecCheck {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(s"$what: expected array<bigint>, got $other")
   }
-  val longArrayType: DataType = ArrayType(LongType, containsNull = false)
+  /** Whether an array input may hold null elements. */
+  def elementsNullable(dt: DataType): Boolean = dt match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+  /** array<bigint> whose elements are null where the input's may be. */
+  def longArrayOf(input: Expression): DataType =
+    ArrayType(LongType, containsNull = elementsNullable(input.dataType))
 }
 
 /** vec_cosine_native(qe array<float>, ce array<float>) → double; null when
-  * lengths differ (the zip_with-pads-with-null behavior of the HOF form). */
+  * lengths differ (the zip_with-pads-with-null behavior of the HOF form) or
+  * an element is null. */
 final case class VecCosineExpr(left: Expression, right: Expression) extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = {
     val l = VecCheck.floatArray(left.dataType, prettyName)
@@ -249,18 +289,21 @@ final case class VecCosineExpr(left: Expression, right: Expression) extends Bina
   override def nullable: Boolean = true
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) null else VecFns.cosineF(x, y)
+    if (x.numElements() != y.numElements() || VecFns.hasNull(x) || VecFns.hasNull(y)) null
+    else VecFns.cosineF(x, y)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
+      if ($a.numElements() != $b.numElements() ||
+          graft.functions.VecFns.hasNull($a) || graft.functions.VecFns.hasNull($b)) { ${ev.isNull} = true; }
       else { ${ev.value} = graft.functions.VecFns.cosineF($a, $b); }""")
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VecCosineExpr =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "vec_cosine_native"
 }
 
-/** vec_quant_dot_native(a array<bigint>, b array<bigint>) → bigint. */
+/** vec_quant_dot_native(a array<bigint>, b array<bigint>) → bigint; null
+  * when lengths differ or an element is null. */
 final case class VecQuantDotExpr(left: Expression, right: Expression) extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = {
     val l = VecCheck.longArray(left.dataType, prettyName)
@@ -271,11 +314,13 @@ final case class VecQuantDotExpr(left: Expression, right: Expression) extends Bi
   override def nullable: Boolean = true
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) null else VecFns.quantDot(x, y)
+    if (x.numElements() != y.numElements() || VecFns.hasNull(x) || VecFns.hasNull(y)) null
+    else VecFns.quantDot(x, y)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
+      if ($a.numElements() != $b.numElements() ||
+          graft.functions.VecFns.hasNull($a) || graft.functions.VecFns.hasNull($b)) { ${ev.isNull} = true; }
       else { ${ev.value} = graft.functions.VecFns.quantDot($a, $b); }""")
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VecQuantDotExpr =
     copy(left = newLeft, right = newRight)
@@ -286,7 +331,7 @@ final case class VecQuantDotExpr(left: Expression, right: Expression) extends Bi
 final case class VecQuantMilliExpr(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     VecCheck.floatArray(child.dataType, prettyName)
-  override def dataType: DataType = VecCheck.longArrayType
+  override def dataType: DataType = VecCheck.longArrayOf(child)
   override def nullSafeEval(input: Any): Any =
     VecFns.quantMilli(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -300,7 +345,7 @@ final case class VecQuantMilliExpr(child: Expression) extends UnaryExpression {
 final case class VecPqCodesExpr(child: Expression, dim: Int, m: Int, ks: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     VecCheck.floatArray(child.dataType, prettyName)
-  override def dataType: DataType = VecCheck.longArrayType
+  override def dataType: DataType = VecCheck.longArrayOf(child)
   override def nullSafeEval(input: Any): Any =
     VecFns.pqCodes(input.asInstanceOf[ArrayData], dim, m, ks)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -314,10 +359,13 @@ final case class VecPqCodesExpr(child: Expression, dim: Int, m: Int, ks: Int) ex
 final case class VecPqEncodeExpr(child: Expression, dim: Int, m: Int, ks: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     VecCheck.floatArray(child.dataType, prettyName)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("sub", LongType, nullable = false),
-    StructField("code", LongType, nullable = false),
-    StructField("err", LongType, nullable = false))), containsNull = false)
+  override def dataType: DataType = {
+    val nulls = VecCheck.elementsNullable(child.dataType)
+    ArrayType(StructType(Seq(
+      StructField("sub", LongType, nullable = false),
+      StructField("code", LongType, nullable = nulls),
+      StructField("err", LongType, nullable = nulls))), containsNull = false)
+  }
   override def nullSafeEval(input: Any): Any =
     VecFns.pqEncode(input.asInstanceOf[ArrayData], dim, m, ks)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -327,15 +375,20 @@ final case class VecPqEncodeExpr(child: Expression, dim: Int, m: Int, ks: Int) e
   override def prettyName: String = "vec_pq_encode_native"
 }
 
-/** vec_ivf_cell_native(e, dim, nlist) → bigint. */
+/** vec_ivf_cell_native(e, dim, nlist) → bigint; null when an element is null. */
 final case class VecIvfCellExpr(child: Expression, dim: Int, nlist: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     VecCheck.floatArray(child.dataType, prettyName)
   override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    VecFns.ivfCell(input.asInstanceOf[ArrayData], dim, nlist)
+  override def nullable: Boolean = true
+  override def nullSafeEval(input: Any): Any = {
+    val e = input.asInstanceOf[ArrayData]
+    if (VecFns.hasNull(e, dim)) null else VecFns.ivfCell(e, dim, nlist)
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecFns.ivfCell($c, $dim, $nlist)")
+    nullSafeCodeGen(ctx, ev, c => s"""
+      if (graft.functions.VecFns.hasNull($c, $dim)) { ${ev.isNull} = true; }
+      else { ${ev.value} = graft.functions.VecFns.ivfCell($c, $dim, $nlist); }""")
   override protected def withNewChildInternal(newChild: Expression): VecIvfCellExpr =
     copy(child = newChild)
   override def prettyName: String = "vec_ivf_cell_native"
@@ -345,7 +398,7 @@ final case class VecIvfCellExpr(child: Expression, dim: Int, nlist: Int) extends
 final case class VecIvfProbesExpr(child: Expression, dim: Int, nlist: Int, nprobe: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     VecCheck.floatArray(child.dataType, prettyName)
-  override def dataType: DataType = VecCheck.longArrayType
+  override def dataType: DataType = VecCheck.longArrayOf(child)
   override def nullSafeEval(input: Any): Any =
     VecFns.ivfProbes(input.asInstanceOf[ArrayData], dim, nlist, nprobe)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -359,7 +412,7 @@ final case class VecIvfProbesExpr(child: Expression, dim: Int, nlist: Int, nprob
 final case class VecAdcLutExpr(child: Expression, dim: Int, m: Int, ks: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     VecCheck.floatArray(child.dataType, prettyName)
-  override def dataType: DataType = VecCheck.longArrayType
+  override def dataType: DataType = VecCheck.longArrayOf(child)
   override def nullSafeEval(input: Any): Any =
     VecFns.adcLut(input.asInstanceOf[ArrayData], dim, m, ks)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -369,7 +422,8 @@ final case class VecAdcLutExpr(child: Expression, dim: Int, m: Int, ks: Int) ext
   override def prettyName: String = "vec_adc_lut_native"
 }
 
-/** vec_adc_dist_native(lut array<bigint>, codes array<bigint>, ks) → bigint. */
+/** vec_adc_dist_native(lut array<bigint>, codes array<bigint>, ks) → bigint;
+  * null when an element of either is null. */
 final case class VecAdcDistExpr(left: Expression, right: Expression, ks: Int) extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = {
     val l = VecCheck.longArray(left.dataType, prettyName)
@@ -377,10 +431,15 @@ final case class VecAdcDistExpr(left: Expression, right: Expression, ks: Int) ex
     else VecCheck.longArray(right.dataType, prettyName)
   }
   override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecFns.adcDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ks)
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val lut = a.asInstanceOf[ArrayData]; val codes = b.asInstanceOf[ArrayData]
+    if (VecFns.hasNull(lut) || VecFns.hasNull(codes)) null else VecFns.adcDist(lut, codes, ks)
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecFns.adcDist($a, $b, $ks)")
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      if (graft.functions.VecFns.hasNull($a) || graft.functions.VecFns.hasNull($b)) { ${ev.isNull} = true; }
+      else { ${ev.value} = graft.functions.VecFns.adcDist($a, $b, $ks); }""")
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VecAdcDistExpr =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "vec_adc_dist_native"

@@ -58,9 +58,9 @@ object Dedup {
   def shingleStrings(text: String): Array[String] = ngramStrings(text, 3)
 
   /** Distinct word n-grams, single pass; same tokenization contract as
-    * [[shingleStrings]] (engine-portable). */
+    * [[shingleStrings]] (engine-portable). A null text reads as "". */
   def ngramStrings(text: String, n: Int): Array[String] = {
-    val toks = text.split(" ", -1)
+    val toks = (if (text == null) "" else text).split(" ", -1)
     if (toks.length < n) Array.empty[String]
     else {
       val seen = new java.util.LinkedHashSet[String]()
@@ -672,8 +672,11 @@ object Dedup {
     * path, but each star round here costs ~6 shuffle stages + a signature
     * job, which on a residual near-dup edge set (pairs ≪ corpus — the
     * overwhelmingly common case after banding) is pure round latency.
-    * 2M (u,v) rows ≈ 32 MB of driver longs. CcLocalSpec asserts cap=0 and
-    * default produce identical labelings on the real pair sets. */
+    * At the cap the driver collects 2M (u,v) pairs as (Long, Long) tuples
+    * (the encoder boxes both fields: ~56 B each, ~110 MB), copies them
+    * into two primitive long arrays (32 MB), and builds the union-find map
+    * over at most 4M boxed node ids (~70 B each, up to ~280 MB). CcLocalSpec asserts cap=0 and default
+    * produce identical labelings on the real pair sets. */
   private val LocalEdgeCap = 2000000L
 
   /** Driver-local union-find with min-root relabeling — exactly the star
@@ -716,11 +719,10 @@ object Dedup {
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
     if (localCap > 0) {
-      val capped = base.limit((localCap + 1).toInt).collect()
+      import spark.implicits._
+      val capped = base.as[(Long, Long)].limit((localCap + 1).toInt).collect()
       if (capped.length <= localCap) {
-        val labels = ccLocalKernel(capped.map(_.getLong(0)), capped.map(_.getLong(1)))
-        import spark.implicits._
-        return labels.toSeq.toDF("doc_id", "cluster_id")
+        return ccLocalKernel(capped.map(_._1), capped.map(_._2)).toSeq.toDF("doc_id", "cluster_id")
       }
       // over cap: fall through to the distributed loop (the collect above
       // was bounded by limit(cap+1), so the driver never held more)
@@ -760,9 +762,8 @@ object Dedup {
   }
 
   /** One large-star round (edges stored larger→smaller as (u,v)): every
-    * node connects its LARGER neighbors to its neighborhood minimum.
-    * Package-visible for the plan audit (PLANS.md). */
-  private[graft] def ccLargeStar(e: DataFrame): DataFrame = {
+    * node connects its LARGER neighbors to its neighborhood minimum. */
+  private def ccLargeStar(e: DataFrame): DataFrame = {
     // symmetric view; m(x) = min over Γ(x) ∪ {x}
     val sym = e.select(col("u").as("x"), col("v").as("y"))
       .unionByName(e.select(col("v").as("x"), col("u").as("y")))
@@ -782,7 +783,7 @@ object Dedup {
 
   /** One small-star round: all v < u here, so m(u) = min(N(u)); connects
     * each non-min smaller neighbor and u itself to m. */
-  private[graft] def ccSmallStar(e: DataFrame): DataFrame = {
+  private def ccSmallStar(e: DataFrame): DataFrame = {
     val mins = e.groupBy(col("u")).agg(min(col("v")).as("m"))
     e.join(mins, "u")
       .where(col("v") =!= col("m"))

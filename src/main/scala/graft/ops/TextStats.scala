@@ -227,7 +227,7 @@ object TextStats {
     // needs every occurrence, unlike the distinct-gram flagging pass
     val pGrams = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val toks = t.split(" ", -1)
+        val toks = (if (t == null) "" else t).split(" ", -1)
         if (toks.length < n) Iterator.empty
         else (0 to toks.length - n).iterator.map { i =>
           (id, (i + 1).toLong, toks.slice(i, i + n).mkString(" "))
@@ -295,7 +295,7 @@ object TextStats {
     import spark.implicits._
     val edges = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val toks = t.split(" ", -1)
+        val toks = (if (t == null) "" else t).split(" ", -1)
         if (toks.length < n) Iterator.empty
         else Iterator(
           (id, "H", toks.take(n).mkString(" ")),
@@ -522,7 +522,7 @@ object TextStats {
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, t) =>
-        val toks = if (t.trim.isEmpty) Array.empty[String] else t.split(" ", -1)
+        val toks = if (t == null || t.trim.isEmpty) Array.empty[String] else t.split(" ", -1)
         val n = toks.length
         val uni = new scala.collection.mutable.HashMap[String, Long]()
         toks.foreach(w => uni.update(w, uni.getOrElse(w, 0L) + 1L))
@@ -1077,7 +1077,7 @@ object TextStats {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)].map { case (id, text) =>
-      val toks = text.split(" ", -1)
+      val toks = (if (text == null) "" else text).split(" ", -1)
       val nLines = math.max(1, (toks.length + 11) / 12)
       val body = (0 until nLines).map { i =>
         val line = toks.slice(i * 12, (i + 1) * 12).mkString(" ")

@@ -199,14 +199,21 @@ object ResumableExtract {
   def bucketed(pages: Dataset[PageRow], nBuckets: Int): DataFrame =
     pages.withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
 
-  /** Remaining work = input buckets minus completed watermarks. */
+  /** Remaining work = input buckets minus completed watermarks. Only a
+    * missing watermark directory means nothing is committed; any other read
+    * failure (say, a corrupt watermark file) propagates rather than silently
+    * redoing every group. The schema is given, so a directory with no
+    * committed file yet (a crash in the first watermark write) reads as
+    * empty too. */
   def pending(pages: Dataset[PageRow], nBuckets: Int, watermarkDir: String): Dataset[PageRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
     val withBucket = bucketed(pages, nBuckets)
+    val path = new org.apache.hadoop.fs.Path(watermarkDir)
     val done: DataFrame =
-      try spark.read.parquet(watermarkDir).select(col("bucket"))
-      catch { case _: Exception => spark.emptyDataFrame.withColumn("bucket", lit(-1L)).limit(0) }
+      if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path))
+        spark.read.schema("bucket BIGINT").parquet(watermarkDir).select(col("bucket"))
+      else Seq.empty[Long].toDF("bucket")
     withBucket.join(done, Seq("bucket"), "left_anti")
       .drop("bucket").as[PageRow]
   }

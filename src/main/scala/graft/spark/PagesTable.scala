@@ -31,11 +31,18 @@ object PagesTable {
     "forms.pdf", "images.pdf", "toc_viewmodes.pdf", "text.pdf", "attachments.pdf")
   val heavy = "multipage.pdf"
 
-  @transient private lazy val fixtureBytes: Map[String, Array[Byte]] =
-    (rotation.toSet + heavy + "encrypted.pdf" + "box_fallback.pdf" + "toc_circular.pdf" +
-      "toc_maxdepth.pdf" + "multipage.pdf" + "mona_lisa.jpg").map { n =>
-      n -> java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$FixtureDir/$n"))
-    }.toMap
+  /** Fails with one IllegalStateException naming [[FixtureDir]] and every
+    * missing fixture, so a host without the corpus gets one clear cause. */
+  @transient private lazy val fixtureBytes: Map[String, Array[Byte]] = {
+    val names = rotation.toSet + heavy + "encrypted.pdf" + "box_fallback.pdf" +
+      "toc_circular.pdf" + "toc_maxdepth.pdf" + "multipage.pdf" + "mona_lisa.jpg"
+    val paths = names.map(n => n -> java.nio.file.Paths.get(FixtureDir, n)).toMap
+    val missing = paths.collect { case (n, p) if !java.nio.file.Files.isRegularFile(p) => n }
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"the reference fixture corpus is absent: $FixtureDir lacks ${missing.toSeq.sorted.mkString(", ")}")
+    paths.map { case (n, p) => n -> java.nio.file.Files.readAllBytes(p) }
+  }
 
   def fixture(name: String): Array[Byte] = fixtureBytes(name)
 

@@ -1,14 +1,10 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.SparkSessionFixture
+import graft.{LogCapture, SparkSessionFixture}
 
 /** The SQL surface has one installer: [[NativeRegistry.register]] installs
   * the same names the session extension injects, once per session. */
@@ -16,29 +12,16 @@ class NativeRegistrySpec extends AnyFunSuite {
 
   lazy val spark = SparkSessionFixture.spark
 
-  private final class Capture
-      extends AbstractAppender("native-registry-capture", null, null, true, Property.EMPTY_ARRAY) {
-    val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def append(e: LogEvent): Unit = messages.add(e.getMessage.getFormattedMessage)
-  }
-
   private val udfNames =
     Set("pdf_extract_text", "pdf_page_count", "pdf_char_count", "pdf_err_code", "simhash64")
 
   test("register twice on one session replaces no function") {
     val s = spark.newSession()
-    val capture = new Capture
-    capture.start()
-    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
-    root.addAppender(capture)
-    try {
+    val events = LogCapture.during {
       NativeRegistry.register(s)
       NativeRegistry.register(s)
-    } finally {
-      root.removeAppender(capture)
-      capture.stop()
     }
-    val replaced = capture.messages.toArray.map(_.toString)
+    val replaced = events.map(_.getMessage.getFormattedMessage)
       .filter(_.contains("replaced a previously registered function"))
     assert(replaced.isEmpty, replaced.mkString("\n"))
   }

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.SparkSessionFixture
 
-/** Text operators read a null `text` as an empty token list, the way
-  * Retrieval does: the rows equal those for `""`. */
+/** Text operators read a null `text` as `""`, the way Retrieval does: the
+  * rows equal those for `""`. */
 class NullTextSpec extends AnyFunSuite {
 
   lazy val spark = SparkSessionFixture.spark
@@ -20,7 +20,11 @@ class NullTextSpec extends AnyFunSuite {
   private val operators: Seq[(String, DataFrame => DataFrame)] = Seq(
     "repeatedNgrams" -> (d => TextStats.repeatedNgrams(d, n = 3, minDocs = 2)),
     "subsampleFreq" -> (d => TextStats.subsampleFreq(d)),
-    "tfidfTerms" -> (d => TextStats.tfidfTerms(d, k = 2)))
+    "tfidfTerms" -> (d => TextStats.tfidfTerms(d, k = 2)),
+    "contaminationSpans" -> (d => TextStats.contaminationSpans(d, d.where("doc_id != 4"), n = 3)),
+    "continuationPairs" -> (d => TextStats.continuationPairs(d, n = 1)),
+    "repetition" -> (d => TextStats.repetition(d)),
+    "corpusWithLines" -> (d => TextStats.corpusWithLines(d)))
 
   for ((name, op) <- operators) test(s"$name: null text gives the rows of empty text") {
     val empty = op(docs("")).collect().map(_.toString).sorted.toSeq

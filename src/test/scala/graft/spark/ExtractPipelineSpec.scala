@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
-import graft.SparkSessionFixture
+import graft.{LogCapture, SparkSessionFixture}
 import graft.core.{ErrCodes, PdfDocument, SynthPdf}
 
 /** The two extraction placement policies and the payload guard on a corpus
@@ -123,5 +123,35 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val settled = files(dir)
     run()
     assert(files(dir) == settled)
+  }
+
+  test("a first ResumableExtract.run logs no FileNotFoundException") {
+    val dir = Files.createTempDirectory("resume-first")
+    val events = LogCapture.during {
+      ResumableExtract.run(spark, pages, dir.resolve("out").toString, dir.resolve("wm").toString,
+        nBuckets = 8, groups = 2)
+    }
+    def fileNotFound(e: org.apache.logging.log4j.core.LogEvent): Boolean =
+      e.getMessage.getFormattedMessage.contains("FileNotFoundException") ||
+        Iterator.iterate(e.getThrown)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[java.io.FileNotFoundException])
+    val logged = events.filter(fileNotFound).map(_.getMessage.getFormattedMessage)
+    assert(logged.isEmpty, logged.mkString("\n"))
+  }
+
+  test("ResumableExtract.run fails on a corrupt watermark instead of redoing every group") {
+    val dir = Files.createTempDirectory("resume-corrupt")
+    val (out, wm) = (dir.resolve("out"), dir.resolve("wm"))
+    // one bucket in one group: the watermark is a single parquet file
+    def run(): Unit = ResumableExtract.run(spark, pages, out.toString, wm.toString, nBuckets = 1, groups = 1)
+    run()
+    val parquet = Files.walk(wm).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(parquet.size == 1, parquet)
+    Files.write(parquet.head, "not a parquet file".getBytes("UTF-8"))
+    Files.deleteIfExists(parquet.head.resolveSibling(s".${parquet.head.getFileName}.crc"))
+    val landed = files(out)
+    intercept[Exception](run())
+    assert(files(out) == landed, "no group was rewritten")
   }
 }
