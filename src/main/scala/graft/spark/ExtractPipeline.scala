@@ -69,16 +69,18 @@ object ExtractPipeline {
     * common case: rows with payloads ≤ `heavyBytes` (and null payloads,
     * which fail the guard without parsing) are parsed narrow; only the
     * heavy tail is hash-repartitioned by xxhash64(url) into
-    * `spark.sql.shuffle.partitions` tasks, so monster documents spread
-    * one-per-task instead of gating whichever input partition they
-    * clustered in. The shuffle carries only the rare big payloads instead
-    * of the whole corpus: full-corpus salting measurably LOSES wall time at
-    * realistic mixes because shipping every payload costs more than the
-    * straggler it removes (BENCH_skew.json; the reference's own
-    * parallel-processing lesson, changelog.md:447-453). Input is scanned
-    * twice (once per branch) but the filter is a cheap length check
-    * against a column the branch reads anyway, and each row is PARSED
-    * exactly once. */
+    * `spark.sql.shuffle.partitions` tasks, so monster documents leave the
+    * input partition they clustered in. A hash spread gives no per-task
+    * guarantee: several monsters can share one task (perfbench's
+    * `skew_routed` input hashes 3 of its 4 into one of 4 tasks), and that
+    * task then gates the stage. The shuffle carries only the rare big
+    * payloads instead of the whole corpus: full-corpus salting measurably
+    * LOSES wall time at realistic mixes because shipping every payload
+    * costs more than the straggler it removes (BENCH_skew.json; the
+    * reference's own parallel-processing lesson, changelog.md:447-453).
+    * Input is scanned twice (once per branch) but the filter is a cheap
+    * length check against a column the branch reads anyway, and each row
+    * is PARSED exactly once. */
   def extractSizeRouted(pages: Dataset[PageRow], password: String = "",
                         heavyBytes: Int = 1 << 20): Dataset[ExtractedDoc] = {
     val size = length(col("html"))
@@ -188,71 +190,34 @@ object ExtractPipeline {
   }
 }
 
-/** Checkpoint-resume via partition watermarks (SURVEY.md §2.10): the input is
-  * bucketed by a stable key hash; completed buckets are recorded in a
-  * watermark table; a restart anti-joins the input against completed buckets
-  * and only processes the remainder. Batch semantics — the reference has no
-  * streaming — but the same watermark table would back a
-  * Trigger.AvailableNow structured-streaming carrier. */
+/** Checkpoint-resume at group granularity (SURVEY.md §2.10). A row belongs
+  * to group pmod(xxhash64(url), groups). Each group is extracted from its
+  * full slice of the input into `$outDir/group=$g` with OVERWRITE, and only
+  * after that write returns does the driver create one empty marker file,
+  * `$outDir/_committed/$g-of-$groups`. A single file create cannot land
+  * half-way, so a group is committed whole or redone whole: the idea of
+  * Delta Lake's one-commit log, applied per group. Spark's file index skips
+  * `_`-prefixed paths, so `spark.read.parquet(outDir)` reads only the group
+  * output. */
 object ResumableExtract {
 
-  def bucketed(pages: Dataset[PageRow], nBuckets: Int): DataFrame =
-    pages.withColumn("bucket", pmod(xxhash64(col("url")), lit(nBuckets)))
-
-  /** Remaining work = input buckets minus completed watermarks. Only a
-    * missing watermark directory means nothing is committed; any other read
-    * failure (say, a corrupt watermark file) propagates rather than silently
-    * redoing every group. The schema is given, so a directory with no
-    * committed file yet (a crash in the first watermark write) reads as
-    * empty too. */
-  def pending(pages: Dataset[PageRow], nBuckets: Int, watermarkDir: String): Dataset[PageRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val withBucket = bucketed(pages, nBuckets)
-    val path = new org.apache.hadoop.fs.Path(watermarkDir)
-    val done: DataFrame =
-      if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path))
-        spark.read.schema("bucket BIGINT").parquet(watermarkDir).select(col("bucket"))
-      else Seq.empty[Long].toDF("bucket")
-    withBucket.join(done, Seq("bucket"), "left_anti")
-      .drop("bucket").as[PageRow]
-  }
-
-  /** Run extraction bucket group by bucket group. Each group writes to a
-    * deterministic per-group directory with OVERWRITE semantics and commits
-    * its watermark only after the output lands, so a crash between the two
-    * writes makes the restart redo the group in place — never append
-    * duplicates (idempotent restart unit). Restarts must use the same
-    * `groups` value (group numbering is derived from it). */
-  def run(spark: SparkSession, pages: Dataset[PageRow], outDir: String,
-          watermarkDir: String, nBuckets: Int, groups: Int): Unit = {
-    import spark.implicits._
-    val todo = pending(pages, nBuckets, watermarkDir)
-    val withBucket = bucketed(todo, nBuckets)
-    // NEVER cache the payload rows (r3 "What's wrong #1": a
-    // MEMORY_AND_DISK cache of the html binary column is a cluster-wide
-    // spill storm at 100 TB). The only state worth holding is the pending
-    // BUCKET ID set — ≤ nBuckets longs — collected once; each non-empty
-    // group then re-scans its slice (scan + filter is cheap and
-    // partition-prunable; holding payloads is not).
-    val pendingBuckets = withBucket.select(col("bucket")).distinct()
-      .as[Long].collect().toSet
-    (0 until groups).foreach { g =>
-      val gBuckets = pendingBuckets.filter(_ % groups == g)
-      // A fully-committed group has an empty pending slice — skip it, or
-      // the overwrite below would erase its previously-landed output.
-      if (gBuckets.nonEmpty) {
-        val rows = withBucket.filter(pmod(col("bucket"), lit(groups)) === g)
-          .drop("bucket").as[PageRow]
-        // 1) output first (overwrite → rerun-safe after a mid-group crash)
-        ExtractPipeline.extract(rows)
-          .write.mode("overwrite").parquet(s"$outDir/group=$g")
-        // 2) watermark second — only after the group's output is durable;
-        // the bucket list is already known on the driver, no extra scan
-        gBuckets.toSeq.sorted.toDF("bucket")
-          .withColumn("completed_at", current_timestamp())
-          .write.mode("overwrite").parquet(s"$watermarkDir/group=$g")
-      }
+  /** Extracts every group of `pages` that has no marker under `outDir`. The
+    * markers are listed once on the driver, so a settled rerun submits no
+    * Spark job. Throws IllegalArgumentException, writing nothing, when a
+    * marker was written with another `groups` value: group membership
+    * depends on it, and mixing two values would duplicate rows. */
+  def run(spark: SparkSession, pages: Dataset[PageRow], outDir: String, groups: Int): Unit = {
+    val markers = new org.apache.hadoop.fs.Path(outDir, "_committed")
+    val fs = markers.getFileSystem(spark.sessionState.newHadoopConf())
+    val committed =
+      if (fs.exists(markers)) fs.listStatus(markers).map(_.getPath.getName).toSet else Set.empty[String]
+    val foreign = committed.filterNot(_.endsWith(s"-of-$groups"))
+    require(foreign.isEmpty,
+      s"$markers holds markers of another groups value (${foreign.mkString(", ")}); run with that value")
+    for (g <- 0 until groups if !committed(s"$g-of-$groups")) {
+      ExtractPipeline.extract(pages.where(pmod(xxhash64(col("url")), lit(groups)) === g))
+        .write.mode("overwrite").parquet(s"$outDir/group=$g")
+      fs.create(new org.apache.hadoop.fs.Path(markers, s"$g-of-$groups"), false).close()
     }
   }
 }

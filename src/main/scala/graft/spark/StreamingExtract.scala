@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.Trigger
 /** Structured-Streaming carrier for the extraction pipeline (SURVEY.md §2.10):
   * `readStream` over the pages directory → the same typed extraction →
   * parquet sink with `Trigger.AvailableNow` + checkpointLocation. The
-  * checkpoint gives exactly-once file-level resume — the streaming
-  * alternative to [[ResumableExtract]]'s watermark table. */
+  * Spark checkpoint gives exactly-once file-level resume — the streaming
+  * alternative to [[ResumableExtract]]'s group markers. */
 object StreamingExtract {
 
   def run(spark: SparkSession, pagesDir: String, outDir: String, checkpointDir: String,

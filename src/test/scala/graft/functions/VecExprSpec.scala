@@ -3,7 +3,7 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.SparkSessionFixture
+import graft.{CodegenModes, SparkSessionFixture}
 
 /** Equivalence guard for the round-6 codegen'd vector kernels: each
   * vector expression must be BIT-IDENTICAL to the higher-order-
@@ -30,19 +30,6 @@ class VecExprSpec extends AnyFunSuite {
       when(col("vec_id") % 3 === 0 && i === col("vec_id") % 64, lit(null).cast("float"))
         .otherwise(x)).as("embedding"))
 
-  private val modes = Seq(
-    "" -> Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false"),
-    "interpreted" -> Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false"))
-
-  /** Rows where the HOF value `o` and the native value `n` differ, counted
-    * with `confs` set; null-safe and bit-exact (any ULP difference counts). */
-  private def differWith(confs: Map[String, String])(df: DataFrame, o: Column, n: Column): Long = {
-    val before = confs.keys.map(k => k -> spark.conf.getOption(k))
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try df.select(o.as("o"), n.as("n")).where(not(col("o") <=> col("n"))).count()
-    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   test("the null-element embeddings hold nulls in every subspace") {
     val subs = withNulls.select(posexplode(col("embedding")).as(Seq("t", "x")))
       .where(col("x").isNull).select((col("t") / 16).cast("int")).distinct().count()
@@ -50,11 +37,11 @@ class VecExprSpec extends AnyFunSuite {
   }
 
   for ((data, input) <- Seq("" -> (() => real), "null elements" -> (() => withNulls));
-       (mode, confs) <- modes) {
+       (mode, confs) <- CodegenModes.modes) {
     val tags = Seq(data, mode).filter(_.nonEmpty)
     val label = if (tags.isEmpty) "" else tags.mkString(" (", ", ", ")")
     def emb: DataFrame = input()
-    def differ(df: DataFrame, o: Column, n: Column): Long = differWith(confs)(df, o, n)
+    def differ(df: DataFrame, o: Column, n: Column): Long = CodegenModes.differWith(confs)(df, o, n)
 
     test(s"vec_cosine_native matches the aggregate(zip_with(...)) fold bit-for-bit$label") {
       val oldCos = expr("""

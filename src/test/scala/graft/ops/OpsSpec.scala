@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkSessionFixture
+import graft.{CodegenModes, SparkSessionFixture}
 
 /** Unit + small-data semantics for the training-data operators. */
 class OpsSpec extends AnyFunSuite {
@@ -261,6 +261,24 @@ class OpsSpec extends AnyFunSuite {
     assert(plan.contains("bloom_probe") && !plan.contains("UDF"), plan.take(400))
     // filter semantics directly: every snapshot body hits, most fresh don't
     assert(df.filter(col("hit")).count() >= 20)
+  }
+
+  for ((mode, confs) <- CodegenModes.modes) {
+    val label = if (mode.isEmpty) "" else s" ($mode)"
+
+    test(s"bloom_probe equals BloomFilter.mightContainString; null gives null$label") {
+      import spark.implicits._
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(100L, 0.01)
+      (0 until 100).foreach(i => bf.putString(s"member $i"))
+      val bytes = { val bos = new java.io.ByteArrayOutputStream(); bf.writeTo(bos); bos.toByteArray }
+      val keys = (0 until 200).map(i => s"member $i") :+ null
+      val expected = keys.map(k => Option(k).map(bf.mightContainString))
+      assert(expected.count(_.contains(false)) > 0, "some keys must miss")
+      val df = keys.zip(expected).toDF("k", "expected")
+      val diff = CodegenModes.differWith(confs)(df, col("expected"),
+        graft.functions.NativeColumns.bloomProbe(col("k"), bytes))
+      assert(diff == 0L, s"bloom_probe differs from the filter on $diff keys")
+    }
   }
 
   test("ocr routing: scan → OCR, text → direct, blank → neither; page cap holds") {

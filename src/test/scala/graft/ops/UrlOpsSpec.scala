@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.SparkSessionFixture
+import graft.{CodegenModes, SparkSessionFixture}
+import graft.functions.NativeColumns
 
 /** URL canonicalization / registered-domain / dedup / domain-rollup
   * operators (ops/UrlOps.scala + the url_* native expressions). */
@@ -47,6 +49,32 @@ class UrlOpsSpec extends AnyFunSuite {
     assert(registeredDomain("ex.com") == "ex.com")
     assert(registeredDomain("localhost") == "localhost")
     assert(registeredDomain("com.au") == "com.au")
+  }
+
+  /** The inputs of the rule-by-rule cases above, as urls, and null. */
+  private val ruleInputs: Seq[String] = Seq(
+    "HTTP://WWW.Ex.COM:80/A/b#frag", "https://Ex.com:443/", "https://ex.com:8443/x",
+    "http://ex.com:443/x", "https://ex.com", "https://ex.com?b=2&a=1",
+    "https://ex.com/p?z=9&utm_source=f&a=1&&gclid=G&b=", "https://ex.com/p?utm_campaign=x&fbclid=Y",
+    "https://EX.com/CaseSensitive/Path", "not a url", "HTTP://A.B.com:80/p?b=2&a=1#z",
+    "https://www.ex.co.uk:8080/p?a=1", "http://ex.com/", "garbage", "https://www.site7.com/",
+    "https://a.b.site999.co.uk/", "http://localhost/", "https://com.au/", "", null)
+
+  for ((mode, confs) <- CodegenModes.modes) {
+    val label = if (mode.isEmpty) "" else s" ($mode)"
+
+    test(s"url_*_native expressions equal their Scala functions; null gives null$label") {
+      import spark.implicits._
+      val fns = Seq[(String, String => String, Column => Column)](
+        ("url_canonicalize_native", UrlOps.canonicalizeUrl, NativeColumns.urlCanonicalize),
+        ("url_host_native", UrlOps.hostOf, NativeColumns.urlHost),
+        ("url_domain_native", s => UrlOps.registeredDomain(UrlOps.hostOf(s)), NativeColumns.urlDomain))
+      for ((name, f, native) <- fns) {
+        val df = ruleInputs.map(s => (s, Option(s).map(f).orNull)).toDF("s", "expected")
+        val diff = CodegenModes.differWith(confs)(df, col("expected"), native(col("s")))
+        assert(diff == 0L, s"$name differs from its Scala function on $diff inputs")
+      }
+    }
   }
 
   test("dedup and domain stats over the planted corpus") {

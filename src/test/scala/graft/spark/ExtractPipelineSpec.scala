@@ -1,8 +1,10 @@
 package graft.spark
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -12,9 +14,10 @@ import org.apache.spark.sql.functions._
 import graft.{LogCapture, SparkSessionFixture}
 import graft.core.{ErrCodes, PdfDocument, SynthPdf}
 
-/** The two extraction placement policies and the payload guard on a corpus
-  * built in code (generated PDFs, generated HTML, a null payload and one
-  * multi-page heavy), so these specs need no reference fixtures. */
+/** The two extraction placement policies, the payload guard and resumable
+  * extraction on a corpus built in code (generated PDFs, generated HTML, a
+  * null payload and one multi-page heavy), so these specs need no reference
+  * fixtures. */
 class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark = SparkSessionFixture.spark
@@ -96,62 +99,97 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(got.sortBy(key) == expected.sortBy(key))
   }
 
-  private def files(root: Path): Map[String, Long] =
-    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
-      .map(f => root.relativize(f).toString -> Files.getLastModifiedTime(f).toMillis).toMap
+  /** Every regular file under `root`, relative, with its mtime and bytes. */
+  private def files(root: Path): Map[String, (Long, Seq[Byte])] =
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+      root.relativize(f).toString -> (Files.getLastModifiedTime(f).toMillis, Files.readAllBytes(f).toSeq)
+    }.toMap
 
-  private def deleteTree(root: Path): Unit =
-    Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+  private def resume(out: Path, groups: Int): Unit = ResumableExtract.run(spark, pages, out.toString, groups)
 
-  test("ResumableExtract.run redoes a crashed group in place and leaves committed groups alone") {
-    val dir = Files.createTempDirectory("resume-run")
-    val (out, wm) = (dir.resolve("out"), dir.resolve("wm"))
-    def run(): Unit = ResumableExtract.run(spark, pages, out.toString, wm.toString, nBuckets = 8, groups = 2)
-    run()
-    for (d <- Seq(out, wm); g <- 0 to 1) assert(Files.isDirectory(d.resolve(s"group=$g")), s"$d group=$g")
-    val group1 = (m: Map[String, Long]) => m.filter(_._1.startsWith("group=1"))
-    val firstOut = files(out)
-    val firstWm = files(wm)
-    // crash: group 0 neither landed its output nor committed its watermark
-    deleteTree(out.resolve("group=0"))
-    deleteTree(wm.resolve("group=0"))
-    run()
-    assert(group1(files(out)) == group1(firstOut) && group1(files(wm)) == group1(firstWm))
+  /** Spark jobs started while `body` runs. The listener bus delivers in
+    * order, so once a marker job submitted after `body` has reached the
+    * listener, so has every job `body` started. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (started, markers) = (new AtomicInteger, new AtomicInteger)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) markers.incrementAndGet()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      val t0 = System.nanoTime()
+      while (markers.get == 0 && System.nanoTime() - t0 < 10000000000L) Thread.sleep(2)
+      assert(markers.get == 1, "the marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
+
+  /** A first run with groups = 2, a crash that `crash` leaves in group 0's
+    * output, then a rerun: group 1 keeps its marker and its exact files,
+    * and every url is present exactly once. */
+  private def rerunAfter(crash: Path => Unit): Unit = {
+    val out = Files.createTempDirectory("resume-run").resolve("out")
+    resume(out, 2)
+    for (g <- 0 to 1) {
+      assert(Files.isDirectory(out.resolve(s"group=$g")), s"group=$g")
+      assert(Files.exists(out.resolve(s"_committed/$g-of-2")), s"marker $g")
+    }
+    val group1 = (m: Map[String, (Long, Seq[Byte])]) =>
+      m.filter { case (f, _) => f.startsWith("group=1") || f.startsWith("_committed/1-of-2") }
+    val first = group1(files(out))
+    Files.delete(out.resolve("_committed/0-of-2"))
+    crash(out.resolve("group=0"))
+    resume(out, 2)
+    assert(group1(files(out)) == first, "group 1 was rewritten")
+    assert(Files.exists(out.resolve("_committed/0-of-2")), "group 0 was not committed")
     val urls = spark.read.parquet(out.toString).select("url").collect().map(_.getString(0)).toSeq
     assert(urls.sorted == rows.map(_.url).sorted, "every url exactly once")
-    // every group committed: a rerun writes nothing
-    val settled = files(dir)
-    run()
-    assert(files(dir) == settled)
+  }
+
+  test("ResumableExtract.run redoes a crashed group in place and leaves committed groups alone") {
+    // crash mid-output: the job commit moved only some part files, no _SUCCESS
+    rerunAfter { group0 =>
+      val landed = Files.list(group0).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+      assert(landed.nonEmpty)
+      (landed.take((landed.size + 1) / 2) :+ group0.resolve("_SUCCESS")).foreach(Files.delete)
+    }
+  }
+
+  test("ResumableExtract.run redoes a group whose output landed without its marker") {
+    rerunAfter(_ => ())
+  }
+
+  test("a settled ResumableExtract.run writes no file and submits no Spark job") {
+    val out = Files.createTempDirectory("resume-settled").resolve("out")
+    resume(out, 2)
+    val settled = files(out.getParent)
+    assert(jobsDuring(resume(out, 2)) == 0)
+    assert(files(out.getParent) == settled)
+  }
+
+  test("ResumableExtract.run with another groups value throws and writes nothing") {
+    val out = Files.createTempDirectory("resume-groups").resolve("out")
+    resume(out, 2)
+    val landed = files(out)
+    intercept[IllegalArgumentException](resume(out, 3))
+    assert(files(out) == landed)
   }
 
   test("a first ResumableExtract.run logs no FileNotFoundException") {
     val dir = Files.createTempDirectory("resume-first")
-    val events = LogCapture.during {
-      ResumableExtract.run(spark, pages, dir.resolve("out").toString, dir.resolve("wm").toString,
-        nBuckets = 8, groups = 2)
-    }
+    val events = LogCapture.during(resume(dir.resolve("out"), 2))
     def fileNotFound(e: org.apache.logging.log4j.core.LogEvent): Boolean =
       e.getMessage.getFormattedMessage.contains("FileNotFoundException") ||
         Iterator.iterate(e.getThrown)(_.getCause).takeWhile(_ != null)
           .exists(_.isInstanceOf[java.io.FileNotFoundException])
     val logged = events.filter(fileNotFound).map(_.getMessage.getFormattedMessage)
     assert(logged.isEmpty, logged.mkString("\n"))
-  }
-
-  test("ResumableExtract.run fails on a corrupt watermark instead of redoing every group") {
-    val dir = Files.createTempDirectory("resume-corrupt")
-    val (out, wm) = (dir.resolve("out"), dir.resolve("wm"))
-    // one bucket in one group: the watermark is a single parquet file
-    def run(): Unit = ResumableExtract.run(spark, pages, out.toString, wm.toString, nBuckets = 1, groups = 1)
-    run()
-    val parquet = Files.walk(wm).iterator().asScala
-      .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet")).toSeq
-    assert(parquet.size == 1, parquet)
-    Files.write(parquet.head, "not a parquet file".getBytes("UTF-8"))
-    Files.deleteIfExists(parquet.head.resolveSibling(s".${parquet.head.getFileName}.crc"))
-    val landed = files(out)
-    intercept[Exception](run())
-    assert(files(out) == landed, "no group was rewritten")
   }
 }

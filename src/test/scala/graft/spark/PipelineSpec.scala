@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSessionFixture
 
 /** End-to-end pipeline semantics: extraction over the synthesized skewed
-  * table, per-partition metrics, watermark resume, streaming carrier. */
+  * table, per-partition metrics, streaming carrier. */
 class PipelineSpec extends AnyFunSuite {
 
   lazy val spark = SparkSessionFixture.spark
@@ -57,28 +57,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(m.length == 6)
     assert(m.map(r => r.getAs[Long]("docs")).sum == 96)
     assert(m.forall(r => r.getAs[Long]("decode_failures") == 0L))
-  }
-
-  test("watermark resume: second run only processes pending buckets") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("resume").toString
-    val pages = PagesTable.synthesize(spark, 40, 4)
-    // run only group 0 of 2 (simulates a crash after the first commit)
-    val withBucket = ResumableExtract.bucketed(pages, 8)
-    val firstSlice = withBucket.filter(pmod(col("bucket"), lit(2)) === 0)
-    ExtractPipeline.extract(firstSlice.drop("bucket").as[PageRow])
-      .write.mode("append").parquet(s"$tmp/out")
-    firstSlice.select("bucket").distinct()
-      .write.mode("append").parquet(s"$tmp/wm")
-    val doneUrls = spark.read.parquet(s"$tmp/out").count()
-    // resume: pending = everything not in committed buckets
-    val pending = ResumableExtract.pending(pages, 8, s"$tmp/wm")
-    assert(pending.count() == 40 - doneUrls)
-    // completing the run covers all urls exactly once
-    ExtractPipeline.extract(pending).write.mode("append").parquet(s"$tmp/out")
-    val all = spark.read.parquet(s"$tmp/out")
-    assert(all.count() == 40)
-    assert(all.select("url").distinct().count() == 40)
   }
 
   test("structured-streaming carrier: AvailableNow + checkpoint resume") {
