@@ -70,11 +70,50 @@ final class PdfFontDecoder(
     }
   }
 
+  /** One code's per-font glyph metrics, computed once (PDFium's
+    * CPDF_SimpleFont keeps the same per-font width and bbox tables). */
+  private final class Glyph(val unicode: String, val advance: Double, val bbox: Option[Rect])
+  // Codes 0-255 index an array; wider codes (Type0, CMap-split) a map,
+  // capped at the 2-byte code space so a content stream of distinct 4-byte
+  // codes cannot grow it without bound. The decoder is document-scoped, so
+  // these tables are never shared across threads.
+  private val lowGlyphs = new Array[Glyph](256)
+  private val wideGlyphs = new java.util.HashMap[Int, Glyph]()
+  private val MaxWideGlyphs = 1 << 16
+
+  private def glyph(code: Int): Glyph =
+    if (code >= 0 && code < 256) {
+      var g = lowGlyphs(code)
+      if (g == null) { g = computeGlyph(code); lowGlyphs(code) = g }
+      g
+    } else {
+      var g = wideGlyphs.get(code)
+      if (g == null) {
+        g = computeGlyph(code)
+        if (wideGlyphs.size < MaxWideGlyphs) wideGlyphs.put(code, g)
+      }
+      g
+    }
+
+  private def computeGlyph(code: Int): Glyph =
+    new Glyph(computeUnicode(code), computeAdvance(code), computeGlyphBBox(code))
+
   /** Unicode string for a charcode — may be multi-char (ligatures: fixture
     * text.pdf maps <1D> → "ffi"); empty string if unmappable. Preference
     * order mirrors PDFium: ToUnicode, then encoding/glyph names, then the
     * code itself for simple fonts. */
-  def unicode(code: Int): String = {
+  def unicode(code: Int): String = glyph(code).unicode
+
+  /** Advance width in text-space units (em fraction, i.e. /1000 applied). */
+  def advance(code: Int): Double = glyph(code).advance
+
+  /** Tight glyph bbox in em fractions (glyph-space/unitsPerEm), or None when
+    * the glyph has no outline (space) or no metrics source exists. */
+  def glyphBBox(code: Int): Option[Rect] = glyph(code).bbox
+
+  // The compute* bodies call each other, never the cached accessors above:
+  // a table slot is filled only after all three are known.
+  private def computeUnicode(code: Int): String = {
     toUnicode.get(code) match {
       case Some(s) => return s
       case None => ()
@@ -96,8 +135,7 @@ final class PdfFontDecoder(
     }
   }
 
-  /** Advance width in text-space units (em fraction, i.e. /1000 applied). */
-  def advance(code: Int): Double = {
+  private def computeAdvance(code: Int): Double = {
     if (isType0) {
       val c = cid(code)
       if (c >= 0) cidWidths.get(c) match {
@@ -116,7 +154,7 @@ final class PdfFontDecoder(
       .orElse(cff.flatMap(c => cffGid(code).flatMap(c.emAdvance)))
       .orElse {
         // Standard-14 base font without /Widths (older web PDFs)
-        val u = unicode(code)
+        val u = computeUnicode(code)
         if (u.nonEmpty) Standard14.width(baseNameNoSubset, u.charAt(0)).map(_ / 1000.0) else None
       }
       .orElse(substitute.flatMap(st => subGlyphId(code).map(st.advance)))
@@ -127,7 +165,7 @@ final class PdfFontDecoder(
     * face's cmap is unicode-keyed; the PDF's own code→glyph rules only
     * apply to the embedded program it doesn't have). */
   private def subGlyphId(code: Int): Option[Int] = substitute.flatMap { st =>
-    val u = unicode(code)
+    val u = computeUnicode(code)
     if (u.nonEmpty) st.cmapLookup(3, u.codePointAt(0)).filter(_ != 0) else None
   }
 
@@ -185,16 +223,14 @@ final class PdfFontDecoder(
         .orElse(nonZero(tt.cmapLookup(3, 0xF000 | code)))
         .orElse(nonZero(tt.cmapLookup(3, code)))
         .orElse {
-          val u = unicode(code)
+          val u = computeUnicode(code)
           if (u.nonEmpty) nonZero(tt.cmapLookup(3, u.codePointAt(0))) else None
         }
         .orElse(if (tt.hasCmap) None else Some(code))
     }
   }
 
-  /** Tight glyph bbox in em fractions (glyph-space/unitsPerEm), or None when
-    * the glyph has no outline (space) or no metrics source exists. */
-  def glyphBBox(code: Int): Option[Rect] = {
+  private def computeGlyphBBox(code: Int): Option[Rect] = {
     truetype match {
       case Some(tt) =>
         glyphId(code).flatMap(tt.glyphBBox)
@@ -210,10 +246,10 @@ final class PdfFontDecoder(
         // No embedded outline data: approximate with advance × (descent..ascent),
         // except spaces which stay outline-less (keeps PDFium's zero-width
         // object skip working for unembedded fonts).
-        val u = unicode(code)
+        val u = computeUnicode(code)
         if (u == " " || u.isEmpty) None
         else {
-          val adv = advance(code)
+          val adv = computeAdvance(code)
           if (adv <= 0) None
           else Some(Rect(0, math.min(descent / 1000.0, 0), adv, math.max(ascent / 1000.0, 0.7)))
         }

@@ -81,6 +81,14 @@ final class Lexer(val data: Array[Byte], var pos: Int) {
   def readName(): PdfName = {
     // assumes current char is '/'
     pos += 1
+    // fast path: a name without #xx escapes is its latin-1 bytes
+    val start = pos
+    var end = pos
+    while (end < data.length && isRegular(data(end) & 0xff) && data(end) != '#') end += 1
+    if (end >= data.length || !isRegular(data(end) & 0xff)) {
+      pos = end
+      return PdfName(new String(data, start, end - start, java.nio.charset.StandardCharsets.ISO_8859_1))
+    }
     val sb = new StringBuilder
     while (!atEnd && isRegular(peek)) {
       val c = peek
@@ -232,7 +240,15 @@ final class Lexer(val data: Array[Byte], var pos: Int) {
     skipWs()
     val start = pos
     var whole = true
+    val neg = peek == '-'
     if (peek == '+' || peek == '-') pos += 1
+    // fast path: a sign and 1-15 digits is exact in a Long and in a Double
+    val digitsStart = pos
+    var n = 0L
+    while (!atEnd && peek >= '0' && peek <= '9') { n = n * 10 + (peek - '0'); pos += 1 }
+    val nDigits = pos - digitsStart
+    if (nDigits > 0 && nDigits <= 15 && (atEnd || peek != '.'))
+      return NumTok(if (neg) -n.toDouble else n.toDouble, whole)
     while (!atEnd && ((peek >= '0' && peek <= '9') || peek == '.')) {
       if (peek == '.') whole = false
       pos += 1

@@ -661,6 +661,8 @@ object PdfDocument {
       None
     }
 
+    // The probe that validated the xref chain as written, if it did.
+    var validated: Option[PdfDocument] = None
     if (!ok || !trailerAcc.contains("Root")) {
       runReconstruction() match {
         case Some(err) => return Left(err)
@@ -674,11 +676,10 @@ object PdfDocument {
       val probe = new PdfDocument(data, xrefAcc.toMap, trailerAcc, None, -1)
       val resolvable =
         probe.resolve(probe.trailer("Root")).isInstanceOf[PdfDict] && probe.pages.nonEmpty
-      if (!resolvable) {
-        runReconstruction() match {
-          case Some(err) => return Left(err)
-          case None => ()
-        }
+      if (resolvable) validated = Some(probe)
+      else runReconstruction() match {
+        case Some(err) => return Left(err)
+        case None => ()
       }
     }
     if (xrefAcc.isEmpty) return Left(PdfError(ErrCodes.Format, "no xref"))
@@ -687,7 +688,7 @@ object PdfDocument {
     val encRef = trailerAcc.get("Encrypt")
     encRef match {
       case Some(er) =>
-        val plainDoc = new PdfDocument(data, xrefAcc.toMap, trailerAcc, None, -1)
+        val plainDoc = validated.getOrElse(new PdfDocument(data, xrefAcc.toMap, trailerAcc, None, -1))
         val encDict = plainDoc.resolve(er) match { case d: PdfDict => d; case _ => PdfDict.empty }
         val firstId = plainDoc.identifiers._1
         val tryPwds: Seq[String] = if (password.nonEmpty) Seq(password, "") else Seq("")
@@ -701,7 +702,9 @@ object PdfDocument {
           case None => Left(PdfError(ErrCodes.Password, "password authentication failed"))
         }
       case None =>
-        Right(new PdfDocument(data, xrefAcc.toMap, trailerAcc, None, -1))
+        // the probe was built from these same arguments: return it, so its
+        // page-tree walk and object cache are not redone
+        Right(validated.getOrElse(new PdfDocument(data, xrefAcc.toMap, trailerAcc, None, -1)))
     }
   }
 

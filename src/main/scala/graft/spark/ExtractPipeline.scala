@@ -36,9 +36,9 @@ final case class ExtractedDoc(
   * Scale design (SURVEY.md §4.2): two placement policies, chosen by the
   * one thing the code can observe per row, the payload size:
   *  - [[extract]] parses every row where the scan produced it (no Exchange);
-  *  - [[extractSizeRouted]] additionally spreads the heavy tail by
-  *    xxhash64(url) so monster documents stop gating their input partition,
-  *    and AQE (Spark's default) re-splits residual skew;
+  *  - [[extractSizeRouted]] additionally deals the heavy tail round-robin
+  *    over the shuffle partitions so monster documents stop gating their
+  *    input partition, and AQE (Spark's default) re-splits residual skew;
   *  - a max-payload guard turns pathological rows into error statuses
   *    instead of executor OOMs;
   *  - per-partition metrics ride on the rows (partition_id column) and
@@ -68,16 +68,19 @@ object ExtractPipeline {
   /** Size-routed extraction — the skew answer that doesn't pay for the
     * common case: rows with payloads ≤ `heavyBytes` (and null payloads,
     * which fail the guard without parsing) are parsed narrow; only the
-    * heavy tail is hash-repartitioned by xxhash64(url) into
+    * heavy tail is round-robin repartitioned into
     * `spark.sql.shuffle.partitions` tasks, so monster documents leave the
-    * input partition they clustered in. A hash spread gives no per-task
-    * guarantee: several monsters can share one task (perfbench's
-    * `skew_routed` input hashes 3 of its 4 into one of 4 tasks), and that
-    * task then gates the stage. The shuffle carries only the rare big
-    * payloads instead of the whole corpus: full-corpus salting measurably
-    * LOSES wall time at realistic mixes because shipping every payload
-    * costs more than the straggler it removes (BENCH_skew.json; the
-    * reference's own parallel-processing lesson, changelog.md:447-453).
+    * input partition they clustered in. Round-robin deals one input
+    * partition's rows to consecutive tasks (after Spark's deterministic
+    * local sort), so k ≤ P heavy rows from one input partition land in k
+    * distinct tasks; a hash of the url put 3 of perfbench `skew_routed`'s
+    * 4 monsters in one task. Rows from different input partitions start
+    * at independent offsets and can still share a task. The shuffle
+    * carries only the rare big payloads instead of the whole corpus:
+    * full-corpus salting measurably LOSES wall time at realistic mixes
+    * because shipping every payload costs more than the straggler it
+    * removes (BENCH_skew.json; the reference's own parallel-processing
+    * lesson, changelog.md:447-453).
     * Input is scanned twice (once per branch) but the filter is a cheap
     * length check against a column the branch reads anyway, and each row
     * is PARSED exactly once. */
@@ -86,7 +89,7 @@ object ExtractPipeline {
     val size = length(col("html"))
     val small = pages.where(col("html").isNull || size <= heavyBytes)
     val heavy = pages.where(size > heavyBytes)
-      .repartition(pages.sparkSession.sessionState.conf.numShufflePartitions, xxhash64(col("url")))
+      .repartition(pages.sparkSession.sessionState.conf.numShufflePartitions)
     // Lineage key: (branch, partition_id). The explicit branch column makes
     // the key collision-proof at ANY partition count; partition_id itself
     // is the TASK's id, and since both branches execute inside the one

@@ -116,6 +116,17 @@ class AesEncryptionSpec extends AnyFunSuite {
     assert(r.pages.head.text == "AES Secret", s"got: [${r.pages.head.text}]")
   }
 
+  test("an AES document extracts exactly the text of its unencrypted original") {
+    // the loader returns its validating probe only for unencrypted documents;
+    // an encrypted one must still get a decrypting document
+    val pdf = buildAesV4((o, u, p) =>
+      s"<</Filter/Standard/V 4/R 4/Length 128/P $p/O <$o>/U <$u>" +
+        "/CF<</StdCF<</CFM/AESV2/AuthEvent/DocOpen/Length 16>>>>/StmF/StdCF/StrF/StdCF>>")
+    val original = Extract.extractText(SynthPdf.onePage("BT /F1 12 Tf 1 0 0 1 100 700 Tm (AES Secret) Tj ET"))
+    assert(original.ok && original.pages.map(_.text) == Vector("AES Secret"))
+    assert(Extract.extractText(pdf, "aes_user") == original)
+  }
+
   test("StrF=Identity leaves strings plaintext while StmF=AESV2 decrypts streams") {
     val pdf = buildAesV4((o, u, p) =>
       s"<</Filter/Standard/V 4/R 4/P $p/O <$o>/U <$u>" +

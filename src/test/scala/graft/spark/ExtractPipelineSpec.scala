@@ -6,8 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.catalyst.expressions.XxHash64
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -65,15 +64,36 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val branches = routed.collect().map(d => d.url -> d.branch).toMap
     assert(branches == rows.map(r => r.url -> (if (r.url == HeavyUrl) "salted" else "narrow")).toMap)
     // both plans have now run: narrow has no Exchange, routed exactly one,
-    // hash-partitioned by xxhash64 into spark.sql.shuffle.partitions
+    // round-robin into spark.sql.shuffle.partitions
     assert(shuffles(narrow).isEmpty, narrow.queryExecution.executedPlan)
     val routedShuffles = shuffles(routed)
     assert(routedShuffles.size == 1, routed.queryExecution.executedPlan)
-    routedShuffles.head.outputPartitioning match {
-      case HashPartitioning(Seq(_: XxHash64), n) =>
-        assert(n == spark.sessionState.conf.numShufflePartitions)
-      case other => fail(s"routed Exchange is not an xxhash64 hash partitioning: $other")
-    }
+    assert(routedShuffles.head.outputPartitioning ==
+      RoundRobinPartitioning(spark.sessionState.conf.numShufflePartitions))
+  }
+
+  test("heavy rows clustered in one input partition each get their own task") {
+    import spark.implicits._
+    val p = spark.sessionState.conf.numShufflePartitions
+    // p urls that repartition(p, xxhash64(url)) stacks in one task: its
+    // HashPartitioning places a row by pmod(hash(xxhash64(url)), p)
+    val urls = (0 until 64 * p).map(i => s"synth://pdf/monster-$i").toDS()
+      .select(col("value"), pmod(hash(xxhash64(col("value"))), lit(p)).as("bucket"))
+      .collect().groupBy(_.getInt(1)).values.find(_.length >= p).get.take(p).map(_.getString(0))
+    val ts = new java.sql.Timestamp(1704067200000L)
+    val monster = SynthPdf.multiPage(100)
+    assert(monster.length > heavyBytes)
+    val clustered = urls.toSeq.map(u => PageRow(u, ts, monster, null, "en")) ++
+      rows.filter(r => r.url != HeavyUrl)
+    val dir = Files.createTempDirectory("extract-clustered").resolve("pages").toString
+    spark.createDataset(clustered).coalesce(1).write.parquet(dir)
+    val input = spark.read.parquet(dir).as[PageRow]
+    assert(input.rdd.getNumPartitions == 1)
+    val routed = ExtractPipeline.extractSizeRouted(input, heavyBytes = heavyBytes)
+    val heavyTasks = routed.collect().filter(_.branch == "salted").map(d => d.url -> d.partition_id).toMap
+    assert(heavyTasks.keySet == urls.toSet)
+    assert(heavyTasks.values.toSet.size == p, heavyTasks)
+    assert(result(routed) == result(ExtractPipeline.extract(input)))
   }
 
   test("a null payload fails each entry point the way that entry point reports failures") {
