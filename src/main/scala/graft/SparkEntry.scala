@@ -2315,8 +2315,7 @@ object SparkEntry {
     }),
 
     "events_conversion_window" -> ((s, dir) => {
-      // batch twin of the stream-stream interval join (EventStreamsSpec
-      // proves parity): purchases within 10 min of a same-user click
+      // interval join: purchases within 10 min of a same-user click
       Relational.conversionWindow(docs(s, dir, "events"))
         .orderBy("click_id", "purchase_id")
     }),
@@ -2647,7 +2646,6 @@ object SparkEntry {
       // top-K domain; planted s1te999.co.uk must surface against the
       // corpus' dominant site999.co.uk (natural distance-1 siblings like
       // site0.com/site4.com surface too — the audit's point)
-      import s.implicits._
       val base = UrlOps.normalize(UrlOps.withRawUrls(
         docs(s, dir, "documents").select(col("doc_id"))))
       val planted = UrlOps.normalize(
@@ -3242,7 +3240,7 @@ object SparkEntry {
         .orderBy("bucket")
     }),
 
-    "dedup_lsh_tune" -> ((s, dir) => {
+    "dedup_lsh_tune" -> ((s, _) => {
       // LSH band planning at budget 128: exact fixed-point S-curves over
       // the 100 bucket midpoints, fp/fn areas vs the 0.7 target, argmin
       Dedup.lshTune(s).orderBy("bands")
@@ -3621,7 +3619,6 @@ object SparkEntry {
     "vlm_page_pairs" -> ((s, _) => {
       // (page image, page text) aligned pairs off ONE parse per document
       // — the VLM training-data export; png md5 + geometry + text pinned
-      import s.implicits._
       graft.ops.Multimodal.vlmPagePairs(
         PagesTable.ofFixtures(s, Seq("text.pdf", "multipage.pdf")))
         .toDF().orderBy("url", "page_idx")
@@ -3743,7 +3740,7 @@ object SparkEntry {
         .orderBy("from_type", "to_type")
     }),
 
-    "sitemap_coverage" -> ((s, dir) => {
+    "sitemap_coverage" -> ((s, _) => {
       // discovery-debt audit: sitemap urls vs crawled urls, full outer on
       // the url key, per-domain backlog/orphan counts
       graft.ops.Sitemaps.coverage(
@@ -3808,7 +3805,7 @@ object SparkEntry {
         .orderBy("drop_id")
     }),
 
-    "wat_export" -> ((s, dir) => {
+    "wat_export" -> ((s, _) => {
       // WAT metadata-sidecar export (completes the CC derivative family:
       // WARC ingest ⇄ WET ⇄ WAT ⇄ CDX): hand-framed fixed-key-order JSON
       // + WARC metadata record, md5-pinned; one narrow typed map

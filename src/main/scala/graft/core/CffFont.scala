@@ -11,7 +11,6 @@ import scala.collection.mutable
   * (OpenType) wrapper's `CFF ` table. Hints are skipped (hintmask operand
   * bytes consumed); rendering quality only. */
 final class CffFont(
-    data: Array[Byte],
     charStrings: IndexedSeq[Array[Byte]],
     gsubrs: IndexedSeq[Array[Byte]],
     fdPrivates: Array[(Double, Double, IndexedSeq[Array[Byte]])], // (defaultWidthX, nominalWidthX, local subrs) per FD
@@ -535,7 +534,7 @@ object CffFont {
       val scale = top.get(1207).filter(_.length >= 1).map(_.head)
         .filter(v => v > 0 && v < 1).getOrElse(0.001)
 
-      Some(new CffFont(data, charStrings, gsubrs, fdPrivates, fdSelect, isCid, gidToSid, sidName, scale))
+      Some(new CffFont(charStrings, gsubrs, fdPrivates, fdSelect, isCid, gidToSid, sidName, scale))
     } catch { case _: Exception => None }
   }
 }

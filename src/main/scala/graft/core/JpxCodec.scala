@@ -271,7 +271,7 @@ object JpxCodec {
     val qccs = Map.newBuilder[Int, QuantParams]
     val tileData = new java.io.ByteArrayOutputStream()
 
-    def parseCod(d: Array[Byte], o: Int, len: Int): CodingParams = {
+    def parseCod(d: Array[Byte], o: Int): CodingParams = {
       val scod = d(o) & 0xff
       val prog = d(o + 1) & 0xff
       val layers = u16(d, o + 2)
@@ -353,7 +353,7 @@ object JpxCodec {
             else {
               val l2 = u16(cs, j + 2)
               m2 match {
-                case 0x52 => cod = parseCod(cs, j + 4, l2 - 2) // COD in tile header
+                case 0x52 => cod = parseCod(cs, j + 4) // COD in tile header
                 case 0x5c => qcd = parseQcd(cs, j + 4, l2 - 2)
                 case 0x5e | 0x5f => throw new IllegalArgumentException("JPX: RGN/POC unsupported")
                 case 0x61 => throw new IllegalArgumentException("JPX: PPT unsupported")
@@ -394,7 +394,7 @@ object JpxCodec {
                 if (bpc > 16) throw new IllegalArgumentException("JPX: bpc > 16")
                 CompInfo(bpc, (ss & 0x80) != 0)
               }
-            case 0x52 => cod = parseCod(cs, o, len - 2)
+            case 0x52 => cod = parseCod(cs, o)
             case 0x53 => // COC
               val c = cs(o) & 0xff
               // Scoc has no layer/mct fields; re-shape into CodingParams
@@ -928,7 +928,7 @@ object JpxCodec {
           val ow = curW + hl.w
           val oh = curH + lh.h
           val a = new Array[Int](ow * oh)
-          interleave(cur, curW, curH, hl.coeffs, hl.w, lh.coeffs, lh.h, hh.coeffs, a, ow, oh)
+          interleave(cur, curW, hl.coeffs, hl.w, lh.coeffs, hh.coeffs, a, ow, oh)
           var y = 0
           while (y < oh) { sr53(a, y * ow, 1, ow); y += 1 }
           var x = 0
@@ -948,7 +948,7 @@ object JpxCodec {
           val ow = curW + hl.w
           val oh = curH + lh.h
           val a = new Array[Double](ow * oh)
-          interleaveD(cur, curW, curH, fOf(hl), hl.w, fOf(lh), lh.h, fOf(hh), a, ow, oh)
+          interleaveD(cur, curW, fOf(hl), hl.w, fOf(lh), fOf(hh), a, ow, oh)
           var y = 0
           while (y < oh) { sr97(a, y * ow, 1, ow); y += 1 }
           var x = 0
@@ -1003,9 +1003,9 @@ object JpxCodec {
     Decoded(w, h, nComps, csm.comps(0).bpc, planes)
   }
 
-  private def interleave(ll: Array[Int], llw: Int, llh: Int,
+  private def interleave(ll: Array[Int], llw: Int,
                          hl: Array[Int], hlw: Int,
-                         lh: Array[Int], lhh: Int,
+                         lh: Array[Int],
                          hh: Array[Int], out: Array[Int], ow: Int, oh: Int): Unit = {
     var y = 0
     while (y < oh) {
@@ -1373,9 +1373,9 @@ object JpxCodec {
     out.toByteArray
   }
 
-  private def interleaveD(ll: Array[Double], llw: Int, llh: Int,
+  private def interleaveD(ll: Array[Double], llw: Int,
                           hl: Array[Double], hlw: Int,
-                          lh: Array[Double], lhh: Int,
+                          lh: Array[Double],
                           hh: Array[Double], out: Array[Double], ow: Int, oh: Int): Unit = {
     var y = 0
     while (y < oh) {

@@ -53,7 +53,7 @@ final class PdfDocument private (
     cache.put(num, PdfNull) // cycle guard
     val result = xref.get(num) match {
       case Some(e) if e.kind == 1 => parseAt(e.offset, num, e.gen)
-      case Some(e) if e.kind == 2 => fromObjStm(e.objStmNum, e.idxInStm, num)
+      case Some(e) if e.kind == 2 => fromObjStm(e.objStmNum, num)
       case _ => PdfNull
     }
     cache.put(num, result)
@@ -100,7 +100,7 @@ final class PdfDocument private (
       walk(obj)
   }
 
-  private def fromObjStm(stmNum: Int, idx: Int, wantNum: Int): PdfObject = {
+  private def fromObjStm(stmNum: Int, wantNum: Int): PdfObject = {
     var table = objStmCache.get(stmNum)
     if (table == null) {
       table = getObject(stmNum) match {

@@ -48,7 +48,6 @@ object HtmlExtract {
     "pre", "dd", "dt", "figcaption", "hr", "body")
   private[html] val BoilerplateTags = Set("nav", "header", "footer", "aside", "form", "menu")
   private[html] val RawTextTags = Set("script", "style", "noscript", "template", "svg", "iframe")
-  private val IgnoreContentTags = Set("head") // except title/meta handled explicitly
 
   private val NamedEntities = Map(
     "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",

@@ -902,7 +902,7 @@ object Rasterizer {
       * is patternMatrix ∘ stream-default-CTM captured at scn time (§8.7.3.1
       * — pattern space is anchored to the page, not the paint-time CTM). */
     def paintTilingPattern(tile: PdfStream, base: Mat, clip: ClipRegion,
-                           uncolored: Int = -1): Unit = {
+                           uncolored: Int): Unit = {
       val td = tile.dict
       def numOf(key: String, dflt: Double): Double = doc.resolve(td(key)) match {
         case PdfNumber(v) => v; case _ => dflt
@@ -936,7 +936,7 @@ object Rasterizer {
       }
     }
     def walkCell(cellBytes: Array[Byte], patRes: PdfDict, cellCtm: Mat,
-                 clip: ClipRegion, uncolored: Int = -1): Unit =
+                 clip: ClipRegion, uncolored: Int): Unit =
       // PaintType 2 (uncolored): every mark paints in the scn-supplied
       // color; the cell's own color operators are ignored (§8.7.3.3)
       walk(doc, cellBytes, patRes, cellCtm, bmp, level + 1, initClip = Some(clip),
@@ -986,7 +986,7 @@ object Rasterizer {
 
     def doXObject(tag: String): Unit = doc.resolve(resources("XObject")) match {
       case xobjs: PdfDict => doc.resolve(xobjs(tag)) match {
-        case s @ PdfStream(xd, _)
+        case PdfStream(xd, _)
             if ocHidden || OptionalContent.isHidden(doc, xd("OC"), ocOff) =>
           () // default-OFF layer: do not paint the XObject
         case s @ PdfStream(xd, _) => doc.resolve(xd("Subtype")) match {
@@ -1577,8 +1577,8 @@ object Rasterizer {
   }
 
   @inline private def fillSpan(bmp: Bitmap, xa: Double, xb: Double, y: Int, argb: Int,
-                               clip: Clip, alpha: Double = 1.0, blend: Int = BlendNormal,
-                               smask: Array[Float] = null): Unit = {
+                               clip: Clip, alpha: Double, blend: Int,
+                               smask: Array[Float]): Unit = {
     var x = math.max(0, math.round(xa).toInt)
     var xe = math.min(bmp.width - 1, math.round(xb).toInt - 1)
     var mask: Array[Byte] = null

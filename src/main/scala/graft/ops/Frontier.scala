@@ -69,7 +69,6 @@ object Frontier {
     * 30..39 are discoverable-but-uncrawled, and every page's boilerplate
     * "Home" link makes each site root a candidate too. */
   def synthCrawledPages(spark: SparkSession): Dataset[PageRow] = {
-    import spark.implicits._
     LinkGraph.synthCorpus(spark, 40)
       .filter((p: PageRow) => p.warc_ts.getTime < 1704067200000L + 30 * 1000L)
   }

@@ -268,7 +268,6 @@ object Graph {
     * joins otherwise stack plans). */
   def hyperBall(nodes: DataFrame, edges: DataFrame, maxHops: Int): DataFrame = {
     val m = 64
-    val spark = nodes.sparkSession
     val h = Sampling.md5Mod(concat(lit("hb:"), col("id").cast("string")),
       Sketches.KmvDomain)
     var regs = nodes.select(col("id"), h.as("h"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import graft.spark.PageRow
 
 /** Composed PDF-corpus operators: pipelines that chain the core engine's

@@ -29,7 +29,6 @@ object Redirects {
     *             hops = 0); cycle: url's chain enters a loop → final_url
     *             '' and hops -1, admission pipelines drop these. */
   def resolve(urls: DataFrame, redirects: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = urls.sparkSession
     // mapping m: src → (cur, hops); invariant: cur is reachable from src
     // in exactly hops redirect steps, and every skipped prefix redirects.
     var m = redirects.select(col("src"), col("dst").as("cur"), lit(1L).as("hops"))

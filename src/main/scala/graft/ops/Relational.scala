@@ -105,8 +105,6 @@ object Relational {
     * event window, post = second half; arm = user parity. Output per arm:
     * (arm, n_users, theta_pm, mean_post_m, mean_adj_m). */
   def cuped(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val bounds = events.agg(
       unix_timestamp(min(col("ts"))).as("t0"),
       unix_timestamp(max(col("ts"))).as("t1")).head()
@@ -913,7 +911,6 @@ object Relational {
     * planted positives the detector must flag. Mirrored in SQL. */
   def synthBurst(spark: org.apache.spark.sql.SparkSession,
                  burstDays: Int = 3, perDay: Int = 400): DataFrame = {
-    import spark.implicits._
     spark.range(burstDays.toLong * perDay)
       .select((lit(900000L) + col("id")).as("event_id"),
         timestamp_seconds(lit(1706313600L) + expr(s"id div $perDay") * 86400L +
@@ -960,12 +957,11 @@ object Relational {
   }
 
   /** Conversion-window join: every purchase within `windowMinutes` after a
-    * click by the same user — the batch twin of the Structured Streaming
-    * stream-stream interval join ([[graft.spark.EventStreams]]). One
-    * user-keyed shuffle; the time window is a post-join predicate, so no
-    * per-key explosion beyond the window's true matches. Emits every
-    * qualifying (click, purchase) pair — exactly the multiplicity the
-    * streaming interval join produces. */
+    * click by the same user. One user-keyed shuffle; the time window is a
+    * post-join predicate, so no per-key explosion beyond the window's true
+    * matches. Emits every qualifying (click, purchase) pair; the
+    * `events_conversion_window` query checks the rows against its DuckDB
+    * oracle. */
   def conversionWindow(events: DataFrame, windowMinutes: Int = 10): DataFrame = {
     val clicks = events.where(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("click_ts"))

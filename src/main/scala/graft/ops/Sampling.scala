@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Deterministic corpus sampling — the mixture-control step of a training
   * pipeline (per-source rates: keep all of wiki, 10% of web, …).

@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.Dataset
 import graft.core.PdfDocument
 
 /** Typed rows of the distributed full-document carrier ([[ExtractPipeline.extractDoc]]).

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.core.Extract
 
@@ -193,10 +193,13 @@ object ExtractPipeline {
   }
 }
 
-/** Checkpoint-resume at group granularity (SURVEY.md §2.10). A row belongs
-  * to group pmod(xxhash64(url), groups). Each group is extracted from its
-  * full slice of the input into `$outDir/group=$g` with OVERWRITE, and only
-  * after that write returns does the driver create one empty marker file,
+/** Checkpoint-resume at group granularity (SURVEY.md §2.10). A group is a
+  * set of input files: a row belongs to the group
+  * pmod(xxhash64(_metadata.file_name), groups) of the file it was read from.
+  * Spark prunes that filter at file listing, so each group's job opens only
+  * its own files and a run reads every input row once. Each group is
+  * extracted into `$outDir/group=$g` with OVERWRITE, and only after that
+  * write returns does the driver create one empty marker file,
   * `$outDir/_committed/$g-of-$groups`. A single file create cannot land
   * half-way, so a group is committed whole or redone whole: the idea of
   * Delta Lake's one-commit log, applied per group. Spark's file index skips
@@ -204,21 +207,26 @@ object ExtractPipeline {
   * output. */
 object ResumableExtract {
 
-  /** Extracts every group of `pages` that has no marker under `outDir`. The
-    * markers are listed once on the driver, so a settled rerun submits no
-    * Spark job. Throws IllegalArgumentException, writing nothing, when a
-    * marker was written with another `groups` value: group membership
-    * depends on it, and mixing two values would duplicate rows. */
-  def run(spark: SparkSession, pages: Dataset[PageRow], outDir: String, groups: Int): Unit = {
+  /** Extracts every group of `pages` that has no marker under `outDir`.
+    * `pages` must be a file-source scan (`spark.read.parquet(dir)`), since
+    * groups are read from its `_metadata` column. Any other Dataset throws
+    * AnalysisException (UNRESOLVED_COLUMN on `_metadata`) when the first
+    * group's query is built, before anything is written. The markers are
+    * listed once on the driver, so a settled rerun submits no Spark job.
+    * Throws IllegalArgumentException, writing nothing, when a marker was
+    * written with another `groups` value: group membership depends on it,
+    * and mixing two values would duplicate rows. An `outDir` whose groups
+    * were cut by url hash, as earlier versions did, must be started fresh. */
+  def run(pages: Dataset[PageRow], outDir: String, groups: Int): Unit = {
     val markers = new org.apache.hadoop.fs.Path(outDir, "_committed")
-    val fs = markers.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = markers.getFileSystem(pages.sparkSession.sessionState.newHadoopConf())
     val committed =
       if (fs.exists(markers)) fs.listStatus(markers).map(_.getPath.getName).toSet else Set.empty[String]
     val foreign = committed.filterNot(_.endsWith(s"-of-$groups"))
     require(foreign.isEmpty,
       s"$markers holds markers of another groups value (${foreign.mkString(", ")}); run with that value")
     for (g <- 0 until groups if !committed(s"$g-of-$groups")) {
-      ExtractPipeline.extract(pages.where(pmod(xxhash64(col("url")), lit(groups)) === g))
+      ExtractPipeline.extract(pages.where(pmod(xxhash64(col("_metadata.file_name")), lit(groups)) === g))
         .write.mode("overwrite").parquet(s"$outDir/group=$g")
       fs.create(new org.apache.hadoop.fs.Path(markers, s"$g-of-$groups"), false).close()
     }

@@ -3,9 +3,8 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSessionFixture
-import graft.spark.EventStreams
 
-/** Wave 67: dedup bias audit, assortativity moments, watermark drop audit. */
+/** Wave 67: assortativity moments. */
 class Wave67Spec extends AnyFunSuite {
 
   lazy val spark = SparkSessionFixture.spark
@@ -21,29 +20,5 @@ class Wave67Spec extends AnyFunSuite {
     val k4 = (for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)).toDF("src", "dst")
     val c = Graph.assortativity(k4).collect()(0)
     assert(c.getLong(4) == 0L && c.getLong(5) == 0L)
-  }
-
-  test("streaming watermark drop audit: resumed run reports late rows") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("late").toString
-    val in = s"$tmp/in"; val out = s"$tmp/out"; val cp = s"$tmp/cp"
-    def ev(id: Long, h: Int, mi: Int) =
-      (id, java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$mi%02d:00"), 1L, "click", 1.0, "{}")
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    // batch 1: events 10:00..14:00 → final watermark = 14:00 − 2 h = 12:00
-    Seq(ev(1, 10, 0), ev(2, 11, 30), ev(3, 14, 0)).toDF(cols: _*)
-      .write.mode("append").parquet(in)
-    val dropped1 = EventStreams.windowedCountsAudited(spark, in, out, cp)
-    assert(dropped1 == 0L)
-    // batch 2 (same checkpoint): an 08:00 straggler is beyond the carried
-    // watermark and must be DROPPED AND COUNTED; 14:30 advances normally
-    Seq(ev(4, 8, 0), ev(5, 14, 30)).toDF(cols: _*)
-      .write.mode("append").parquet(in)
-    val dropped2 = EventStreams.windowedCountsAudited(spark, in, out, cp)
-    assert(dropped2 >= 1L, s"late row must be reported, got $dropped2")
-    // and the 08:00 window never reaches the output
-    val outRows = spark.read.parquet(out)
-    assert(outRows.where(col("w_start") ===
-      java.sql.Timestamp.valueOf("2024-01-01 08:00:00")).count() == 0)
   }
 }

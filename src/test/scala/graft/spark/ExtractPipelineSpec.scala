@@ -1,11 +1,11 @@
 package graft.spark
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{AnalysisException, Dataset}
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -35,12 +35,19 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       PageRow(NullUrl, ts, null, null, "en")
   }
 
-  /** The corpus as a parquet scan, the way extraction reads its input. */
+  /** The corpus as a parquet scan, the way extraction reads its input: three
+    * files with fixed names, since ResumableExtract groups rows by file name
+    * and Spark gives each write's part files a fresh UUID. */
   private lazy val pages: Dataset[PageRow] = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("extract-corpus").resolve("pages").toString
-    spark.createDataset(rows).repartition(3).write.parquet(dir)
-    spark.read.parquet(dir).as[PageRow]
+    val dir = Files.createTempDirectory("extract-corpus").resolve("pages")
+    spark.createDataset(rows).repartition(3).write.parquet(dir.toString)
+    val written = Files.list(dir).iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+    val (parts, rest) = written.partition(_.getFileName.toString.startsWith("part-"))
+    assert(parts.size == 3, written)
+    rest.foreach(Files.delete)
+    parts.zipWithIndex.foreach { case (f, i) => Files.move(f, dir.resolve(s"pages-$i.parquet")) }
+    spark.read.parquet(dir.toString).as[PageRow]
   }
 
   /** Every payload but the heavy one is at most this many bytes. */
@@ -125,18 +132,21 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       root.relativize(f).toString -> (Files.getLastModifiedTime(f).toMillis, Files.readAllBytes(f).toSeq)
     }.toMap
 
-  private def resume(out: Path, groups: Int): Unit = ResumableExtract.run(spark, pages, out.toString, groups)
+  private def resume(out: Path, groups: Int): Unit = ResumableExtract.run(pages, out.toString, groups)
 
-  /** Spark jobs started while `body` runs. The listener bus delivers in
-    * order, so once a marker job submitted after `body` has reached the
-    * listener, so has every job `body` started. */
-  private def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs started while `body` runs, and the input rows their tasks
+    * read. The listener bus delivers in order, so once a marker job
+    * submitted after `body` has reached the listener, so has every job
+    * start and task end that `body` caused. */
+  private def jobsDuring(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
-    val (started, markers) = (new AtomicInteger, new AtomicInteger)
+    val (started, markers, read) = (new AtomicInteger, new AtomicInteger, new AtomicLong)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) markers.incrementAndGet()
         else started.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
     }
     sc.addSparkListener(listener)
     try {
@@ -147,7 +157,7 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       while (markers.get == 0 && System.nanoTime() - t0 < 10000000000L) Thread.sleep(2)
       assert(markers.get == 1, "the marker job never reached the listener")
     } finally sc.removeSparkListener(listener)
-    started.get
+    (started.get, read.get)
   }
 
   /** A first run with groups = 2, a crash that `crash` leaves in group 0's
@@ -157,7 +167,7 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val out = Files.createTempDirectory("resume-run").resolve("out")
     resume(out, 2)
     for (g <- 0 to 1) {
-      assert(Files.isDirectory(out.resolve(s"group=$g")), s"group=$g")
+      assert(spark.read.parquet(out.resolve(s"group=$g").toString).count() > 0, s"group=$g is empty")
       assert(Files.exists(out.resolve(s"_committed/$g-of-2")), s"marker $g")
     }
     val group1 = (m: Map[String, (Long, Seq[Byte])]) =>
@@ -190,16 +200,34 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val out = Files.createTempDirectory("resume-settled").resolve("out")
     resume(out, 2)
     val settled = files(out.getParent)
-    assert(jobsDuring(resume(out, 2)) == 0)
+    assert(jobsDuring(resume(out, 2)) == (0, 0L))
     assert(files(out.getParent) == settled)
   }
 
   test("ResumableExtract.run with another groups value throws and writes nothing") {
+    import spark.implicits._
     val out = Files.createTempDirectory("resume-groups").resolve("out")
     resume(out, 2)
     val landed = files(out)
     intercept[IllegalArgumentException](resume(out, 3))
     assert(files(out) == landed)
+    // a Dataset that is not a file scan has no _metadata to group by
+    val fresh = Files.createTempDirectory("resume-input").resolve("out")
+    intercept[AnalysisException](ResumableExtract.run(spark.createDataset(rows), fresh.toString, 2))
+    assert(!Files.exists(fresh))
+  }
+
+  test("ResumableExtract.run reads each input row once, in one job per uncommitted group") {
+    assert(pages.inputFiles.length == 3) // writes the corpus before any run is counted
+    for (groups <- Seq(1, 4, 16)) {
+      val out = Files.createTempDirectory("resume-reads").resolve("out")
+      assert(jobsDuring(resume(out, groups)) == (groups, rows.size.toLong), s"groups = $groups")
+      // redo every other group: each reads only its own files
+      val redo = 0 until groups by 2
+      redo.foreach(g => Files.delete(out.resolve(s"_committed/$g-of-$groups")))
+      val redoRows = redo.map(g => spark.read.parquet(out.resolve(s"group=$g").toString).count()).sum
+      assert(jobsDuring(resume(out, groups)) == (redo.size, redoRows), s"groups = $groups, redo $redo")
+    }
   }
 
   test("a first ResumableExtract.run logs no FileNotFoundException") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSessionFixture
 
 /** End-to-end pipeline semantics: extraction over the synthesized skewed
-  * table, per-partition metrics, streaming carrier. */
+  * table and per-partition metrics. */
 class PipelineSpec extends AnyFunSuite {
 
   lazy val spark = SparkSessionFixture.spark
@@ -57,22 +57,5 @@ class PipelineSpec extends AnyFunSuite {
     assert(m.length == 6)
     assert(m.map(r => r.getAs[Long]("docs")).sum == 96)
     assert(m.forall(r => r.getAs[Long]("decode_failures") == 0L))
-  }
-
-  test("structured-streaming carrier: AvailableNow + checkpoint resume") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream").toString
-    val in = s"$tmp/in"; val out = s"$tmp/out"; val cp = s"$tmp/cp"
-    PagesTable.synthesize(spark, 20, 2).write.mode("append").parquet(in)
-    StreamingExtract.run(spark, in, out, cp)
-    assert(spark.read.parquet(out).count() == 20)
-    // new files arrive; checkpoint ensures only they are processed
-    PagesTable.synthesize(spark, 30, 2).filter(col("url").isNotNull)
-      .withColumn("url", concat(lit("b2-"), col("url"))).as[PageRow]
-      .write.mode("append").parquet(in)
-    StreamingExtract.run(spark, in, out, cp)
-    val res = spark.read.parquet(out)
-    assert(res.count() == 50)
-    assert(res.select("url").distinct().count() == 50)
   }
 }
