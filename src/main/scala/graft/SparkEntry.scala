@@ -1183,7 +1183,7 @@ object SparkEntry {
       s.createDataset(fixtures).flatMap { case (name, bytes) =>
         val doc = graft.core.PdfDocument.load(bytes, "").toOption.get
         doc.pages.zipWithIndex.flatMap { case (p, pi) =>
-          p.textPage.textObjects.filter(_.chars.nonEmpty)
+          p.textPage.textObjects
             .map(o => (o.font.baseFont, o.font.baseNameNoSubset, o.font.isEmbedded))
             .distinct
             .map { case (raw, base, emb) =>

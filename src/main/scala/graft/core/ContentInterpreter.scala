@@ -2,40 +2,64 @@ package graft.core
 
 import scala.collection.mutable
 
-/** One decoded glyph occurrence inside a show-text op, positioned in device
-  * (page) space. `unicode` may be multi-char (ligatures → pieces, like
-  * PDFium's CharType::kPiece). */
-final case class RawChar(
-    code: Int,
-    unicode: String,
-    ox: Double, oy: Double,          // pen origin (baseline start), device space
-    ex: Double, ey: Double,          // pen after advance, device space
-    tight: Option[Rect],             // glyph outline bbox, device space; None = no outline
-    loose: Rect,                     // origin..advance × descent..ascent, device space
-    fontSize: Double,                // nominal (text-space) size
-    effFontSize: Double,             // size scaled into device space
-    xOff: Double = 0.0)              // text-space advance offset at glyph origin
+/** The glyphs a page's show-text operators placed, in content order, as
+  * one struct-of-arrays store (PDFium keeps one CharInfo vector per page;
+  * the store holds the positioned glyphs that vector is assembled from).
+  * Glyph `g` carries its charcode, its unicode (possibly multi-char:
+  * ligatures become pieces, like PDFium's CharType::kPiece; empty when
+  * unmappable), its pen origin in device space, its text-space advance
+  * offset from its object's origin, and the TJ kern gap pending before it
+  * (device pts, 0 when none). Its boxes follow from these and its
+  * [[TextObject]]'s text state, which computes them when asked. */
+final class GlyphStore private[core] () {
+  private var n = 0
+  private var codes = new Array[Int](16)
+  private var unis = new Array[String](16)
+  private var pens = new Array[Double](16 * 4) // ox, oy, xOff, kernBefore
 
-/** Pending horizontal gap from a TJ kern entry, in device-space pts. */
-final case class RawKern(gap: Double)
+  def length: Int = n
+  def code(g: Int): Int = codes(g)
+  def unicode(g: Int): String = unis(g)
+  def ox(g: Int): Double = pens(4 * g)
+  def oy(g: Int): Double = pens(4 * g + 1)
+  /** Text-space advance offset of the glyph origin from its object's origin. */
+  def xOff(g: Int): Double = pens(4 * g + 2)
+  def kernBefore(g: Int): Double = pens(4 * g + 3)
 
-/** One show-text operator (= one PDFium CPDF_TextObject). */
-final case class RawTextObject(
-    chars: Vector[RawChar],
-    kernsBefore: Map[Int, Double],   // char index -> device gap inserted just before it
-    font: PdfFontDecoder,
-    fontSize: Double,
-    effFontSize: Double,
-    baselineY: Double,               // device-space baseline y at object start
-    startX: Double,
-    dirX: Double, dirY: Double,      // unit baseline direction in device space
-    base: Mat = Mat.identity,        // text space (pre-font-size) -> page space
-    hscale: Double = 1.0,
-    rise: Double = 0.0,
-    fillArgb: Int = 0xFF000000,      // nonstroking color at show time
-    fillAlpha: Double = 1.0,         // ExtGState /ca at show time
-    blendName: String = "Normal",    // ExtGState /BM at show time
-    ocHidden: Boolean = false) {     // inside a default-OFF optional-content group
+  private[core] def add(code: Int, unicode: String, ox: Double, oy: Double, xOff: Double, kernBefore: Double): Unit = {
+    if (n == codes.length) {
+      val cap = 2 * n
+      codes = java.util.Arrays.copyOf(codes, cap)
+      unis = java.util.Arrays.copyOf(unis, cap)
+      pens = java.util.Arrays.copyOf(pens, 4 * cap)
+    }
+    codes(n) = code; unis(n) = unicode
+    pens(4 * n) = ox; pens(4 * n + 1) = oy; pens(4 * n + 2) = xOff; pens(4 * n + 3) = kernBefore
+    n += 1
+  }
+}
+
+/** One show-text operator (= one PDFium CPDF_TextObject): the glyphs
+  * [start, end) of the page's [[GlyphStore]] (never empty), with the text
+  * state they were shown in. Its bbox is unioned once, at construction. */
+final class TextObject private[core] (
+    val glyphs: GlyphStore,
+    val start: Int,
+    val end: Int,
+    val font: PdfFontDecoder,
+    val fontSize: Double,
+    val effFontSize: Double,         // size scaled into device space
+    val baselineY: Double,           // device-space baseline y at object start
+    val startX: Double,
+    val endX: Double, val endY: Double, // pen after the last glyph's advance, device space
+    val dirX: Double, val dirY: Double, // unit baseline direction in device space
+    val base: Mat,                   // text space (pre-font-size) -> page space
+    val hscale: Double,
+    val rise: Double,
+    val fillArgb: Int,               // nonstroking color at show time
+    val fillAlpha: Double,           // ExtGState /ca at show time
+    val blendName: String,           // ExtGState /BM at show time
+    val ocHidden: Boolean) {         // inside a default-OFF optional-content group
 
   /** Coordinate of a device point along the baseline direction. */
   @inline def par(x: Double, y: Double): Double = x * dirX + y * dirY
@@ -44,8 +68,57 @@ final case class RawTextObject(
   /** Union of tight boxes — PDFium skips text objects whose rect is
     * zero-width (this is what drops space-only justified-line tails; see
     * golden text_extract.txt / tests/test_textpage.py count 438). */
-  lazy val bbox: Option[Rect] =
-    chars.flatMap(_.tight).reduceOption(_ union _)
+  def bbox: Option[Rect] =
+    if (bboxQuad(0).isNaN) None else Some(Rect(bboxQuad(0), bboxQuad(1), bboxQuad(2), bboxQuad(3)))
+  /** Width of [[bbox]]; NaN when there is none. */
+  private[core] def bboxWidth: Double = bboxQuad(2) - bboxQuad(0)
+
+  private val fsh = fontSize * hscale
+
+  /** Writes glyph `g`'s tight (outline) box in device space into `out` at
+    * `at`; false, writing nothing, when the glyph has no outline. */
+  def tightInto(g: Int, out: Array[Double], at: Int): Boolean =
+    font.glyphBBox(glyphs.code(g)) match {
+      case Some(b) =>
+        val x = glyphs.xOff(g)
+        base.onRectInto(x + b.left * fsh, rise + b.bottom * fontSize, x + b.right * fsh, rise + b.top * fontSize, out, at)
+        true
+      case None => false
+    }
+
+  // (left, bottom, right, top) union of the tight boxes in show order; NaN = none
+  private val bboxQuad = {
+    val q = Array(Double.NaN, Double.NaN, Double.NaN, Double.NaN)
+    val box = new Array[Double](4)
+    var g = start
+    while (g < end) {
+      if (tightInto(g, box, 0)) {
+        if (q(0).isNaN) System.arraycopy(box, 0, q, 0, 4)
+        else {
+          q(0) = math.min(q(0), box(0)); q(1) = math.min(q(1), box(1))
+          q(2) = math.max(q(2), box(2)); q(3) = math.max(q(3), box(3))
+        }
+      }
+      g += 1
+    }
+    q
+  }
+
+  /** Glyph `g`'s loose box in device space: its origin..advance ×
+    * descent..ascent. */
+  def loose(g: Int): Rect = {
+    val x = glyphs.xOff(g)
+    base.onRect(Rect(x, rise + font.descent / 1000.0 * fontSize,
+      x + font.advance(glyphs.code(g)) * fsh, rise + font.ascent / 1000.0 * fontSize))
+  }
+
+  /** The object's own extracted text: its glyphs' unicode, concatenated. */
+  def text: String = {
+    val sb = new java.lang.StringBuilder(end - start)
+    var g = start
+    while (g < end) { sb.append(glyphs.unicode(g)); g += 1 }
+    sb.toString
+  }
 }
 
 /** Page object info for get_objects()-style enumeration
@@ -54,14 +127,13 @@ final case class PageObjectInfo(
     objType: String,                 // text | path | image | shading | form
     bounds: Rect,
     level: Int,
-    text: String,                    // text objects: decoded string
     fontName: String,
     fontSize: Double,
     imgWidth: Int, imgHeight: Int,   // image objects (pixels)
     imgBpc: Int,
     imgColorspace: String,
     imgFilters: Vector[String],
-    raw: Option[RawTextObject],
+    raw: Option[TextObject],
     mcid: Int = -1,                  // marked-content id (BDC /MCID), -1 if none
     imgCtm: Option[Mat] = None,      // image objects: unit-square → page-space CTM at draw
     xobjName: String = "",           // image objects: the /XObject resource tag
@@ -74,12 +146,15 @@ final case class PageObjectInfo(
     span: Option[(Int, Int)] = None,
     /** CTM in effect at span start (spans exclude their surrounding
       * cm/q state) — what a rewrite must invert to SET a device matrix. */
-    ctmAtSpan: Option[Mat] = None)
+    ctmAtSpan: Option[Mat] = None) {
+  /** Text objects: the decoded string, built on first read. */
+  lazy val text: String = raw.fold("")(_.text)
+}
 
 /** Content-stream interpreter: tokenizes and executes the operator stream
   * (PDF 32000-1 §8-9), maintaining the q/Q CTM stack and the full text state
   * (Tf/Tc/Tw/Tz/TL/Ts/Td/TD/Tm/T*), descending into Form XObjects with a
-  * depth bound (reference page.py:283-284). Emits positioned RawTextObjects
+  * depth bound (reference page.py:283-284). Emits positioned TextObjects
   * for the text-page assembler and PageObjectInfo rows for object listing.
   */
 object ContentInterpreter {
@@ -112,13 +187,14 @@ object ContentInterpreter {
     var rise: Double = 0
   }
 
-  final case class Result(textObjects: Vector[RawTextObject], objects: Vector[PageObjectInfo])
+  final case class Result(glyphs: GlyphStore, textObjects: Vector[TextObject], objects: Vector[PageObjectInfo])
 
   def run(page: PdfPage): Result = {
     val doc = page.doc
     val ocOff = OptionalContent.offRefs(doc)
     val fontCache = mutable.Map[String, PdfFontDecoder]()
-    val textObjs = Vector.newBuilder[RawTextObject]
+    val glyphs = new GlyphStore
+    val textObjs = Vector.newBuilder[TextObject]
     // ArrayBuffer (not a builder): span patching at ET/Do/paint needs to
     // update the just-emitted object in place
     val objs = mutable.ArrayBuffer[PageObjectInfo]()
@@ -177,13 +253,15 @@ object ContentInterpreter {
         val base = operands.length - n
         var i = 0
         while (i < n) {
-          out(i) = operands.lift(base + i) match { case Some(PdfNumber(v)) => v; case _ => 0.0 }
+          val at = base + i
+          out(i) = if (at < 0) 0.0 else operands(at) match { case PdfNumber(v) => v; case _ => 0.0 }
           i += 1
         }
         out
       }
       @inline def addPt(x: Double, y: Double): Unit = {
-        val (dx, dy) = gs.ctm.onPoint(x, y)
+        val dx = gs.ctm.onX(x, y)
+        val dy = gs.ctm.onY(x, y)
         if (dx < pathMinX) pathMinX = dx
         if (dy < pathMinY) pathMinY = dy
         if (dx > pathMaxX) pathMaxX = dx
@@ -197,25 +275,20 @@ object ContentInterpreter {
       def flushPath(painted: Boolean): Unit = {
         if (pathHasPts && painted) {
           objs += PageObjectInfo("path", Rect(pathMinX, pathMinY, pathMaxX, pathMaxY),
-            level, "", "", 0, 0, 0, 0, "", Vector.empty, None)
+            level, "", 0, 0, 0, 0, "", Vector.empty, None)
         }
         pathMinX = Double.MaxValue; pathMinY = Double.MaxValue
         pathMaxX = Double.MinValue; pathMaxY = Double.MinValue
         pathHasPts = false
       }
 
-      def showText(strBytes: Array[Byte], perCharKerns: Vector[(Int, Double)] = Vector.empty): Unit = {
-        val _ = perCharKerns
-        showItems(Vector(PdfString(strBytes)))
-      }
+      def showText(strBytes: Array[Byte]): Unit = showItems(Vector(PdfString(strBytes)))
 
       /** Execute a TJ-style item sequence (strings + kern numbers). */
       def showItems(items: Vector[PdfObject]): Unit = {
         if (ts.font == null) return
         val font = ts.font
-        val chars = Vector.newBuilder[RawChar]
-        val kerns = mutable.Map[Int, Double]()
-        var charIdx = 0
+        val start = glyphs.length
         var pendingKern = 0.0
         // Per-object frame: within one show op the text matrix only gains
         // translate(tx, 0) compositions, so every per-char quantity is the
@@ -223,12 +296,12 @@ object ContentInterpreter {
         // accumulated advance X — no per-char matrix products.
         val base = ts.tm.multiply(gs.ctm) // text space (pre-font-size) → device
         val fs = ts.fontSize
-        val fsh = fs * ts.hscale
+        val rise = ts.rise
         val scaleAB = math.hypot(base.a, base.b)
         val effSize0 = fs * math.hypot(base.c, base.d)
         val effSize = if (effSize0 > 0) effSize0 else fs
-        val objOrigin = base.onPoint(0, ts.rise)
         var x = 0.0 // accumulated advance in text-space units
+        var endX = 0.0 // advance at the end of the last glyph
         items.foreach {
           case PdfNumber(v) =>
             val tx = -v / 1000.0 * fs * ts.hscale
@@ -240,35 +313,30 @@ object ContentInterpreter {
             var i = 0
             while (i < codes.length) {
               val code = codes(i)
-              if (pendingKern > 0) { kerns(charIdx) = pendingKern; pendingKern = 0.0 }
-              val uni = font.unicode(code)
               val w0 = font.advance(code)
-              val (ox, oy) = base.onPoint(x, ts.rise)
               val isSpaceByte = code == 32 && !font.isType0
               val tx = (w0 * fs + ts.charSp + (if (isSpaceByte) ts.wordSp else 0.0)) * ts.hscale
-              val (ex, ey) = base.onPoint(x + tx, ts.rise)
-              val tight = font.glyphBBox(code).map(b => base.onRect(Rect(
-                x + b.left * fsh, ts.rise + b.bottom * fs, x + b.right * fsh, ts.rise + b.top * fs)))
-              val loose = base.onRect(Rect(
-                x, ts.rise + font.descent / 1000.0 * fs, x + w0 * fsh, ts.rise + font.ascent / 1000.0 * fs))
-              val uniOut = if (uni.nonEmpty) uni else ""
-              chars += RawChar(code, uniOut, ox, oy, ex, ey, tight, loose, fs, effSize, x)
-              charIdx += 1
+              val kern = if (pendingKern > 0) { val gap = pendingKern; pendingKern = 0.0; gap } else 0.0
+              glyphs.add(code, font.unicode(code), base.onX(x, rise), base.onY(x, rise), x, kern)
               x += tx
+              endX = x
               i += 1
             }
           case _ => ()
         }
         ts.tm = Mat.identity.translate(x, 0).multiply(ts.tm)
-        val built = chars.result()
-        if (built.nonEmpty) {
+        if (glyphs.length > start) {
+          val originX = base.onX(0, rise)
+          val originY = base.onY(0, rise)
           // baseline direction: image of the text-space x axis
-          val (dx, dy) = if (scaleAB > 1e-12) (base.a / scaleAB, base.b / scaleAB) else (1.0, 0.0)
-          val obj = RawTextObject(built, kerns.toMap, font, fs, effSize, objOrigin._2, objOrigin._1, dx, dy,
-            base, ts.hscale, ts.rise, gs.fillArgb, gs.fillAlpha, gs.blendName, curOcHidden)
+          val unit = scaleAB > 1e-12
+          val obj = new TextObject(glyphs, start, glyphs.length, font, fs, effSize, originY, originX,
+            base.onX(endX, rise), base.onY(endX, rise),
+            if (unit) base.a / scaleAB else 1.0, if (unit) base.b / scaleAB else 0.0,
+            base, ts.hscale, rise, gs.fillArgb, gs.fillAlpha, gs.blendName, curOcHidden)
           textObjs += obj
-          objs += PageObjectInfo("text", obj.bbox.getOrElse(Rect(objOrigin._1, objOrigin._2, objOrigin._1, objOrigin._2)),
-            level, built.map(_.unicode).mkString, font.baseNameNoSubset, ts.fontSize,
+          objs += PageObjectInfo("text", obj.bbox.getOrElse(Rect(originX, originY, originX, originY)),
+            level, font.baseNameNoSubset, ts.fontSize,
             0, 0, 0, "", Vector.empty, Some(obj), curMcid)
         }
       }
@@ -300,7 +368,7 @@ object ContentInterpreter {
                     Rect(xs.min.toDouble, ys.min.toDouble, xs.max.toDouble, ys.max.toDouble)
                   }
                   objs += PageObjectInfo("image", bounds, level,
-                    "", "", 0, w, h, bpc, cs, filters, None, curMcid,
+                    "", 0, w, h, bpc, cs, filters, None, curMcid,
                     imgCtm = Some(gs.ctm), xobjName = tag)
                 case PdfName("Form") =>
                   val formRes = doc.resolve(xd("Resources")) match { case d: PdfDict => d; case _ => resources }
@@ -311,7 +379,7 @@ object ContentInterpreter {
                     case _ => Mat.identity
                   }
                   objs += PageObjectInfo("form", gs.ctm.onRect(Rect(0, 0, 1, 1)), level,
-                    "", "", 0, 0, 0, 0, "", Vector.empty, None)
+                    "", 0, 0, 0, 0, "", Vector.empty, None)
                   // optional-content state crosses the form boundary: text
                   // inside a hidden layer (or a form with its own OFF /OC)
                   // must stamp ocHidden so the render overlay skips it
@@ -363,7 +431,7 @@ object ContentInterpreter {
                 case other => other
               }
               objs += PageObjectInfo("image", gs.ctm.onRect(Rect(0, 0, 1, 1)), level,
-                "", "", 0, w, h, bpc, csName, Vector.empty, None, curMcid)
+                "", 0, w, h, bpc, csName, Vector.empty, None, curMcid)
               done = true
             } else if (t.isEmpty) { lx.parseObject() }
           }
@@ -532,7 +600,7 @@ object ContentInterpreter {
               case "W" | "W*" => () // clipping: keep path for the paint op that follows
               case "sh" =>
                 objs += PageObjectInfo("shading", gs.ctm.onRect(Rect(0, 0, 1, 1)), level,
-                  "", "", 0, 0, 0, 0, "", Vector.empty, None)
+                  "", 0, 0, 0, 0, "", Vector.empty, None)
               // nonstroking color state (stamped onto text objects so the
               // rasterizer can fill glyphs in the right color)
               case "g" =>
@@ -584,7 +652,7 @@ object ContentInterpreter {
     }
 
     exec(page.contentBytes, page.resources, Mat.identity, 0)
-    Result(textObjs.result(), objs.toVector)
+    Result(glyphs, textObjs.result(), objs.toVector)
   }
 
   /** get_objects analog with type filter + max depth (page.py:274-325). */

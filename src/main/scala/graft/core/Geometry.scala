@@ -23,16 +23,27 @@ final case class Mat(a: Double, b: Double, c: Double, d: Double, e: Double, f: D
     multiply(Mat(if (vertical) -1 else 1, 0, 0, if (horizontal) -1 else 1, 0, 0))
   def skew(xDeg: Double, yDeg: Double): Mat =
     multiply(Mat(1, math.tan(math.toRadians(yDeg)), math.tan(math.toRadians(xDeg)), 1, 0, 0))
-  def onPoint(x: Double, y: Double): (Double, Double) = (a * x + c * y + e, b * x + d * y + f)
+  def onPoint(x: Double, y: Double): (Double, Double) = (onX(x, y), onY(x, y))
+  @inline def onX(x: Double, y: Double): Double = a * x + c * y + e
+  @inline def onY(x: Double, y: Double): Double = b * x + d * y + f
   /** Transform a rect: transform 4 corners, take min/max (matrix.py on_rect). */
   def onRect(r: Rect): Rect = {
-    val p1 = onPoint(r.left, r.bottom); val p2 = onPoint(r.right, r.bottom)
-    val p3 = onPoint(r.left, r.top); val p4 = onPoint(r.right, r.top)
-    Rect(
-      math.min(math.min(p1._1, p2._1), math.min(p3._1, p4._1)),
-      math.min(math.min(p1._2, p2._2), math.min(p3._2, p4._2)),
-      math.max(math.max(p1._1, p2._1), math.max(p3._1, p4._1)),
-      math.max(math.max(p1._2, p2._2), math.max(p3._2, p4._2)))
+    val out = new Array[Double](4)
+    onRectInto(r.left, r.bottom, r.right, r.top, out, 0)
+    Rect(out(0), out(1), out(2), out(3))
+  }
+  /** [[onRect]] of (left, bottom, right, top), written as a quadruple into
+    * `out` at `at` — the form the per-glyph box stores take. */
+  def onRectInto(left: Double, bottom: Double, right: Double, top: Double,
+                 out: Array[Double], at: Int): Unit = {
+    val x1 = onX(left, bottom); val y1 = onY(left, bottom)
+    val x2 = onX(right, bottom); val y2 = onY(right, bottom)
+    val x3 = onX(left, top); val y3 = onY(left, top)
+    val x4 = onX(right, top); val y4 = onY(right, top)
+    out(at) = math.min(math.min(x1, x2), math.min(x3, x4))
+    out(at + 1) = math.min(math.min(y1, y2), math.min(y3, y4))
+    out(at + 2) = math.max(math.max(x1, x2), math.max(x3, x4))
+    out(at + 3) = math.max(math.max(y1, y2), math.max(y3, y4))
   }
   def invert: Option[Mat] = {
     val det = a * d - b * c

@@ -214,18 +214,19 @@ object Layout {
       if (has && sb.nonEmpty) out += Word(line, l, r, sb.toString)
       sb.setLength(0); has = false
     }
-    tp.chars.foreach { c =>
-      if (c.generated) {
+    for (i <- 0 until tp.countChars) {
+      val u = tp.unicodeAt(i)
+      if (tp.isGenerated(i)) {
         flush()
-        if (c.unicode == '\n') line += 1
-      } else if (!c.excluded) {
-        if (c.unicode == ' ') flush()
+        if (u == '\n') line += 1
+      } else if (!tp.isExcluded(i)) {
+        if (u == ' ') flush()
         else {
-          c.tight.foreach { bx =>
+          tp.tight(i).foreach { bx =>
             if (!has) { l = bx.left; has = true }
             r = bx.right
           }
-          sb.append(c.unicode)
+          sb.append(u)
         }
       }
     }
@@ -291,26 +292,25 @@ object Layout {
     // one that leaves a gap wider than half a char, gets a space separator —
     // otherwise two runs placed in one cell would concatenate ("foobar").
     val lastBox = Array.fill[Rect](rowsB.length - 1, colsB.length - 1)(null)
-    page.textPage.chars.foreach { c =>
-      if (!c.excluded && !c.generated) c.tight.foreach { b =>
-        val cx = (b.left + b.right) / 2
-        val cy = (b.bottom + b.top) / 2
-        val ri = rowsB.indexWhere(y => cy >= y) - 1  // first boundary below center
-        val ci = colsB.lastIndexWhere(x => cx >= x)
-        if (ri >= 0 && ri < cells.length && ci >= 0 && ci < cells(0).length &&
-            cx <= colsB.last && cy >= rowsB.last) {
-          val sb = cells(ri)(ci)
-          val prev = lastBox(ri)(ci)
-          if (prev != null && sb.nonEmpty && !sb.last.isWhitespace &&
-              !c.unicode.isWhitespace) {
-            val newLine = b.bottom > prev.top || b.top < prev.bottom
-            val gap = b.left - prev.right
-            if (newLine || gap > math.max(tol, (b.right - b.left) * 0.5))
-              sb.append(' ')
-          }
-          sb.append(c.unicode)
-          lastBox(ri)(ci) = b
+    val tp = page.textPage
+    for (i <- 0 until tp.countChars if !tp.isExcluded(i) && !tp.isGenerated(i)) tp.tight(i).foreach { b =>
+      val u = tp.unicodeAt(i)
+      val cx = (b.left + b.right) / 2
+      val cy = (b.bottom + b.top) / 2
+      val ri = rowsB.indexWhere(y => cy >= y) - 1  // first boundary below center
+      val ci = colsB.lastIndexWhere(x => cx >= x)
+      if (ri >= 0 && ri < cells.length && ci >= 0 && ci < cells(0).length &&
+          cx <= colsB.last && cy >= rowsB.last) {
+        val sb = cells(ri)(ci)
+        val prev = lastBox(ri)(ci)
+        if (prev != null && sb.nonEmpty && !sb.last.isWhitespace && !u.isWhitespace) {
+          val newLine = b.bottom > prev.top || b.top < prev.bottom
+          val gap = b.left - prev.right
+          if (newLine || gap > math.max(tol, (b.right - b.left) * 0.5))
+            sb.append(' ')
         }
+        sb.append(u)
+        lastBox(ri)(ci) = b
       }
     }
     (for {

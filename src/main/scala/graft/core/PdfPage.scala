@@ -14,10 +14,11 @@ final class PdfPage private[core] (
 
   private def boxOf(key: String): Option[Rect] = attr(key) match {
     case PdfArray(items) if items.length == 4 =>
-      val v = items.map(doc.resolve).collect { case PdfNumber(n) => n }
-      if (v.length == 4)
-        Some(Rect(math.min(v(0), v(2)), math.min(v(1), v(3)), math.max(v(0), v(2)), math.max(v(1), v(3))))
-      else None
+      // NaN marks a non-number (the lexer never reads a NaN number)
+      def v(i: Int): Double = doc.resolve(items(i)) match { case PdfNumber(n) => n; case _ => Double.NaN }
+      val x0 = v(0); val y0 = v(1); val x1 = v(2); val y1 = v(3)
+      if (x0.isNaN || y0.isNaN || x1.isNaN || y1.isNaN) None
+      else Some(Rect(math.min(x0, x1), math.min(y0, y1), math.max(x0, x1), math.max(y0, y1)))
     case _ => None
   }
 

@@ -26,11 +26,10 @@ object Redact {
     * chars (CRLF) carry no box and always survive — line structure stays
     * intact, a fully-redacted line reads as an empty line. */
   def redactedText(tp: TextPage, rects: Seq[Rect]): String = {
-    val sb = new java.lang.StringBuilder(tp.chars.length)
-    tp.chars.foreach { c =>
-      val hit = !c.generated && !c.excluded &&
-        c.loose.orElse(c.tight).exists(b => rects.exists(_.intersects(b)))
-      if (!c.excluded && !hit) sb.append(c.unicode)
+    val sb = new java.lang.StringBuilder(tp.countChars)
+    for (i <- 0 until tp.countChars if !tp.isExcluded(i)) {
+      val hit = !tp.isGenerated(i) && tp.loose(i).exists(b => rects.exists(_.intersects(b)))
+      if (!hit) sb.append(tp.unicodeAt(i))
     }
     sb.toString
   }

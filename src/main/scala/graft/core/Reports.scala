@@ -251,7 +251,6 @@ object Reports {
   def pageFonts(page: PdfPage): Vector[(String, String, Boolean, Int)] = {
     val tp = page.textPage
     tp.textObjects
-      .filter(_.chars.nonEmpty)
       .map(o => (o.font.baseNameNoSubset, o.font.familyName, o.font.isEmbedded, o.font.weight))
       .distinct
       .map { case (bn, fam, emb, w) => (bn, fam, emb, w) }

@@ -135,23 +135,26 @@ object Rasterizer {
     // text overlay: real glyph outlines (TrueType/Type1/CFF) in the
     // show-time fill color; glyph-box fills for unembedded fonts.
     val text = try ContentInterpreter.run(page)
-      catch { case _: Exception => ContentInterpreter.Result(Vector.empty, Vector.empty) }
+      catch { case _: Exception => ContentInterpreter.Result(new GlyphStore, Vector.empty, Vector.empty) }
     val textFillForced: Option[Int] = colorScheme.map(_.textFill)
     text.textObjects.filterNot(_.ocHidden).foreach { obj =>
       val objFill = textFillForced.getOrElse(obj.fillArgb)
       val fs = obj.fontSize
       val fsh = fs * obj.hscale
-      obj.chars.foreach { rc =>
+      val glyphs = obj.glyphs
+      val box = new Array[Double](4)
+      for (g <- obj.start until obj.end) {
+        val code = glyphs.code(g)
         // Type3: execute the glyph's content-stream procedure through the
         // walker, with glyph space → device = FontMatrix ∘ (fs·hscale, fs)
         // ∘ advance-offset ∘ text base ∘ page-to-device
         val t3Drawn = obj.font.type3Matrix match {
           case Some(fm) if obj.font.type3Procs.nonEmpty =>
-            obj.font.glyphName(rc.code).flatMap(obj.font.type3Procs.get) match {
+            obj.font.glyphName(code).flatMap(obj.font.type3Procs.get) match {
               case Some(proc) =>
                 val glyphToPage = fm
                   .multiply(Mat(fs * obj.hscale, 0, 0, fs, 0, obj.rise))
-                  .multiply(Mat.identity.translate(rc.xOff, 0))
+                  .multiply(Mat.identity.translate(glyphs.xOff(g), 0))
                   .multiply(obj.base)
                 try walk(page.doc, page.doc.streamData(proc), obj.font.type3Resources,
                   glyphToPage.multiply(dev), bmp, 1)
@@ -163,7 +166,7 @@ object Rasterizer {
         }
         val contours =
           if (t3Drawn) Vector.empty
-          else obj.font.glyphOutline(rc.code) // TrueType glyf / Type1 / CFF charstrings
+          else obj.font.glyphOutline(code) // TrueType glyf / Type1 / CFF charstrings
         // show-time ExtGState: glyphs composite under the /ca alpha and
         // /BM blend the interpreter stamped on the text object (pixel-map
         // soft masks remain main-walk-only; see header)
@@ -174,7 +177,7 @@ object Rasterizer {
             val pts = new Array[(Double, Double)](c.length / 2)
             var i = 0
             while (i + 1 < c.length) {
-              val (px, py) = obj.base.onPoint(rc.xOff + c(i) * fsh, obj.rise + c(i + 1) * fs)
+              val (px, py) = obj.base.onPoint(glyphs.xOff(g) + c(i) * fsh, obj.rise + c(i + 1) * fs)
               pts(i / 2) = dev.onPoint(px, py)
               i += 2
             }
@@ -182,7 +185,8 @@ object Rasterizer {
           }
           fillPolygons(bmp, polys, evenOdd = false, objFill,
             alpha = tAlpha, blend = tBlend, aa = optsTL.get.aaText)
-        } else if (!t3Drawn) rc.tight.foreach { b =>
+        } else if (!t3Drawn && obj.tightInto(g, box, 0)) {
+          val b = Rect(box(0), box(1), box(2), box(3))
           if (b.width > 0 && b.height > 0) {
             val p1 = dev.onPoint(b.left, b.bottom)
             val p2 = dev.onPoint(b.right, b.top)

@@ -26,7 +26,8 @@ final case class ExtractedDoc(
     text: String,
     branch: String, // lineage: which pipeline branch parsed the row ("narrow" | "salted")
     partition_id: Int,
-    parse_ms: Long)
+    parse_ms: Long, // whole milliseconds, truncated
+    parse_us: Long) // the same parse time in microseconds: sums over sub-millisecond docs stay exact
 
 /** The engine: Dataset[PageRow] → Dataset[ExtractedDoc] via mapPartitions —
   * the reference's execution-architecture lesson re-expressed in Spark
@@ -110,7 +111,7 @@ object ExtractPipeline {
           case Some(why) => graft.core.DocExtract(ok = false, graft.core.ErrCodes.Format, why, 0, Vector.empty)
           case None => Extract.extractAny(row.html, password)
         }
-        val ms = (System.nanoTime() - t0) / 1000000L
+        val ns = System.nanoTime() - t0
         ExtractedDoc(
           url = row.url,
           ok = res.ok,
@@ -120,7 +121,8 @@ object ExtractPipeline {
           text = if (res.ok) res.cliReport else "",
           branch = branch,
           partition_id = pid,
-          parse_ms = ms)
+          parse_ms = ns / 1000000L,
+          parse_us = ns / 1000L)
       }
     }
   }
@@ -188,7 +190,7 @@ object ExtractPipeline {
       sum(col("n_pages")).as("pages"),
       sum(col("n_chars")).as("chars"),
       sum(when(col("ok"), 0L).otherwise(1L)).as("decode_failures"),
-      sum(col("parse_ms")).as("wall_ms"))
+      (sum(col("parse_us")) / 1000.0).as("wall_ms"))
       .withColumn("run_id", lit(runId))
   }
 }
@@ -216,7 +218,9 @@ object ResumableExtract {
     * Throws IllegalArgumentException, writing nothing, when a marker was
     * written with another `groups` value: group membership depends on it,
     * and mixing two values would duplicate rows. An `outDir` whose groups
-    * were cut by url hash, as earlier versions did, must be started fresh. */
+    * were cut by url hash, as earlier versions did, must be started fresh,
+    * and so must one written before `ExtractedDoc` gained `parse_us`: its
+    * group files would hold another schema than the new ones. */
   def run(pages: Dataset[PageRow], outDir: String, groups: Int): Unit = {
     val markers = new org.apache.hadoop.fs.Path(outDir, "_committed")
     val fs = markers.getFileSystem(pages.sparkSession.sessionState.newHadoopConf())

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
-import Jbig2Huffman.{BitReader, BitWriter, Line, Table, assignCanonical, standard, standardTables}
+import Jbig2Huffman.{BitReader, BitWriter, assignCanonical, standard, standardTables}
 
 /** JBIG2 Huffman coding (T.88 Annex B + §6.5.9/§6.4.5 Huffman variants).
   *

@@ -101,7 +101,7 @@ class TextPageSpec extends AnyFunSuite {
       (28, '\n', None),
       (43, 'i', Some("consectetur adipisici elit,")))
     cases.foreach { case (idx, expChar, expText) =>
-      assert(textpage.chars(idx).unicode == expChar, s"idx=$idx")
+      assert(textpage.unicodeAt(idx) == expChar, s"idx=$idx")
       val obj = textpage.textObjOf(idx)
       expText match {
         case None => assert(obj.isEmpty, s"idx=$idx")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkSessionFixture
 
 /** Semantics for the wave-36 operators: extractor-quality eval (levenshtein

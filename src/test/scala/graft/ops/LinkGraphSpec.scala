@@ -75,7 +75,6 @@ class LinkGraphSpec extends AnyFunSuite {
   }
 
   test("synthCorpus edges: every page contributes 3 content links, flags filter the rest") {
-    import spark.implicits._
     val links = LinkGraph.outlinks(LinkGraph.synthCorpus(spark, 40)).collect()
     assert(links.length == 40 * 5) // 3 content + nav + nofollow ad; js/# dropped
     val content = links.filter(l => !l.nofollow && !l.boilerplate)

@@ -35,7 +35,7 @@ class MixtureSpec extends AnyFunSuite {
 
   /** n docs of `words` whitespace words each for a source. */
   private def src(name: String, docs: Int, words: Int) =
-    (0 until docs).map(i => (name, Seq.fill(words)("w").mkString(" ")))
+    (0 until docs).map(_ => (name, Seq.fill(words)("w").mkString(" ")))
 
   private def alloc(rows: Seq[(String, String)], w: Map[String, Long],
       budget: Long, epochsX1000: Long = 2000L) = {

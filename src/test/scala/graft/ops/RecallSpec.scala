@@ -72,7 +72,6 @@ class RecallSpec extends AnyFunSuite {
   }
 
   test("LSH candidates are a strict subset of the corpus (sanity)") {
-    import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val approx = Similarity.lshTopK(emb, nQueries = 10, k = 3)
     val rows = approx.select("vec_id").distinct().count()

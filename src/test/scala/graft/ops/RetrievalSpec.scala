@@ -49,7 +49,6 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("deterministic across partitionings (integer quantize-before-sum)") {
-    import spark.implicits._
     val q = Retrieval.synthQueries(spark)
     val docs = corpus()
     val a = Retrieval.bm25TopK(docs.repartition(1), q, 5)

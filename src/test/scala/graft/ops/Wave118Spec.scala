@@ -2,7 +2,6 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSessionFixture
-import org.apache.spark.sql.functions._
 
 /** Wave 118: JL sign-projection distortion audit and entity resolution. */
 class Wave118Spec extends AnyFunSuite {

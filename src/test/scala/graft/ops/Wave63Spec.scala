@@ -43,7 +43,6 @@ class Wave63Spec extends AnyFunSuite {
   }
 
   test("holt: constant series locks level, linear ramp locks trend") {
-    import spark.implicits._
     // replicate the query's fold inline on a hand series
     def holt(series: Seq[Long]): Seq[(Long, Long)] = {
       var lvl = 0L; var trd = 0L

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSessionFixture
-import org.apache.spark.sql.functions._
 
 /** Wave 83: extraction-consistency QA, split-leakage audit, source drift. */
 class Wave83Spec extends AnyFunSuite {

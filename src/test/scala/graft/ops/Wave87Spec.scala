@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkSessionFixture
 
 /** Wave 87: lexicon statistics — Zipf audit, Heaps growth, varint index. */
@@ -76,7 +75,6 @@ class Wave87Spec extends AnyFunSuite {
   }
 
   test("lexicon operators run on the synthetic documents table shape") {
-    import spark.implicits._
     // smoke at the real column shape (doc_id, text) with empty-text rows
     val df = docsDF(Seq((0L, ""), (1L, "only one doc with text here")))
     assert(Lexicon.zipf(df).count() == 1)

@@ -112,6 +112,18 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(ExtractPipeline.extractSpans(nullOnly).collect().isEmpty)
   }
 
+  test("the metrics table's wall_ms counts a partition of sub-millisecond documents") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(1704067200000L)
+    val small = (0 until 64).map(i =>
+      PageRow(s"synth://pdf/small-$i", ts, SynthPdf.onePage(s"BT /F1 12 Tf 72 720 Td (doc $i) Tj ET"), null, "en"))
+    val input = spark.createDataset(small).coalesce(1)
+    assert(ExtractPipeline.extract(input).collect().forall(_.ok)) // warm: each parse now takes well under 1 ms
+    val m = ExtractPipeline.metrics(ExtractPipeline.extract(input), "t").collect()
+    assert(m.length == 1 && m.head.getAs[Long]("docs") == 64L)
+    assert(m.head.getAs[Double]("wall_ms") > 0.0)
+  }
+
   test("extractSpans rows equal the page spans computed on the driver") {
     val expected = rows.filter(_.html != null).flatMap { r =>
       PdfDocument.load(r.html).toSeq.flatMap(_.pages.zipWithIndex.map { case (p, i) =>

@@ -145,7 +145,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // anti join + global top-k — every Exchange keyed, the und/capped
     // subtrees read from cache (InMemoryTableScan) instead of replaying,
     // and the top-50 plans as TakeOrdered, never a full candidate Sort
-    val d = SparkEntry.queries("q1_agg")(spark, dir).sparkSession // session handle
+    SparkEntry.queries("q1_agg")(spark, dir)
     val docs = spark.read.parquet(s"$dir/documents.parquet").select(
       org.apache.spark.sql.functions.col("doc_id").as("id"))
     val n = docs.count()
