@@ -114,7 +114,7 @@ object OracleSql {
       |         ELSE array_to_string(string_split(host, '.')[-2:], '.') END AS domain
       |  FROM parts3)""".stripMargin
 
-  /** Word 3-gram shingle list — mirrors graft.ops.Dedup.shingles3. */
+  /** Word 3-gram shingle list — mirrors graft.ops.Dedup.shingleStrings. */
   private val shinglesCte =
     """sh AS (
       |  SELECT doc_id, list_distinct(list_transform(range(1, len(string_split(text,' '))-1),

@@ -2700,7 +2700,7 @@ object SparkEntry {
             |</script></head><body>x</body></html>""".stripMargin))
       val rows = pages.map { case (u, h) => PageRow(u, ts, h.getBytes("UTF-8"), null, "en") }
       s.createDataset(rows).flatMap { p =>
-        graft.core.html.JsonLd.articles(new String(p.html, "UTF-8")).map { a =>
+        graft.core.html.JsonLd.articles(graft.core.html.HtmlExtract.decodeBytes(p.html)).map { a =>
           val parsed = graft.core.PdfDates.parseIso(a.datePublished)
           (p.url, a.blockIdx.toLong, a.itemIdx.toLong, a.jtype, a.headline,
             a.author, a.datePublished, parsed.map(_.epochSec), parsed.isDefined)

@@ -96,24 +96,12 @@ object Actions {
 
     // /Names → /JavaScript name tree: count leaf entries (document-level
     // scripts that run without any trigger object)
-    var treeJs = 0
-    def walkTree(node: PdfObject, depth: Int): Unit = if (depth < 32) doc.resolve(node) match {
-      case d: PdfDict =>
-        doc.get(d, "Names") match {
-          case PdfArray(items) =>
-            var j = 1
-            while (j < items.length) { treeJs += 1; classify(items(j), 0); j += 2 }
-          case _ => ()
-        }
-        doc.get(d, "Kids") match {
-          case PdfArray(kids) => kids.foreach(walkTree(_, depth + 1))
-          case _              => ()
-        }
-      case _ => ()
-    }
-    doc.get(catalog, "Names") match {
-      case names: PdfDict => walkTree(doc.get(names, "JavaScript"), 0)
-      case _              => ()
+    val treeJs = doc.get(catalog, "Names") match {
+      case names: PdfDict =>
+        val leaves = doc.treeLeaves(names("JavaScript"), "Names")
+        leaves.foreach { case (_, v) => classify(v, 0) }
+        leaves.length
+      case _ => 0
     }
 
     ActionsReport(nJs, nUri, nLaunch, nGotoR, nSubmit, nGoto, nNamed, nOther,

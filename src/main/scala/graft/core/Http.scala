@@ -147,6 +147,15 @@ object Http {
     Right(out.toByteArray) // unreachable
   }
 
+  /** A file body that may be gzipped (sniffed by its magic bytes, the way
+    * `sitemap.xml.gz` and feed files arrive), within `cap` bytes: the
+    * inflated or plain bytes, or None when the body is corrupt or larger
+    * than `cap`, compressed or plain. */
+  def sniffedBody(b: Array[Byte], cap: Int): Option[Array[Byte]] =
+    if (b.length >= 2 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b) gunzip(b, cap).toOption
+    else if (b.length > cap) None
+    else Some(b)
+
   private def gunzip(b: Array[Byte], cap: Int): Either[String, Array[Byte]] =
     try {
       val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))

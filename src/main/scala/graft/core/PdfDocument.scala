@@ -305,26 +305,42 @@ final class PdfDocument private (
     }
     get(catalog, "Names") match {
       case n: PdfDict =>
-        def walkTree(node: PdfObject, depth: Int): Unit = if (depth < 32) resolve(node) match {
-          case d: PdfDict =>
-            get(d, "Names") match {
-              case PdfArray(items) =>
-                items.grouped(2).foreach {
-                  case Vector(k, v) => resolve(k) match { case s: PdfString => out(s.asText) = v; case _ => () }
-                  case _ => ()
-                }
-              case _ => ()
-            }
-            get(d, "Kids") match {
-              case PdfArray(kids) => kids.foreach(walkTree(_, depth + 1))
-              case _ => ()
-            }
-          case _ => ()
+        treeLeaves(n("Dests"), "Names").foreach { case (k, v) =>
+          resolve(k) match { case s: PdfString => out(s.asText) = v; case _ => () }
         }
-        walkTree(n("Dests"), 0)
       case _ => ()
     }
     out.toMap
+  }
+
+  /** The (key, value) leaf pairs of a name or number tree (`leafKey` is
+    * "Names" or "Nums"), in document order. A node reached twice, through
+    * a `/Kids` cycle or a kid shared by two parents, is read once, so a
+    * hostile tree costs one visit per object; depth is capped at 32. */
+  private[core] def treeLeaves(root: PdfObject, leafKey: String): Vector[(PdfObject, PdfObject)] = {
+    val out = Vector.newBuilder[(PdfObject, PdfObject)]
+    val seen = mutable.HashSet[PdfRef]()
+    def walk(node: PdfObject, depth: Int): Unit = node match {
+      case _ if depth >= 32 => ()
+      case r: PdfRef if !seen.add(r) => ()
+      case _ => resolve(node) match {
+        case d: PdfDict =>
+          get(d, leafKey) match {
+            case PdfArray(items) => items.grouped(2).foreach {
+              case Vector(k, v) => out += ((k, v))
+              case _ => ()
+            }
+            case _ => ()
+          }
+          get(d, "Kids") match {
+            case PdfArray(kids) => kids.foreach(walk(_, depth + 1))
+            case _ => ()
+          }
+        case _ => ()
+      }
+    }
+    walk(root, 0)
+    out.result()
   }
 
   private def lookupNamedDest(name: String): Option[Dest] =
@@ -354,52 +370,37 @@ final class PdfDocument private (
     * document.py:340-388, attachment.py. */
   lazy val attachments: Vector[Attachment] = {
     val out = Vector.newBuilder[Attachment]
-    def walkTree(node: PdfObject, depth: Int): Unit = if (depth < 32) resolve(node) match {
-      case d: PdfDict =>
-        get(d, "Names") match {
-          case PdfArray(items) =>
-            items.grouped(2).foreach {
-              case Vector(k, v) =>
-                val name = resolve(k) match { case s: PdfString => s.asText; case _ => "" }
-                resolve(v) match {
-                  case fs: PdfDict =>
-                    val ef = get(fs, "EF") match { case e: PdfDict => e; case _ => PdfDict.empty }
-                    val fileStream = ef.get("F").orElse(ef.get("UF")).getOrElse(PdfNull)
-                    val bytes = streamData(fileStream)
-                    // params follow FPDFAttachment_GetStringValue semantics
-                    // (attachment.py:96-145 get_str_value): only string
-                    // values render ("" otherwise), and CheckSum renders as
-                    // an uppercase hex string in angle brackets
-                    // (tests/test_attachments.py:33-36).
-                    val params = resolve(fileStream) match {
-                      case PdfStream(sd, _) => get(sd, "Params") match {
-                        case p: PdfDict => p.entries.map { case (pk, pv) =>
-                          pk -> (resolve(pv) match {
-                            case PdfString(b) if pk == "CheckSum" =>
-                              "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
-                            case s: PdfString => s.asText
-                            case _ => ""
-                          })
-                        }
-                        case _ => Map.empty[String, String]
-                      }
-                      case _ => Map.empty[String, String]
-                    }
-                    out += Attachment(name, bytes, params)
-                  case _ => ()
-                }
-              case _ => ()
-            }
-          case _ => ()
-        }
-        get(d, "Kids") match {
-          case PdfArray(kids) => kids.foreach(walkTree(_, depth + 1))
-          case _ => ()
-        }
-      case _ => ()
-    }
     get(catalog, "Names") match {
-      case n: PdfDict => walkTree(n("EmbeddedFiles"), 0)
+      case n: PdfDict => treeLeaves(n("EmbeddedFiles"), "Names").foreach { case (k, v) =>
+        val name = resolve(k) match { case s: PdfString => s.asText; case _ => "" }
+        resolve(v) match {
+          case fs: PdfDict =>
+            val ef = get(fs, "EF") match { case e: PdfDict => e; case _ => PdfDict.empty }
+            val fileStream = ef.get("F").orElse(ef.get("UF")).getOrElse(PdfNull)
+            val bytes = streamData(fileStream)
+            // params follow FPDFAttachment_GetStringValue semantics
+            // (attachment.py:96-145 get_str_value): only string
+            // values render ("" otherwise), and CheckSum renders as
+            // an uppercase hex string in angle brackets
+            // (tests/test_attachments.py:33-36).
+            val params = resolve(fileStream) match {
+              case PdfStream(sd, _) => get(sd, "Params") match {
+                case p: PdfDict => p.entries.map { case (pk, pv) =>
+                  pk -> (resolve(pv) match {
+                    case PdfString(b) if pk == "CheckSum" =>
+                      "<" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
+                    case s: PdfString => s.asText
+                    case _ => ""
+                  })
+                }
+                case _ => Map.empty[String, String]
+              }
+              case _ => Map.empty[String, String]
+            }
+            out += Attachment(name, bytes, params)
+          case _ => ()
+        }
+      }
       case _ => ()
     }
     out.result()
@@ -411,27 +412,12 @@ final class PdfDocument private (
     * fixture toc_viewmodes.pdf labels). */
   def pageLabel(index: Int): String = {
     val ranges = mutable.ArrayBuffer[(Int, PdfDict)]()
-    def walkTree(node: PdfObject, depth: Int): Unit = if (depth < 32) resolve(node) match {
-      case d: PdfDict =>
-        get(d, "Nums") match {
-          case PdfArray(items) =>
-            items.grouped(2).foreach {
-              case Vector(k, v) =>
-                (resolve(k), resolve(v)) match {
-                  case (PdfNumber(n), vd: PdfDict) => ranges += ((n.toInt, vd))
-                  case _ => ()
-                }
-              case _ => ()
-            }
-          case _ => ()
-        }
-        get(d, "Kids") match {
-          case PdfArray(kids) => kids.foreach(walkTree(_, depth + 1))
-          case _ => ()
-        }
-      case _ => ()
+    treeLeaves(catalog("PageLabels"), "Nums").foreach { case (k, v) =>
+      (resolve(k), resolve(v)) match {
+        case (PdfNumber(n), vd: PdfDict) => ranges += ((n.toInt, vd))
+        case _ => ()
+      }
     }
-    walkTree(catalog("PageLabels"), 0)
     if (ranges.isEmpty) return (index + 1).toString
     val sorted = ranges.sortBy(_._1)
     val appl = sorted.takeWhile(_._1 <= index).lastOption

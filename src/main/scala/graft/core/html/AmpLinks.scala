@@ -16,37 +16,26 @@ object AmpLinks {
                         amphtml: Option[String])
 
   def scan(html: String): Info = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
-    val isAmp = {
-      val h = lower.indexOf("<html")
-      val end = if (h >= 0) lower.indexOf('>', h) else -1
-      end > 0 && {
-        val body = html.substring(h + 1, end)
-        HtmlExtract.attr(body, "amp").isDefined ||
-        HtmlExtract.attr(body, "⚡").isDefined
-      }
-    }
+    var isAmp = false
+    var seenHtml = false
     var canonical: Option[String] = None
     var amphtml: Option[String] = None
-    var i = 0
-    var more = true
-    while (more) {
-      i = lower.indexOf("<link", i)
-      if (i < 0) more = false
-      else {
-        val end = lower.indexOf('>', i)
-        if (end < 0) more = false
-        else {
-          val body = html.substring(i + 1, end)
-          val rel = HtmlExtract.attr(body, "rel")
-            .map(_.trim.toLowerCase(java.util.Locale.ROOT))
-          val href = HtmlExtract.attr(body, "href").map(_.trim).filter(_.nonEmpty)
-          rel match {
-            case Some("canonical") if canonical.isEmpty => canonical = href
-            case Some("amphtml") if amphtml.isEmpty => amphtml = href
-            case _ =>
-          }
-          i = end + 1
+    val t = new HtmlTokenizer(html)
+    while (t.next()) {
+      if (t.isStart("html") && !seenHtml) {
+        val body = t.body
+        seenHtml = true
+        isAmp = HtmlExtract.attr(body, "amp").isDefined ||
+          HtmlExtract.attr(body, "⚡").isDefined
+      } else if (t.isStart("link")) {
+        val body = t.body
+        val rel = HtmlExtract.attr(body, "rel")
+          .map(_.trim.toLowerCase(java.util.Locale.ROOT))
+        val href = HtmlExtract.attr(body, "href").map(_.trim).filter(_.nonEmpty)
+        rel match {
+          case Some("canonical") if canonical.isEmpty => canonical = href
+          case Some("amphtml") if amphtml.isEmpty => amphtml = href
+          case _ =>
         }
       }
     }

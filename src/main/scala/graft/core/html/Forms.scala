@@ -16,68 +16,62 @@ object Forms {
   final case class FormInfo(idx: Int, action: String, method: String,
                             nInputs: Int, kind: String)
 
+  private val QueryNames = Set("q", "s", "query", "search")
+
   def scan(html: String): Vector[FormInfo] = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
     val out = Vector.newBuilder[FormInfo]
-    var i = 0
     var idx = 0
-    var more = true
-    while (more) {
-      i = lower.indexOf("<form", i)
-      if (i < 0) more = false
-      else {
-        val tagEnd = lower.indexOf('>', i)
-        if (tagEnd < 0) more = false
-        else {
-          val body = html.substring(i + 1, tagEnd)
-          val action = HtmlExtract.attr(body, "action").getOrElse("")
-          val method = HtmlExtract.attr(body, "method")
-            .map(_.trim.toUpperCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
-            .getOrElse("GET")
-          val close = lower.indexOf("</form", tagEnd)
-          val end = if (close < 0) html.length else close
-          // collect input descriptors inside this form
-          var j = tagEnd
-          var nInputs = 0
-          var hasPassword, hasFile, hasSearch, hasEmail = false
-          var nText = 0
-          var textNameIsQuery = false
-          while ({ j = lower.indexOf("<input", j); j >= 0 && j < end }) {
-            val ie = lower.indexOf('>', j)
-            if (ie < 0 || ie > end) j = end
-            else {
-              val ib = html.substring(j + 1, ie)
-              val tpe = HtmlExtract.attr(ib, "type")
-                .map(_.trim.toLowerCase(java.util.Locale.ROOT)).getOrElse("text")
-              val name = HtmlExtract.attr(ib, "name")
-                .map(_.trim.toLowerCase(java.util.Locale.ROOT)).getOrElse("")
-              if (tpe != "hidden" && tpe != "submit") nInputs += 1
-              tpe match {
-                case "password" => hasPassword = true
-                case "file"     => hasFile = true
-                case "search"   => hasSearch = true
-                case "email"    => hasEmail = true
-                case "text" =>
-                  nText += 1
-                  if (Set("q", "s", "query", "search").contains(name))
-                    textNameIsQuery = true
-                case _ =>
-              }
-              j = ie + 1
-            }
-          }
-          val kind =
-            if (hasPassword) "login"
-            else if (hasFile) "upload"
-            else if (hasSearch || (nText == 1 && textNameIsQuery)) "search"
-            else if (hasEmail && nText == 0) "newsletter"
-            else "other"
-          out += FormInfo(idx, action, method, nInputs, kind)
-          idx += 1
-          i = tagEnd + 1
-        }
-      }
+    // the open form: its action and method, and its input descriptors
+    var open = false
+    var action, method = ""
+    var nInputs, nText = 0
+    var hasPassword, hasFile, hasSearch, hasEmail, textNameIsQuery = false
+
+    def close(): Unit = if (open) {
+      val kind =
+        if (hasPassword) "login"
+        else if (hasFile) "upload"
+        else if (hasSearch || (nText == 1 && textNameIsQuery)) "search"
+        else if (hasEmail && nText == 0) "newsletter"
+        else "other"
+      out += FormInfo(idx, action, method, nInputs, kind)
+      idx += 1
+      open = false
     }
+
+    val t = new HtmlTokenizer(html)
+    while (t.next()) {
+      if (t.isStart("form")) {
+        close() // forms do not nest: a new one closes an open one
+        val body = t.body
+        open = true
+        action = HtmlExtract.attr(body, "action").getOrElse("")
+        method = HtmlExtract.attr(body, "method")
+          .map(_.trim.toUpperCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
+          .getOrElse("GET")
+        nInputs = 0; nText = 0
+        hasPassword = false; hasFile = false; hasSearch = false; hasEmail = false
+        textNameIsQuery = false
+      } else if (open && t.isStart("input")) {
+        val body = t.body
+        val tpe = HtmlExtract.attr(body, "type")
+          .map(_.trim.toLowerCase(java.util.Locale.ROOT)).getOrElse("text")
+        val name = HtmlExtract.attr(body, "name")
+          .map(_.trim.toLowerCase(java.util.Locale.ROOT)).getOrElse("")
+        if (tpe != "hidden" && tpe != "submit") nInputs += 1
+        tpe match {
+          case "password" => hasPassword = true
+          case "file"     => hasFile = true
+          case "search"   => hasSearch = true
+          case "email"    => hasEmail = true
+          case "text" =>
+            nText += 1
+            if (QueryNames.contains(name)) textNameIsQuery = true
+          case _ =>
+        }
+      } else if (t.isEnd("form")) close()
+    }
+    close()
     out.result()
   }
 }

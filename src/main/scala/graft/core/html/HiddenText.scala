@@ -8,9 +8,9 @@ package graft.core.html
   * corpus, so the gate runs on the RAW html column before extraction
   * trusts the page. Per-row string walk, zero shuffle.
   *
-  * The block scan is nesting-aware on the hiding element's own tag name
-  * (depth counter, the same discipline as [[HtmlTables]]); inner text is
-  * tag-stripped with script/style bodies excluded. `suspicious` flags
+  * One [[HtmlTokenizer]] pass, nesting-aware on the hiding element's own
+  * tag name (a depth counter); text is counted from the tokenizer's text
+  * runs, so raw-text bodies and comments never count. `suspicious` flags
   * pages hiding a meaningful fraction of their text (≥ 50 hidden chars AND
   * ≥ 10% of all body text) — a lone hidden template div is normal,
   * wholesale hidden paragraphs are not.
@@ -37,92 +37,42 @@ object HiddenText {
     hidingStyles.exists(c.contains)
   }
 
-  private def tagHides(tagBody: String): Boolean = {
-    val lowerBody = tagBody.toLowerCase(java.util.Locale.ROOT)
+  private def tagHides(tagBody: String): Boolean =
     HtmlExtract.attr(tagBody, "style").exists(styleHides) ||
     HtmlExtract.attr(tagBody, "aria-hidden").exists(_.trim == "true") ||
-    // bare `hidden` boolean attribute (word-delimited)
-    raw"(^|\s)hidden(\s|=|$$)".r.findFirstIn(lowerBody).isDefined
-  }
-
-  /** Strip tags from an html range, skipping script/style bodies; returns
-    * the visible-ish character count (whitespace runs collapse to one). */
-  private def textChars(html: String, lower: String, from: Int, until: Int): Int = {
-    var i = from
-    var n = 0
-    var lastWasSpace = true
-    while (i < until) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        val close = lower.indexOf('>', i)
-        if (close < 0 || close >= until) return n
-        if (lower.startsWith("<script", i)) {
-          val end = lower.indexOf("</script", close)
-          // a missing '>' after the close tag must land on `until`, not
-          // indexOf's -1 (+1 = 0 would restart the walk: infinite loop)
-          val gt = if (end < 0) -1 else lower.indexOf('>', end)
-          i = if (end < 0 || end > until || gt < 0) until else gt + 1
-        } else if (lower.startsWith("<style", i)) {
-          val end = lower.indexOf("</style", close)
-          val gt = if (end < 0) -1 else lower.indexOf('>', end)
-          i = if (end < 0 || end > until || gt < 0) until else gt + 1
-        } else i = close + 1
-        lastWasSpace = true
-      } else {
-        if (c.isWhitespace) { if (!lastWasSpace) { n += 1; lastWasSpace = true } }
-        else { n += 1; lastWasSpace = false }
-        i += 1
-      }
-    }
-    n
-  }
-
-  /** End index (exclusive of the close tag) of the element opened at
-    * `openEnd` with `tag`, nesting-aware; -1 if unclosed. */
-  private def matchClose(lower: String, tag: String, openEnd: Int): Int = {
-    var depth = 1
-    var i = openEnd
-    while (depth > 0) {
-      val nextOpen = lower.indexOf("<" + tag, i)
-      val nextClose = lower.indexOf("</" + tag, i)
-      if (nextClose < 0) return -1
-      if (nextOpen >= 0 && nextOpen < nextClose) {
-        // only a real tag boundary counts (<div> vs <divx>)
-        val b = lower.charAt(nextOpen + tag.length + 1)
-        if (b == '>' || b.isWhitespace || b == '/') depth += 1
-        i = nextOpen + tag.length + 1
-      } else {
-        depth -= 1
-        if (depth == 0) return nextClose
-        i = nextClose + tag.length + 2
-      }
-    }
-    -1
-  }
+    HtmlExtract.attr(tagBody, "hidden").isDefined
 
   def scan(html: String): Signals = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
-    val total = textChars(html, lower, 0, html.length)
-    var i = 0
     var blocks = 0
     var hidden = 0
-    while ({ i = lower.indexOf('<', i); i >= 0 && i < html.length }) {
-      val tagEnd = lower.indexOf('>', i)
-      if (tagEnd < 0) return Signals(blocks, hidden, total)
-      val isOpen = i + 1 < html.length && lower.charAt(i + 1).isLetter
-      if (isOpen) {
-        val nameEnd0 = lower.indexWhere(c => c.isWhitespace || c == '>' || c == '/', i + 1)
-        val nameEnd = if (nameEnd0 < 0 || nameEnd0 > tagEnd) tagEnd else nameEnd0
-        val tag = lower.substring(i + 1, nameEnd)
-        val body = html.substring(i + 1, tagEnd)
-        if (tag != "script" && tag != "style" && tagHides(body)) {
+    var total = 0
+    var hidingTag = "" // name of the open hiding element, "" outside one
+    var depth = 0      // its nesting depth on its own name
+    val t = new HtmlTokenizer(html)
+    while (t.next()) t.kind match {
+      case HtmlTokenizer.Text =>
+        // visible-ish chars: a whitespace run after a non-space counts one,
+        // a leading one none (a tag is a boundary)
+        var n = 0
+        var lastWasSpace = true
+        var i = t.start
+        while (i < t.end) {
+          if (html.charAt(i).isWhitespace) { if (!lastWasSpace) { n += 1; lastWasSpace = true } }
+          else { n += 1; lastWasSpace = false }
+          i += 1
+        }
+        total += n
+        if (depth > 0) hidden += n
+      case HtmlTokenizer.StartTag =>
+        if (depth > 0) { if (t.name == hidingTag && !t.selfClosing) depth += 1 }
+        else if (!t.isRawText && tagHides(t.body)) {
           blocks += 1
-          val close = matchClose(lower, tag, tagEnd + 1)
-          val until = if (close < 0) html.length else close
-          hidden += textChars(html, lower, tagEnd + 1, until)
-          i = if (close < 0) html.length else until
-        } else i = tagEnd + 1
-      } else i = tagEnd + 1
+          hidingTag = t.name
+          depth = 1
+        }
+      case HtmlTokenizer.EndTag =>
+        if (depth > 0 && t.name == hidingTag) depth -= 1
+      case _ => ()
     }
     Signals(blocks, hidden, total)
   }

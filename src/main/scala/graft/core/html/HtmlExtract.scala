@@ -8,8 +8,11 @@ import scala.collection.mutable
   * HTML half of the north rule's "HTML boilerplate strip, PDF/layout parse,
   * DOM heuristics" extraction pipeline.
   *
-  * Deterministic by construction: one pass tokenization, block segmentation
-  * at block-level tags, then a density filter. No external parser.
+  * Deterministic by construction: one [[HtmlTokenizer]] pass, block
+  * segmentation at block-level tags, then a density filter. No external
+  * parser. Its helpers are the ones every HTML scanner shares: [[attr]] (the
+  * one attribute parser), [[decodeEntities]], [[normalizeWs]] and
+  * [[decodeBytes]].
   */
 object HtmlExtract {
 
@@ -97,7 +100,7 @@ object HtmlExtract {
   def decodeBytes(bytes: Array[Byte]): String = {
     // declared charset first (meta charset= / http-equiv content=..charset=)
     val head = new String(bytes, 0, math.min(2048, bytes.length),
-      java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase
+      java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase(java.util.Locale.ROOT)
     val declared = {
       val at = head.indexOf("charset=")
       if (at < 0) None
@@ -124,7 +127,6 @@ object HtmlExtract {
   }
 
   def parseString(html: String): HtmlDoc = {
-    val lowerHtml = html.toLowerCase // once: raw-text scans stay linear
     val blocks = Vector.newBuilder[Block]
     var title = ""
     var lang = ""
@@ -151,88 +153,57 @@ object HtmlExtract {
       cur.clear()
       curLink = 0
     }
+    def content(body: String): Option[String] =
+      attr(body, "content").map(v => normalizeWs(decodeEntities(v)))
 
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        // comment?
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val end = html.indexOf("]]>", i + 9)
-          i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i + 1)
-          if (close < 0) { i = n }
-          else {
-            val rawTag = html.substring(i + 1, close)
-            i = close + 1
-            val isEnd = rawTag.startsWith("/")
-            val body = if (isEnd) rawTag.substring(1) else rawTag
-            val name = body.takeWhile(ch => Character.isLetterOrDigit(ch)).toLowerCase
-            if (name.nonEmpty) {
-              if (!isEnd) {
-                // raw-text elements: skip to the closing tag
-                if (RawTextTags.contains(name) && !rawTag.endsWith("/")) {
-                  val endTag = s"</$name"
-                  val idx = lowerHtml.indexOf(endTag, i)
-                  i = if (idx < 0) n else {
-                    val gt = html.indexOf('>', idx)
-                    if (gt < 0) n else gt + 1
-                  }
-                } else {
-                  if (BlockTags.contains(name)) flushBlock()
-                  if (BoilerplateTags.contains(name)) { flushBlock(); boilerDepth += 1 }
-                  if (name == "head") headDepth += 1
-                  if (name == "a") linkDepth += 1
-                  if (name == "title") { inTitle = true }
-                  if (name == "html") lang = attr(body, "lang").getOrElse(lang)
-                  if (name == "meta") {
-                    val nm = attr(body, "name").map(_.toLowerCase)
-                    if (nm.contains("description"))
-                      description = attr(body, "content").map(v => normalizeWs(decodeEntities(v))).getOrElse(description)
-                    attr(body, "property").map(_.toLowerCase) match {
-                      case Some("og:title") =>
-                        ogTitle = attr(body, "content").map(v => normalizeWs(decodeEntities(v))).getOrElse(ogTitle)
-                      case Some("og:description") =>
-                        ogDescription = attr(body, "content").map(v => normalizeWs(decodeEntities(v))).getOrElse(ogDescription)
-                      case _ => ()
-                    }
-                  }
-                  if (name == "link" && canonical.isEmpty &&
-                    attr(body, "rel").exists(_.toLowerCase.split("[\\s]+").contains("canonical")))
-                    canonical = attr(body, "href").map(decodeEntities).getOrElse("")
-                  if (!rawTag.endsWith("/") && !name.startsWith("br") && name != "meta" &&
-                    name != "img" && name != "input" && name != "link" && name != "hr")
-                    tagStack.push(name)
-                }
-              } else {
-                if (BlockTags.contains(name)) flushBlock()
-                if (BoilerplateTags.contains(name)) { flushBlock(); boilerDepth = math.max(0, boilerDepth - 1) }
-                if (name == "head") headDepth = math.max(0, headDepth - 1)
-                if (name == "a") linkDepth = math.max(0, linkDepth - 1)
-                if (name == "title") { inTitle = false; title = normalizeWs(titleBuf.toString) }
-                // pop to the matching open tag if present
-                if (tagStack.contains(name)) {
-                  while (tagStack.nonEmpty && tagStack.pop() != name) ()
-                }
-              }
+    val t = new HtmlTokenizer(html)
+    while (t.next()) {
+      val name = t.name
+      t.kind match {
+        case HtmlTokenizer.Text =>
+          val chunk = t.text
+          if (inTitle) titleBuf.append(chunk)
+          else if (headDepth == 0) {
+            cur.append(chunk)
+            if (linkDepth > 0) curLink += chunk.count(!_.isWhitespace)
+          }
+        case HtmlTokenizer.StartTag if !t.isRawText =>
+          if (BlockTags.contains(name)) flushBlock()
+          if (BoilerplateTags.contains(name)) { flushBlock(); boilerDepth += 1 }
+          if (name == "head") headDepth += 1
+          if (name == "a") linkDepth += 1
+          if (name == "title") inTitle = true
+          if (name == "html") lang = t.attr("lang").getOrElse(lang)
+          if (name == "meta") {
+            val body = t.body
+            if (attr(body, "name").exists(_.equalsIgnoreCase("description")))
+              description = content(body).getOrElse(description)
+            attr(body, "property").map(_.toLowerCase(java.util.Locale.ROOT)) match {
+              case Some("og:title") => ogTitle = content(body).getOrElse(ogTitle)
+              case Some("og:description") => ogDescription = content(body).getOrElse(ogDescription)
+              case _ => ()
             }
           }
-        }
-      } else {
-        val next = html.indexOf('<', i)
-        val end = if (next < 0) n else next
-        val chunk = decodeEntities(html.substring(i, end))
-        if (inTitle) titleBuf.append(chunk)
-        else if (headDepth == 0) {
-          cur.append(chunk)
-          if (linkDepth > 0) curLink += chunk.count(!_.isWhitespace)
-        }
-        i = end
+          if (name == "link" && canonical.isEmpty) {
+            val body = t.body
+            if (attr(body, "rel").exists(_.toLowerCase(java.util.Locale.ROOT)
+                .split("[\\s]+").contains("canonical")))
+              canonical = attr(body, "href").map(decodeEntities).getOrElse("")
+          }
+          if (!t.selfClosing && !name.startsWith("br") && name != "meta" &&
+            name != "img" && name != "input" && name != "link" && name != "hr")
+            tagStack.push(name)
+        case HtmlTokenizer.EndTag =>
+          if (BlockTags.contains(name)) flushBlock()
+          if (BoilerplateTags.contains(name)) { flushBlock(); boilerDepth = math.max(0, boilerDepth - 1) }
+          if (name == "head") headDepth = math.max(0, headDepth - 1)
+          if (name == "a") linkDepth = math.max(0, linkDepth - 1)
+          if (name == "title") { inTitle = false; title = normalizeWs(titleBuf.toString) }
+          // pop to the matching open tag if present
+          if (tagStack.contains(name)) {
+            while (tagStack.nonEmpty && tagStack.pop() != name) ()
+          }
+        case _ => () // raw-text elements: content skipped
       }
     }
     flushBlock()
@@ -276,7 +247,6 @@ object HtmlExtract {
       if (aName == name) return Some(if (value == null) "" else value)
       if (aName.isEmpty) i += 1 // malformed run (e.g. stray '='): make progress
     }
-    None
     None
   }
 

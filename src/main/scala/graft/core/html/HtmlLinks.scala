@@ -21,9 +21,6 @@ final case class HtmlLink(
 
 object HtmlLinks {
 
-  private val BoilerplateTags = Set("nav", "header", "footer", "aside", "form", "menu")
-  private val RawTextTags = Set("script", "style", "noscript", "template", "svg", "iframe")
-
   /** RFC 3986 §5.2.4 remove_dot_segments over a path (query excluded). */
   def removeDotSegments(path: String): String = {
     val out = new scala.collection.mutable.ArrayBuffer[String]
@@ -106,11 +103,10 @@ object HtmlLinks {
     graft.ops.UrlOps.canonicalizeUrl(o + (if (p.isEmpty) "/" else p) + query)
   }
 
-  /** One scanning pass (same tokenizer discipline as HtmlExtract): collect
-    * `<a>` links with anchor text, honoring the FIRST `<base href>`. A new
-    * `<a>` implicitly closes an open one (HTML parsers never nest them). */
+  /** One [[HtmlTokenizer]] pass: collect `<a>` links with anchor text,
+    * honoring the FIRST `<base href>`. A new `<a>` implicitly closes an
+    * open one (HTML parsers never nest them). */
   def extractLinks(html: String, pageUrl: String): Vector[HtmlLink] = {
-    val lowerHtml = html.toLowerCase(java.util.Locale.ROOT)
     val links = Vector.newBuilder[HtmlLink]
     var base = pageUrl
     var baseSet = false
@@ -125,76 +121,38 @@ object HtmlLinks {
       if (inA) {
         val dst = resolve(base, aHref)
         if (dst.nonEmpty)
-          links += HtmlLink(aHref, dst, normWs(anchorBuf.toString),
+          links += HtmlLink(aHref, dst, HtmlExtract.normalizeWs(anchorBuf.toString),
             nofollow = aRel.toLowerCase(java.util.Locale.ROOT).split("[\\s]+").contains("nofollow"),
             boilerplate = aBoiler)
         inA = false; aHref = ""; aRel = ""; anchorBuf.clear()
       }
     }
 
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      if (html.charAt(i) == '<') {
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4); i = if (end < 0) n else end + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val end = html.indexOf("]]>", i + 9); i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i + 1)
-          if (close < 0) i = n
-          else {
-            val rawTag = html.substring(i + 1, close)
-            i = close + 1
-            val isEnd = rawTag.startsWith("/")
-            val body = if (isEnd) rawTag.substring(1) else rawTag
-            val name = body.takeWhile(Character.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
-            if (name.nonEmpty) {
-              if (!isEnd) {
-                if (RawTextTags.contains(name) && !rawTag.endsWith("/")) {
-                  val idx = lowerHtml.indexOf(s"</$name", i)
-                  i = if (idx < 0) n else { val gt = html.indexOf('>', idx); if (gt < 0) n else gt + 1 }
-                } else name match {
-                  case "base" if !baseSet =>
-                    HtmlExtract.attr(body, "href").foreach { h =>
-                      val b = resolve(pageUrl, HtmlExtract.decodeEntities(h))
-                      if (b.nonEmpty) { base = b; baseSet = true }
-                    }
-                  case "a" =>
-                    emit() // implicit close of a dangling <a>
-                    inA = true
-                    aHref = HtmlExtract.decodeEntities(HtmlExtract.attr(body, "href").getOrElse(""))
-                    aRel = HtmlExtract.attr(body, "rel").getOrElse("")
-                    aBoiler = boilerDepth > 0
-                  case bp if BoilerplateTags.contains(bp) => boilerDepth += 1
-                  case _ => ()
-                }
-              } else {
-                if (name == "a") emit()
-                else if (BoilerplateTags.contains(name)) boilerDepth = math.max(0, boilerDepth - 1)
-              }
-            }
+    val t = new HtmlTokenizer(html)
+    while (t.next()) t.kind match {
+      case HtmlTokenizer.Text => if (inA) anchorBuf.append(t.text)
+      case HtmlTokenizer.StartTag if !t.isRawText => t.name match {
+        case "base" if !baseSet =>
+          t.attr("href").foreach { h =>
+            val b = resolve(pageUrl, HtmlExtract.decodeEntities(h))
+            if (b.nonEmpty) { base = b; baseSet = true }
           }
-        }
-      } else {
-        val next = html.indexOf('<', i)
-        val end = if (next < 0) n else next
-        if (inA) anchorBuf.append(HtmlExtract.decodeEntities(html.substring(i, end)))
-        i = end
+        case "a" =>
+          emit() // implicit close of a dangling <a>
+          val body = t.body
+          inA = true
+          aHref = HtmlExtract.decodeEntities(HtmlExtract.attr(body, "href").getOrElse(""))
+          aRel = HtmlExtract.attr(body, "rel").getOrElse("")
+          aBoiler = boilerDepth > 0
+        case bp if HtmlExtract.BoilerplateTags.contains(bp) => boilerDepth += 1
+        case _ => ()
       }
+      case HtmlTokenizer.EndTag =>
+        if (t.name == "a") emit()
+        else if (HtmlExtract.BoilerplateTags.contains(t.name)) boilerDepth = math.max(0, boilerDepth - 1)
+      case _ => ()
     }
     emit()
     links.result()
-  }
-
-  private def normWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var lastWs = true
-    s.foreach { c =>
-      if (c.isWhitespace) { if (!lastWs) sb.append(' '); lastWs = true }
-      else { sb.append(c); lastWs = false }
-    }
-    while (sb.nonEmpty && sb.last == ' ') sb.setLength(sb.length - 1)
-    sb.toString
   }
 }

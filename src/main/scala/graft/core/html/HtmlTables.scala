@@ -4,9 +4,8 @@ package graft.core.html
   * that turns web tables into rows a training pipeline can treat as
   * semi-structured data (table QA, fact extraction, schema induction).
   *
-  * Same tokenizer discipline as HtmlLinks/HtmlExtract: one forward scan,
-  * comments/CDATA/script/style skipped, entities decoded, whitespace
-  * normalized. Nesting is handled with an explicit stack: a nested
+  * One [[HtmlTokenizer]] pass, entities decoded, whitespace normalized
+  * by [[HtmlExtract.normalizeWs]]. Nesting is handled with an explicit stack: a nested
   * `<table>` suspends the outer cell (its text belongs to the inner
   * table) and table indices are assigned in document order, outer first.
   * Implicit closes follow the HTML parsing algorithm's recovery rules in
@@ -34,7 +33,6 @@ object HtmlTables {
   }
 
   def extractTables(html: String): Vector[TableCell] = {
-    val lowerHtml = html.toLowerCase(java.util.Locale.ROOT)
     val out = Vector.newBuilder[TableCell]
     val stack = scala.collection.mutable.Stack[TableCtx]()
     var nextIdx = 0
@@ -44,77 +42,45 @@ object HtmlTables {
         val t = stack.top
         if (t.inCell) {
           out += TableCell(t.idx, t.row, t.col, t.cellHeader, t.cellColspan,
-            normWs(t.buf.toString))
+            HtmlExtract.normalizeWs(t.buf.toString))
           t.inCell = false; t.buf.clear()
         }
       }
     }
 
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      if (html.charAt(i) == '<') {
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4); i = if (end < 0) n else end + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val end = html.indexOf("]]>", i + 9); i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i + 1)
-          if (close < 0) i = n
-          else {
-            val rawTag = html.substring(i + 1, close)
-            i = close + 1
-            val isEnd = rawTag.startsWith("/")
-            val body = if (isEnd) rawTag.substring(1) else rawTag
-            val name = body.takeWhile(Character.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
-            if (name.nonEmpty) {
-              if (!isEnd) {
-                if ((name == "script" || name == "style") && !rawTag.endsWith("/")) {
-                  val idx = lowerHtml.indexOf(s"</$name", i)
-                  i = if (idx < 0) n else { val gt = html.indexOf('>', idx); if (gt < 0) n else gt + 1 }
-                } else name match {
-                  case "table" =>
-                    stack.push(new TableCtx(nextIdx)); nextIdx += 1
-                  case "tr" if stack.nonEmpty =>
-                    endCell() // implicit close of a dangling cell
-                    val t = stack.top
-                    t.row += 1; t.col = -1
-                  case ("td" | "th") if stack.nonEmpty =>
-                    endCell()
-                    val t = stack.top
-                    if (t.row < 0) t.row = 0 // cells before any <tr>: row 0
-                    t.col += 1
-                    t.inCell = true
-                    t.cellHeader = name == "th"
-                    t.cellColspan = HtmlExtract.attr(body, "colspan")
-                      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-                      .filter(_ >= 1).getOrElse(1)
-                  case _ => () // thead/tbody/caption wrappers, unknowns
-                }
-              } else name match {
-                case "table" =>
-                  endCell()
-                  if (stack.nonEmpty) stack.pop()
-                case "td" | "th" => endCell()
-                case "tr" if stack.nonEmpty =>
-                  endCell()
-                case _ => ()
-              }
-            }
-          }
-        }
-      } else {
-        val next = html.indexOf('<', i)
-        val end = if (next < 0) n else next
-        if (stack.nonEmpty && stack.top.inCell)
-          stack.top.buf.append(HtmlExtract.decodeEntities(html.substring(i, end)))
-        i = end
+    val tok = new HtmlTokenizer(html)
+    while (tok.next()) tok.kind match {
+      case HtmlTokenizer.Text =>
+        if (stack.nonEmpty && stack.top.inCell) stack.top.buf.append(tok.text)
+      case HtmlTokenizer.StartTag if !tok.isRawText => tok.name match {
+        case "table" =>
+          stack.push(new TableCtx(nextIdx)); nextIdx += 1
+        case "tr" if stack.nonEmpty =>
+          endCell() // implicit close of a dangling cell
+          val t = stack.top
+          t.row += 1; t.col = -1
+        case ("td" | "th") if stack.nonEmpty =>
+          endCell()
+          val t = stack.top
+          if (t.row < 0) t.row = 0 // cells before any <tr>: row 0
+          t.col += 1
+          t.inCell = true
+          t.cellHeader = tok.name == "th"
+          t.cellColspan = tok.attr("colspan")
+            .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
+            .filter(_ >= 1).getOrElse(1)
+        case _ => () // thead/tbody/caption wrappers, unknowns
       }
+      case HtmlTokenizer.EndTag => tok.name match {
+        case "table" =>
+          endCell()
+          if (stack.nonEmpty) stack.pop()
+        case "td" | "th" | "tr" => endCell()
+        case _ => ()
+      }
+      case _ => ()
     }
     while (stack.nonEmpty) { endCell(); stack.pop() } // truncated tail
     out.result()
   }
-
-  private def normWs(s: String): String =
-    s.replaceAll("\\s+", " ").trim
 }

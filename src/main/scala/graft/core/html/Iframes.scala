@@ -25,25 +25,20 @@ object Iframes {
   }
 
   def scan(html: String, pageHost: String): Vector[Frame] = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
     val out = Vector.newBuilder[Frame]
-    var i = 0
     var idx = 0
-    while ({ i = lower.indexOf("<iframe", i); i >= 0 }) {
-      val end = lower.indexOf('>', i)
-      if (end < 0) return out.result()
-      val body = html.substring(i + 1, end)
-      val src = HtmlExtract.attr(body, "src").getOrElse("")
-      val srcLower = src.toLowerCase(java.util.Locale.ROOT)
+    val t = new HtmlTokenizer(html)
+    while (t.next()) if (t.isStart("iframe")) {
+      val body = t.body
+      val srcLower = HtmlExtract.attr(body, "src").getOrElse("")
+        .toLowerCase(java.util.Locale.ROOT)
       val h = host(srcLower)
       out += Frame(idx,
         srcHost = h,
         thirdParty = h.nonEmpty && h != pageHost,
-        sandboxed = raw"(^|\s)sandbox(\s|=|$$)".r
-          .findFirstIn(body.toLowerCase(java.util.Locale.ROOT)).isDefined,
+        sandboxed = HtmlExtract.attr(body, "sandbox").isDefined,
         adSlot = adMarkers.exists(srcLower.contains))
       idx += 1
-      i = end + 1
     }
     out.result()
   }

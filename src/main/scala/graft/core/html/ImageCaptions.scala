@@ -9,8 +9,7 @@ import scala.collection.mutable
   * the dominant public caption sources); the Spark op resolves `src`
   * against the page URL so pairs join the crawl's image fetch table.
   *
-  * Single linear pass sharing HtmlExtract's tokenizer conventions
-  * (attr-scanner, entity decode, raw-text skip, boilerplate containers).
+  * One [[HtmlTokenizer]] pass with HtmlExtract's boilerplate containers.
   * Deterministic: output is document order.
   */
 object ImageCaptions {
@@ -32,100 +31,63 @@ object ImageCaptions {
   }
 
   def scan(html: String): Vector[ImageRef] = {
-    val lowerHtml = html.toLowerCase
     val out = mutable.ArrayBuffer[ImageRef]()
     val figStack = mutable.Stack[Fig]()
     var boilerDepth = 0
     var capDepth = 0 // inside <figcaption>
     var ord = 0
 
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val end = html.indexOf("]]>", i + 9)
-          i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i + 1)
-          if (close < 0) i = n
-          else {
-            val rawTag = html.substring(i + 1, close)
-            i = close + 1
-            val isEnd = rawTag.startsWith("/")
-            val body = if (isEnd) rawTag.substring(1) else rawTag
-            val name = body.takeWhile(Character.isLetterOrDigit).toLowerCase
-            if (name.nonEmpty) {
-              if (!isEnd) {
-                if (HtmlExtract.RawTextTags.contains(name) && !rawTag.endsWith("/")) {
-                  val endTag = s"</$name"
-                  val idx = lowerHtml.indexOf(endTag, i)
-                  i = if (idx < 0) n else {
-                    val gt = html.indexOf('>', idx)
-                    if (gt < 0) n else gt + 1
-                  }
-                } else {
-                  if (HtmlExtract.BoilerplateTags.contains(name)) boilerDepth += 1
-                  if (name == "figure") figStack.push(new Fig)
-                  if (name == "figcaption" && figStack.nonEmpty) capDepth += 1
-                  if (name == "img") {
-                    val src = HtmlExtract.attr(body, "src")
-                      .map(HtmlExtract.decodeEntities).getOrElse("")
-                    val alt = HtmlExtract.attr(body, "alt")
-                      .map(v => HtmlExtract.normalizeWs(HtmlExtract.decodeEntities(v)))
-                      .getOrElse("")
-                    if (src.nonEmpty) {
-                      def dim(attrName: String): Int =
-                        HtmlExtract.attr(body, attrName).flatMap(v =>
-                          v.trim.takeWhile(_.isDigit) match {
-                            case "" => None
-                            case d if d.length <= 6 => Some(d.toInt)
-                            case _ => None
-                          }).getOrElse(-1)
-                      val style = HtmlExtract.attr(body, "style")
-                        .map(_.toLowerCase.replace(" ", "")).getOrElse("")
-                      val hidden = style.contains("display:none") ||
-                        style.contains("visibility:hidden")
-                      out += ImageRef(ord, src, alt, "", figStack.nonEmpty,
-                        boilerDepth > 0, dim("width"), dim("height"), hidden)
-                      if (figStack.nonEmpty) figStack.top.imgs += out.length - 1
-                      ord += 1
-                    }
-                  }
-                }
-              } else {
-                if (HtmlExtract.BoilerplateTags.contains(name))
-                  boilerDepth = math.max(0, boilerDepth - 1)
-                if (name == "figcaption") capDepth = math.max(0, capDepth - 1)
-                if (name == "figure" && figStack.nonEmpty) {
-                  val fig = figStack.pop()
-                  val cap = HtmlExtract.normalizeWs(fig.caption.toString)
-                  fig.imgs.foreach { idx =>
-                    out(idx) = out(idx).copy(caption = cap)
-                  }
-                }
-              }
-            }
-          }
-        }
-      } else {
-        val next = html.indexOf('<', i)
-        val end = if (next < 0) n else next
-        if (capDepth > 0 && figStack.nonEmpty)
-          figStack.top.caption.append(HtmlExtract.decodeEntities(html.substring(i, end)))
-        i = end
-      }
-    }
-    // unclosed figures at EOF still hand their caption to their images
-    while (figStack.nonEmpty) {
+    def closeFigure(): Unit = {
       val fig = figStack.pop()
       val cap = HtmlExtract.normalizeWs(fig.caption.toString)
       fig.imgs.foreach(idx => out(idx) = out(idx).copy(caption = cap))
     }
+
+    val t = new HtmlTokenizer(html)
+    while (t.next()) {
+      val name = t.name
+      t.kind match {
+        case HtmlTokenizer.Text =>
+          if (capDepth > 0 && figStack.nonEmpty) figStack.top.caption.append(t.text)
+        case HtmlTokenizer.StartTag if !t.isRawText =>
+          if (HtmlExtract.BoilerplateTags.contains(name)) boilerDepth += 1
+          if (name == "figure") figStack.push(new Fig)
+          if (name == "figcaption" && figStack.nonEmpty) capDepth += 1
+          if (name == "img") {
+            val body = t.body
+            val src = HtmlExtract.attr(body, "src")
+              .map(HtmlExtract.decodeEntities).getOrElse("")
+            if (src.nonEmpty) {
+              val alt = HtmlExtract.attr(body, "alt")
+                .map(v => HtmlExtract.normalizeWs(HtmlExtract.decodeEntities(v)))
+                .getOrElse("")
+              def dim(attrName: String): Int =
+                HtmlExtract.attr(body, attrName).flatMap(v =>
+                  v.trim.takeWhile(_.isDigit) match {
+                    case "" => None
+                    case d if d.length <= 6 => Some(d.toInt)
+                    case _ => None
+                  }).getOrElse(-1)
+              val style = HtmlExtract.attr(body, "style")
+                .map(_.toLowerCase(java.util.Locale.ROOT).replace(" ", "")).getOrElse("")
+              val hidden = style.contains("display:none") ||
+                style.contains("visibility:hidden")
+              out += ImageRef(ord, src, alt, "", figStack.nonEmpty,
+                boilerDepth > 0, dim("width"), dim("height"), hidden)
+              if (figStack.nonEmpty) figStack.top.imgs += out.length - 1
+              ord += 1
+            }
+          }
+        case HtmlTokenizer.EndTag =>
+          if (HtmlExtract.BoilerplateTags.contains(name))
+            boilerDepth = math.max(0, boilerDepth - 1)
+          if (name == "figcaption") capDepth = math.max(0, capDepth - 1)
+          if (name == "figure" && figStack.nonEmpty) closeFigure()
+        case _ => ()
+      }
+    }
+    // unclosed figures at EOF still hand their caption to their images
+    while (figStack.nonEmpty) closeFigure()
     out.toVector
   }
 }

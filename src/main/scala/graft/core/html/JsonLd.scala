@@ -14,50 +14,16 @@ object JsonLd {
   final case class Item(blockIdx: Int, itemIdx: Int, ok: Boolean,
                         jtype: String, name: String)
 
-  /** Raw payloads of ld+json script blocks, in document order.
-    * Case-insensitive tag and attribute handling, quote-variance tolerant. */
+  /** Raw payloads of ld+json script blocks, in document order: the
+    * content of every `<script>` whose `type` is application/ld+json. */
   def blocks(html: String): Vector[String] = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
     val out = Vector.newBuilder[String]
-    var i = 0
-    while ({ i = lower.indexOf("<script", i); i >= 0 }) {
-      val tagEnd = lower.indexOf('>', i)
-      if (tagEnd < 0) return out.result()
-      val tagBody = html.substring(i + 1, tagEnd)
-      if (attrOf(tagBody, "type").exists(
-          _.trim.equalsIgnoreCase("application/ld+json"))) {
-        val close = lower.indexOf("</script", tagEnd + 1)
-        if (close < 0) return out.result()
-        out += html.substring(tagEnd + 1, close)
-        i = close + 8
-      } else i = tagEnd + 1
-    }
+    val t = new HtmlTokenizer(html)
+    while (t.next())
+      if (t.isStart("script") && t.isRawText &&
+          t.attr("type").exists(_.trim.equalsIgnoreCase("application/ld+json")))
+        out += t.content
     out.result()
-  }
-
-  /** Attribute value from a tag body: name="v" | name='v' | name=v. */
-  private def attrOf(tagBody: String, name: String): Option[String] = {
-    val lower = tagBody.toLowerCase(java.util.Locale.ROOT)
-    var i = 0
-    while ({ i = lower.indexOf(name, i); i >= 0 }) {
-      val before = i == 0 || " \t\n\r".indexOf(lower.charAt(i - 1)) >= 0
-      var j = i + name.length
-      while (j < tagBody.length && " \t\n\r".indexOf(tagBody.charAt(j)) >= 0) j += 1
-      if (before && j < tagBody.length && tagBody.charAt(j) == '=') {
-        var k = j + 1
-        while (k < tagBody.length && " \t\n\r".indexOf(tagBody.charAt(k)) >= 0) k += 1
-        if (k < tagBody.length && (tagBody.charAt(k) == '"' || tagBody.charAt(k) == '\'')) {
-          val q = tagBody.charAt(k)
-          val end = tagBody.indexOf(q, k + 1)
-          return Some(if (end < 0) tagBody.substring(k + 1) else tagBody.substring(k + 1, end))
-        }
-        var end = k
-        while (end < tagBody.length && " \t\n\r".indexOf(tagBody.charAt(end)) < 0) end += 1
-        return Some(tagBody.substring(k, end))
-      }
-      i += name.length
-    }
-    None
   }
 
   /** Parse + flatten every block of a page into items. */

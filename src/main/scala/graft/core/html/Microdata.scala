@@ -6,7 +6,8 @@ package graft.core.html
   * itemprop attributes attach (prop, value) pairs to the INNERMOST open
   * item. Values follow the spec's source order: `content` attr (meta),
   * `href` (a/link/area), `src` (img/audio/video/iframe), else the
-  * entity-decoded text run up to the next tag. A tag carrying BOTH
+  * entity-decoded text run that directly follows the tag. One
+  * [[HtmlTokenizer]] pass. A tag carrying BOTH
   * itemprop and itemscope is a nested item: the prop attaches to the
   * OUTER item with the nested item's type as its value. Unclosed or
   * misnested tags are tolerated (pop-until-match), like every real
@@ -25,53 +26,45 @@ object Microdata {
     var stack = List.empty[(String, Int)] // (tagName, itemIdx or -1)
     @inline def innerItem: Int =
       stack.collectFirst { case (_, idx) if idx >= 0 => idx }.getOrElse(-1)
-    var i = 0
-    var done = false
-    while (!done) {
-      val lt = html.indexOf('<', i)
-      val gt = if (lt < 0) -1 else html.indexOf('>', lt)
-      if (lt < 0 || gt < 0) done = true
-      else {
-        val body = html.substring(lt + 1, gt)
-        if (body.startsWith("!") || body.startsWith("?")) i = gt + 1
-        else if (body.startsWith("/")) {
-          val name = body.drop(1).trim.takeWhile(!_.isWhitespace)
-            .toLowerCase(java.util.Locale.ROOT)
-          val at = stack.indexWhere(_._1 == name)
-          if (at >= 0) stack = stack.drop(at + 1)
-          i = gt + 1
-        } else {
-          val name = body.takeWhile(c => !c.isWhitespace && c != '/')
-            .toLowerCase(java.util.Locale.ROOT)
-          val selfClosing = body.endsWith("/") || Void(name)
-          val scoped = HtmlExtract.attr(body, "itemscope").isDefined
-          val owner = innerItem // the enclosing item BEFORE this tag opens
-          val itemIdx =
-            if (scoped) {
-              itemTypes += HtmlExtract.attr(body, "itemtype").getOrElse("")
-              itemTypes.length - 1
-            } else -1
-          HtmlExtract.attr(body, "itemprop").foreach { prop =>
-            if (scoped) {
-              // nested item as a property of the outer item
-              if (owner >= 0) raw += ((owner, prop, itemTypes(itemIdx)))
-            } else if (owner >= 0) {
-              val value = HtmlExtract.attr(body, "content")
-                .orElse(HtmlExtract.attr(body, "href"))
-                .orElse(HtmlExtract.attr(body, "src"))
-                .getOrElse {
-                  val next = html.indexOf('<', gt + 1)
-                  val end = if (next < 0) html.length else next
-                  HtmlExtract.decodeEntities(html.substring(gt + 1, end)).trim
-                }
-              raw += ((owner, prop, value))
+    // a prop whose value is the text run right after its tag: (owner, prop)
+    var pending: (Int, String) = null
+    val t = new HtmlTokenizer(html)
+    while (t.next()) {
+      if (pending != null) {
+        val value = if (t.kind == HtmlTokenizer.Text) t.text.trim else ""
+        raw += ((pending._1, pending._2, value))
+        pending = null
+      }
+      if (t.kind == HtmlTokenizer.EndTag) {
+        val at = stack.indexWhere(_._1 == t.name)
+        if (at >= 0) stack = stack.drop(at + 1)
+      } else if (t.kind == HtmlTokenizer.StartTag) {
+        val body = t.body
+        val scoped = HtmlExtract.attr(body, "itemscope").isDefined
+        val owner = innerItem // the enclosing item BEFORE this tag opens
+        val itemIdx =
+          if (scoped) {
+            itemTypes += HtmlExtract.attr(body, "itemtype").getOrElse("")
+            itemTypes.length - 1
+          } else -1
+        HtmlExtract.attr(body, "itemprop").foreach { prop =>
+          if (scoped) {
+            // nested item as a property of the outer item
+            if (owner >= 0) raw += ((owner, prop, itemTypes(itemIdx)))
+          } else if (owner >= 0) {
+            HtmlExtract.attr(body, "content")
+              .orElse(HtmlExtract.attr(body, "href"))
+              .orElse(HtmlExtract.attr(body, "src")) match {
+              case Some(value) => raw += ((owner, prop, value))
+              case None => pending = (owner, prop)
             }
           }
-          if (!selfClosing) stack = (name, itemIdx) :: stack
-          i = gt + 1
         }
+        // a raw-text element is closed already; its end tag is consumed
+        if (!t.selfClosing && !t.isRawText && !Void(t.name)) stack = (t.name, itemIdx) :: stack
       }
     }
+    if (pending != null) raw += ((pending._1, pending._2, ""))
     val inventory = itemTypes.zipWithIndex.map { case (t, idx) =>
       Prop(idx, t, "@type", t)
     }.toVector

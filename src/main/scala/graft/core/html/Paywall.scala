@@ -7,8 +7,7 @@ package graft.core.html
   *
   * Three independent, cheap signals (each one per-row, zero shuffle):
   *   1. `hasPasswordInput` — an `<input type="password">` anywhere in the
-  *      page (login wall). Attribute parsing via the quote-aware
-  *      [[HtmlExtract.attr]] tokenizer, never regex-over-HTML.
+  *      page (login wall), found with [[HtmlTokenizer]].
   *   2. `jsonldNotFree` — schema.org's explicit paywall marker
   *      `"isAccessibleForFree": false` inside an ld+json block (the
   *      industry-standard flexible-sampling annotation). Tolerates the
@@ -34,18 +33,12 @@ object Paywall {
     "this article is for subscribers",
     "to continue reading, please")
 
-  /** Case-insensitive scan for `<input … type=password>`. */
+  /** Any `<input type=password>` start tag. */
   private def hasPasswordInput(html: String): Boolean = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
-    var i = 0
-    while ({ i = lower.indexOf("<input", i); i >= 0 }) {
-      val end = lower.indexOf('>', i)
-      if (end < 0) return false
-      val body = html.substring(i + 1, end)
-      if (HtmlExtract.attr(body, "type")
-            .exists(_.trim.equalsIgnoreCase("password"))) return true
-      i = end + 1
-    }
+    val t = new HtmlTokenizer(html)
+    while (t.next())
+      if (t.isStart("input") && t.attr("type").exists(_.trim.equalsIgnoreCase("password")))
+        return true
     false
   }
 

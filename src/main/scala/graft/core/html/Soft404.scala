@@ -37,18 +37,10 @@ object Soft404 {
     "page may have been moved or deleted",
     "sorry, we couldn't find that page")
 
-  private def title(html: String): String = {
-    val lower = html.toLowerCase(java.util.Locale.ROOT)
-    val i = lower.indexOf("<title")
-    if (i < 0) return ""
-    val open = lower.indexOf('>', i)
-    val close = lower.indexOf("</title", open)
-    if (open < 0 || close < 0) "" else html.substring(open + 1, close)
-  }
-
   def scan(html: String): Signals = {
-    val t = title(html).toLowerCase(java.util.Locale.ROOT)
-    val main = HtmlExtract.parseString(html).mainText()
+    val doc = HtmlExtract.parseString(html)
+    val t = doc.title.toLowerCase(java.util.Locale.ROOT)
+    val main = doc.mainText()
     val m = main.toLowerCase(java.util.Locale.ROOT)
     Signals(
       titleMarker = t.nonEmpty && titleMarkers.exists(t.contains),

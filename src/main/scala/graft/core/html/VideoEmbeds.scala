@@ -5,14 +5,14 @@ import scala.collection.mutable
 /** Video-embed mining over raw HTML — the video half of multimodal pair
   * harvesting: embedded players (iframe), native <video>/<source> elements,
   * and og:video metadata, each with its raw src. The page title/og:title
-  * is the text side of the pair (joined by the op). Single linear pass
-  * sharing HtmlExtract's tokenizer conventions. */
+  * is the text side of the pair (joined by the op). One [[HtmlTokenizer]]
+  * pass. */
 object VideoEmbeds {
 
   final case class Embed(ord: Int, kind: String, src: String, provider: String)
 
   private def providerOf(src: String): String = {
-    val l = src.toLowerCase
+    val l = src.toLowerCase(java.util.Locale.ROOT)
     val host = l.replaceFirst("^[a-z][a-z0-9+.-]*://", "")
       .takeWhile(c => c != '/' && c != '?')
     def is(d: String) = host == d || host.endsWith("." + d)
@@ -23,73 +23,29 @@ object VideoEmbeds {
   }
 
   def scan(html: String): Vector[Embed] = {
-    val lowerHtml = html.toLowerCase
     val out = mutable.ArrayBuffer[Embed]()
-    var ord = 0
     var videoDepth = 0
 
-    def emit(kind: String, src: String): Unit = {
-      if (src.nonEmpty) {
-        out += Embed(ord, kind, src, providerOf(src))
-        ord += 1
+    def emit(kind: String, src: Option[String]): Unit =
+      src.map(HtmlExtract.decodeEntities).filter(_.nonEmpty).foreach { s =>
+        out += Embed(out.length, kind, s, providerOf(s))
       }
-    }
 
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      if (html.charAt(i) == '<') {
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i + 1)
-          if (close < 0) i = n
-          else {
-            val rawTag = html.substring(i + 1, close)
-            i = close + 1
-            val isEnd = rawTag.startsWith("/")
-            val body = if (isEnd) rawTag.substring(1) else rawTag
-            val name = body.takeWhile(Character.isLetterOrDigit).toLowerCase
-            if (!isEnd) name match {
-              case "iframe" =>
-                emit("iframe", HtmlExtract.attr(body, "src")
-                  .map(HtmlExtract.decodeEntities).getOrElse(""))
-                // iframe content (if any) is inert — skip to the end tag
-                if (!rawTag.endsWith("/")) {
-                  val idx = lowerHtml.indexOf("</iframe", i)
-                  i = if (idx < 0) n else {
-                    val gt = html.indexOf('>', idx)
-                    if (gt < 0) n else gt + 1
-                  }
-                }
-              case "video" =>
-                videoDepth += 1
-                emit("video", HtmlExtract.attr(body, "src")
-                  .map(HtmlExtract.decodeEntities).getOrElse(""))
-              case "source" if videoDepth > 0 =>
-                emit("video", HtmlExtract.attr(body, "src")
-                  .map(HtmlExtract.decodeEntities).getOrElse(""))
-              case "meta" =>
-                val prop = HtmlExtract.attr(body, "property").map(_.toLowerCase)
-                if (prop.contains("og:video") || prop.contains("og:video:url"))
-                  emit("og", HtmlExtract.attr(body, "content")
-                    .map(HtmlExtract.decodeEntities).getOrElse(""))
-              case s if HtmlExtract.RawTextTags.contains(s) && s != "iframe" &&
-                !rawTag.endsWith("/") =>
-                val idx = lowerHtml.indexOf(s"</$s", i)
-                i = if (idx < 0) n else {
-                  val gt = html.indexOf('>', idx)
-                  if (gt < 0) n else gt + 1
-                }
-              case _ => ()
-            } else if (name == "video") videoDepth = math.max(0, videoDepth - 1)
-          }
-        }
-      } else {
-        val next = html.indexOf('<', i)
-        i = if (next < 0) n else next
-      }
+    val t = new HtmlTokenizer(html)
+    while (t.next()) {
+      if (t.kind == HtmlTokenizer.StartTag) t.name match {
+        case "iframe" => emit("iframe", t.attr("src")) // its content is skipped
+        case "video" =>
+          videoDepth += 1
+          emit("video", t.attr("src"))
+        case "source" if videoDepth > 0 => emit("video", t.attr("src"))
+        case "meta" =>
+          val body = t.body
+          val prop = HtmlExtract.attr(body, "property").map(_.toLowerCase(java.util.Locale.ROOT))
+          if (prop.contains("og:video") || prop.contains("og:video:url"))
+            emit("og", HtmlExtract.attr(body, "content"))
+        case _ => ()
+      } else if (t.isEnd("video")) videoDepth = math.max(0, videoDepth - 1)
     }
     out.toVector
   }

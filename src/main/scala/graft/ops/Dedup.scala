@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -39,18 +39,6 @@ object Dedup {
     corpus.groupBy(md5(col("text")).as("h"))
       .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("keeper"))
       .where(col("cnt") > 1)
-
-  /** Word 3-gram shingle set, distinct, as a column (array<string>).
-    * NOTE: only for small/expository use — Catalyst higher-order lambdas
-    * re-evaluate the captured `split` per element (O(tokens²) per row).
-    * The operators below shingle in one typed-map pass instead. */
-  def shingles3(text: Column): Column = {
-    val toks = split(text, " ")
-    array_distinct(filter(
-      transform(toks, (_, i) =>
-        when(i + 2 < size(toks), concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))),
-      x => x.isNotNull))
-  }
 
   /** Distinct word-3-gram shingles of a text, single pass (Scala side).
     * split(" ", -1) keeps trailing empty tokens — matching Catalyst split

@@ -15,26 +15,14 @@ object Feeds {
   final case class FeedEntry(fmt: String, idx: Long, link: String,
                              title: String, published: String)
 
-  private def isGzip(b: Array[Byte]): Boolean =
-    b.length >= 2 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b
-
-  private def gunzip(b: Array[Byte], maxBytes: Int): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n > 0 && out.size <= maxBytes) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
-
   /** Parse one feed payload. RSS: item/link/title/pubDate; Atom:
-    * entry/link@href/title/updated. Unknown roots → empty. */
+    * entry/link@href/title/updated. Unknown roots, and a body over
+    * `maxBytes` (compressed or plain, see [[graft.core.Http.sniffedBody]]),
+    * → empty. */
   def parseFeed(body: Array[Byte], maxBytes: Int = 64 << 20): Vector[FeedEntry] = {
     if (body == null || body.length == 0) return Vector.empty
-    val raw = try { if (isGzip(body)) gunzip(body, maxBytes) else body }
-    catch { case _: Exception => return Vector.empty }
-    val xml = new String(raw, 0, math.min(raw.length, maxBytes),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val raw = graft.core.Http.sniffedBody(body, maxBytes).getOrElse(return Vector.empty)
+    val xml = new String(raw, java.nio.charset.StandardCharsets.UTF_8)
     val isAtom = xml.contains("<feed")
     val isRss = xml.contains("<rss") || xml.contains("<channel")
     if (!isAtom && !isRss) return Vector.empty

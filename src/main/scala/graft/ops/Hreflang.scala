@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.core.html.{HtmlExtract, HtmlTokenizer}
 import graft.spark.PageRow
 
 /** hreflang alternate-link clustering — how multilingual corpora find
@@ -16,45 +17,19 @@ object Hreflang {
 
   final case class AltLink(url: String, hreflang: String, href: String)
 
-  /** Scan head <link> tags for rel=alternate hreflang entries. Real
-    * scanner discipline: comments skipped, attribute order free, both
-    * quote styles; stops at </head> (body links are not hreflang
-    * declarations). */
+  /** Head `<link rel="alternate" hreflang=… href=…>` entries, from one
+    * [[HtmlTokenizer]] pass that stops at `</head>` (body links are not
+    * hreflang declarations). */
   def extractAlternates(html: String, pageUrl: String): Vector[AltLink] = {
     if (html == null) return Vector.empty
-    // case-insensitive search on the ORIGINAL string — lowercasing a copy
-    // can change string length (Turkish İ → "i̇"), misaligning the index
-    val m = java.util.regex.Pattern
-      .compile("</head", java.util.regex.Pattern.CASE_INSENSITIVE)
-      .matcher(html)
-    val headEnd = if (m.find()) m.start() else html.length
     val out = Vector.newBuilder[AltLink]
-    var i = 0
-    while (i < headEnd) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0 || lt >= headEnd) { i = headEnd }
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) headEnd else end + 3
-      } else {
-        val gt = html.indexOf('>', lt)
-        if (gt < 0) { i = headEnd }
-        else {
-          val tag = html.substring(lt + 1, gt)
-          val name = tag.takeWhile(_.isLetter).toLowerCase(java.util.Locale.ROOT)
-          if (name == "link") {
-            def attr(k: String): String = {
-              val m = (s"""(?i)\\b$k\\s*=\\s*("([^"]*)"|'([^']*)')""").r
-                .findFirstMatchIn(tag)
-              m.map(g => Option(g.group(2)).getOrElse(g.group(3))).getOrElse("")
-            }
-            if (attr("rel").equalsIgnoreCase("alternate") && attr("hreflang").nonEmpty)
-              out += AltLink(pageUrl,
-                attr("hreflang").toLowerCase(java.util.Locale.ROOT), attr("href"))
-          }
-          i = gt + 1
-        }
-      }
+    val t = new HtmlTokenizer(html)
+    while (t.next() && !t.isEnd("head")) if (t.isStart("link")) {
+      val body = t.body
+      def attr(k: String): String = HtmlExtract.attr(body, k).getOrElse("")
+      val lang = attr("hreflang")
+      if (attr("rel").equalsIgnoreCase("alternate") && lang.nonEmpty)
+        out += AltLink(pageUrl, lang.toLowerCase(java.util.Locale.ROOT), attr("href"))
     }
     out.result()
   }
@@ -67,8 +42,7 @@ object Hreflang {
     import spark.implicits._
     pages.flatMap { p =>
       val alts = extractAlternates(
-        if (p.html == null) null
-        else new String(p.html, java.nio.charset.StandardCharsets.UTF_8), p.url)
+        if (p.html == null) null else HtmlExtract.decodeBytes(p.html), p.url)
       if (alts.isEmpty) Iterator.empty
       else {
         val key = java.security.MessageDigest.getInstance("MD5")

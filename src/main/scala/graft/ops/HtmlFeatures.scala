@@ -2,76 +2,33 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.html.HtmlTokenizer
 
 /** Render-worthiness features for HTML payloads — the routing signal
   * that decides whether a page's content is IN the html (extract
   * directly) or behind JavaScript (re-fetch through a headless browser,
   * 100× the cost): script/iframe/form tag counts and visible paragraph
-  * count, with a SPA heuristic flag. A real one-pass tag scanner, not a
-  * regex: tags inside <script>/<style> BODIES and comments must not
-  * count (the synthesized corpus plants decoy "<iframe>" strings inside
-  * script bodies, so a regex counter fails the oracle). Narrow per-row
-  * parse, zero shuffle, bounded by payload length. */
+  * count, with a SPA heuristic flag. One [[HtmlTokenizer]] pass, not a
+  * regex: tags inside raw-text BODIES and comments must not count (the
+  * synthesized corpus plants decoy "<iframe>" strings inside script
+  * bodies, so a regex counter fails the oracle). Narrow per-row parse,
+  * zero shuffle, bounded by payload length. */
 object HtmlFeatures {
 
   final case class Features(nScript: Long, nIframe: Long, nForm: Long,
                             nP: Long, nA: Long)
 
-  private def skipTo(html: String, from: Int, needle: String): Int = {
-    // case-insensitive indexOf
-    val lower = needle // callers pass lowercase
-    var i = from
-    while (i + lower.length <= html.length) {
-      var k = 0
-      while (k < lower.length &&
-        Character.toLowerCase(html.charAt(i + k)) == lower.charAt(k)) k += 1
-      if (k == lower.length) return i
-      i += 1
-    }
-    html.length
-  }
-
   def features(html: String): Features = {
     if (html == null) return Features(0, 0, 0, 0, 0)
-    var i = 0
     var nScript = 0L; var nIframe = 0L; var nForm = 0L; var nP = 0L; var nA = 0L
-    while (i < html.length) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) { i = html.length }
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) html.length else end + 3
-      } else {
-        val gt = html.indexOf('>', lt)
-        if (gt < 0) { i = html.length }
-        else {
-          val inner = html.substring(lt + 1, gt)
-          val closing = inner.startsWith("/")
-          val name = (if (closing) inner.drop(1) else inner)
-            .takeWhile(_.isLetter).toLowerCase(java.util.Locale.ROOT)
-          if (!closing) name match {
-            case "script" =>
-              nScript += 1
-              // skip the raw-text body: decoys inside must not count
-              val close = skipTo(html, gt + 1, "</script")
-              i = if (close >= html.length) html.length
-                  else math.max(html.indexOf('>', close) + 1, close + 8)
-            case "style" =>
-              val close = skipTo(html, gt + 1, "</style")
-              i = if (close >= html.length) html.length
-                  else math.max(html.indexOf('>', close) + 1, close + 7)
-            case _ =>
-              name match {
-                case "iframe" => nIframe += 1
-                case "form" => nForm += 1
-                case "p" => nP += 1
-                case "a" => nA += 1
-                case _ =>
-              }
-              i = gt + 1
-          } else i = gt + 1
-        }
-      }
+    val t = new HtmlTokenizer(html)
+    while (t.next()) if (t.kind == HtmlTokenizer.StartTag) t.name match {
+      case "script" => nScript += 1
+      case "iframe" => nIframe += 1
+      case "form" => nForm += 1
+      case "p" => nP += 1
+      case "a" => nA += 1
+      case _ =>
     }
     Features(nScript, nIframe, nForm, nP, nA)
   }
@@ -92,40 +49,17 @@ object HtmlFeatures {
       s"<body>$ps$iframes$forms$as</body></html>"
   }
 
-  /** Open-tag name sequence in document order — same scanner discipline
-    * as [[features]] (script/style raw-text bodies and comments skipped,
-    * so decoy tags can't perturb the shape). This is the page's DOM-SHAPE
-    * signature: two pages of the same template produce the same sequence
-    * whatever their text says. */
+  /** Open-tag name sequence in document order, from [[HtmlTokenizer]]
+    * (raw-text bodies and comments skipped, so decoy tags can't perturb
+    * the shape). This is the page's DOM-SHAPE signature: two pages of the
+    * same template produce the same sequence whatever their text says. */
   def tagSequence(html: String): String = {
     if (html == null) return ""
     val out = new StringBuilder
-    var i = 0
-    while (i < html.length) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) { i = html.length }
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) html.length else end + 3
-      } else {
-        val gt = html.indexOf('>', lt)
-        if (gt < 0) { i = html.length }
-        else {
-          val inner = html.substring(lt + 1, gt)
-          val closing = inner.startsWith("/")
-          val name = (if (closing) inner.drop(1) else inner)
-            .takeWhile(_.isLetter).toLowerCase(java.util.Locale.ROOT)
-          if (!closing && name.nonEmpty) {
-            if (out.nonEmpty) out.append(',')
-            out.append(name)
-            if (name == "script" || name == "style") {
-              val close = skipTo(html, gt + 1, "</" + name)
-              i = if (close >= html.length) html.length
-                  else math.max(html.indexOf('>', close) + 1, close + name.length + 2)
-            } else i = gt + 1
-          } else i = gt + 1
-        }
-      }
+    val t = new HtmlTokenizer(html)
+    while (t.next()) if (t.kind == HtmlTokenizer.StartTag) {
+      if (out.nonEmpty) out.append(',')
+      out.append(t.name)
     }
     out.result()
   }

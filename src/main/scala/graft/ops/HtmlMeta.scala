@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.Dataset
-import graft.core.html.HtmlExtract
+import graft.core.html.{HtmlExtract, HtmlTokenizer}
 import graft.spark.PageRow
 
 /** Per-page HTML document metadata (title, lang, meta description,
@@ -78,35 +78,34 @@ object HtmlMeta {
   /** Page-level robots directives (`<meta name="robots" content="…">`) —
     * the per-PAGE complement of the robots.txt gate: a compliant corpus
     * drops noindex pages and withholds nofollow pages' links from the
-    * link graph. Lenient tag scan (same attr parser as the extractor),
+    * link graph. One [[HtmlTokenizer]] pass over the decoded page,
     * directives matched as comma/space-separated tokens, multiple robots
     * metas OR together (the restrictive union, what search engines do). */
   def robotsMeta(pages: Dataset[PageRow]): Dataset[RobotsMetaRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val Tag = "(?is)<meta\\b([^>]*)>".r
     pages.map { p =>
       if (p.html == null) RobotsMetaRow(p.url, false, false, false, false, true)
-      else {
-        val html = new String(p.html, java.nio.charset.StandardCharsets.UTF_8)
-        var found = false; var noi = false; var nof = false; var noa = false
-        Tag.findAllMatchIn(html).foreach { m =>
-          val body = "meta " + m.group(1)
-          val isRobots = HtmlExtract.attr(body, "name")
-            .exists(_.trim.equalsIgnoreCase("robots"))
-          if (isRobots) {
-            found = true
-            val toks = HtmlExtract.attr(body, "content").getOrElse("")
-              .toLowerCase(java.util.Locale.ROOT)
-              .split("[,\\s]+").map(_.trim).filter(_.nonEmpty).toSet
-            if (toks.contains("noindex") || toks.contains("none")) noi = true
-            if (toks.contains("nofollow") || toks.contains("none")) nof = true
-            if (toks.contains("noarchive")) noa = true
-          }
-        }
-        RobotsMetaRow(p.url, found, noi, nof, noa, !noi)
+      else robotsMetaOf(p.url, HtmlExtract.decodeBytes(p.html))
+    }
+  }
+
+  private[ops] def robotsMetaOf(url: String, html: String): RobotsMetaRow = {
+    var found = false; var noi = false; var nof = false; var noa = false
+    val t = new HtmlTokenizer(html)
+    while (t.next()) if (t.isStart("meta")) {
+      val body = t.body
+      if (HtmlExtract.attr(body, "name").exists(_.trim.equalsIgnoreCase("robots"))) {
+        found = true
+        val toks = HtmlExtract.attr(body, "content").getOrElse("")
+          .toLowerCase(java.util.Locale.ROOT)
+          .split("[,\\s]+").map(_.trim).filter(_.nonEmpty).toSet
+        if (toks.contains("noindex") || toks.contains("none")) noi = true
+        if (toks.contains("nofollow") || toks.contains("none")) nof = true
+        if (toks.contains("noarchive")) noa = true
       }
     }
+    RobotsMetaRow(url, found, noi, nof, noa, !noi)
   }
 
   /** HTML → Markdown render over the extractor's block stream (the HTML
@@ -166,7 +165,7 @@ object HtmlMeta {
     pages.flatMap { p =>
       if (p.html == null) Seq.empty[MicrodataRow]
       else graft.core.html.Microdata
-        .props(new String(p.html, java.nio.charset.StandardCharsets.UTF_8))
+        .props(HtmlExtract.decodeBytes(p.html))
         .map(m => MicrodataRow(p.url, m.itemIdx, m.itemType, m.prop, m.value))
     }
   }
@@ -194,7 +193,7 @@ object HtmlMeta {
       if (p.html == null) Seq.empty[ImageCaptionRow]
       else {
         graft.core.html.ImageCaptions.scan(graft.core.html.HtmlExtract.decodeBytes(p.html))
-          .filter(r => !r.src.toLowerCase.startsWith("data:"))
+          .filter(r => !r.src.toLowerCase(java.util.Locale.ROOT).startsWith("data:"))
           .map { r =>
             val resolved = graft.core.html.HtmlLinks.resolve(p.url, r.src)
             ImageCaptionRow(p.url, r.ord.toLong,
@@ -223,47 +222,41 @@ object HtmlMeta {
     import spark.implicits._
     pages.map { p =>
       if (p.html == null) MetaRefreshRow(p.url, false, -1L, "", false)
-      else {
-        val html = HtmlExtract.decodeBytes(p.html)
-        val lower = html.toLowerCase
-        var found: Option[(Long, String)] = None
-        var i = lower.indexOf("<meta")
-        while (i >= 0 && found.isEmpty) {
-          val close = html.indexOf('>', i)
-          if (close < 0) i = -1
-          else {
-            val body = html.substring(i + 1, close)
-            if (HtmlExtract.attr(body, "http-equiv").exists(_.equalsIgnoreCase("refresh"))) {
-              val content = HtmlExtract.attr(body, "content").getOrElse("")
-              val parts = content.split(";", 2)
-              val delay = parts(0).trim.takeWhile(_.isDigit) match {
-                case "" => -1L
-                case d if d.length <= 9 => d.toLong
-                case _ => -1L
-              }
-              val target =
-                if (parts.length < 2) ""
-                else {
-                  val rest = parts(1).trim
-                  val eq = rest.indexOf('=')
-                  if (eq < 0 || !rest.substring(0, eq).trim.equalsIgnoreCase("url")) ""
-                  else rest.substring(eq + 1).trim
-                    .stripPrefix("'").stripSuffix("'")
-                    .stripPrefix("\"").stripSuffix("\"").trim
-                }
-              if (delay >= 0) found = Some((delay,
-                if (target.isEmpty) ""
-                else graft.core.html.HtmlLinks.resolve(p.url, HtmlExtract.decodeEntities(target))))
-            }
-            i = lower.indexOf("<meta", close)
-          }
+      else metaRefreshOf(p.url, HtmlExtract.decodeBytes(p.html))
+    }
+  }
+
+  private[ops] def metaRefreshOf(url: String, html: String): MetaRefreshRow = {
+    val t = new HtmlTokenizer(html)
+    while (t.next()) if (t.isStart("meta")) {
+      val body = t.body
+      if (HtmlExtract.attr(body, "http-equiv").exists(_.equalsIgnoreCase("refresh"))) {
+        val content = HtmlExtract.attr(body, "content").getOrElse("")
+        val parts = content.split(";", 2)
+        val delay = parts(0).trim.takeWhile(_.isDigit) match {
+          case "" => -1L
+          case d if d.length <= 9 => d.toLong
+          case _ => -1L
         }
-        found match {
-          case Some((d, t)) => MetaRefreshRow(p.url, true, d, t, d == 0L && t.nonEmpty)
-          case None         => MetaRefreshRow(p.url, false, -1L, "", false)
+        val target =
+          if (parts.length < 2) ""
+          else {
+            val rest = parts(1).trim
+            val eq = rest.indexOf('=')
+            if (eq < 0 || !rest.substring(0, eq).trim.equalsIgnoreCase("url")) ""
+            else rest.substring(eq + 1).trim
+              .stripPrefix("'").stripSuffix("'")
+              .stripPrefix("\"").stripSuffix("\"").trim
+          }
+        if (delay >= 0) {
+          val resolved =
+            if (target.isEmpty) ""
+            else graft.core.html.HtmlLinks.resolve(url, HtmlExtract.decodeEntities(target))
+          return MetaRefreshRow(url, true, delay, resolved, delay == 0L && resolved.nonEmpty)
         }
       }
     }
+    MetaRefreshRow(url, false, -1L, "", false)
   }
 
   final case class TrackingPixelRow(
@@ -293,7 +286,7 @@ object HtmlMeta {
           graft.core.html.HtmlExtract.decodeBytes(p.html)).map { r =>
         val resolved = graft.core.html.HtmlLinks.resolve(p.url, r.src)
         val full = if (resolved.isEmpty) r.src else resolved
-        val host = full.toLowerCase
+        val host = full.toLowerCase(java.util.Locale.ROOT)
           .replaceFirst("^[a-z][a-z0-9+.-]*://", "").takeWhile(c => c != '/' && c != '?')
         val tracker = TrackerHosts.exists(t => host == t || host.endsWith("." + t))
         val pixel = r.width >= 0 && r.width <= 1 && r.height >= 0 && r.height <= 1
@@ -351,7 +344,7 @@ object HtmlMeta {
     import spark.implicits._
     imageCaptions(pages).map { r =>
       val pairText = if (r.caption.nonEmpty) r.caption else r.alt
-      val altNorm = r.alt.toLowerCase.trim
+      val altNorm = r.alt.toLowerCase(java.util.Locale.ROOT).trim
       val reason =
         if (r.boilerplate) "boilerplate"
         else if (pairText.isEmpty) "no_text"
@@ -373,7 +366,7 @@ object HtmlMeta {
     pages.flatMap { p =>
       if (p.html == null) Seq.empty[JsonLdRow]
       else graft.core.html.JsonLd
-        .items(new String(p.html, java.nio.charset.StandardCharsets.UTF_8))
+        .items(HtmlExtract.decodeBytes(p.html))
         .map(it => JsonLdRow(p.url, it.blockIdx, it.itemIdx, it.ok, it.jtype, it.name))
     }
   }

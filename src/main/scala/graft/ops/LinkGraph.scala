@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.html.HtmlLinks
+import graft.core.html.{HtmlExtract, HtmlLinks, HtmlTokenizer}
 import graft.functions.NativeColumns
 import graft.spark.PageRow
 
@@ -33,8 +33,7 @@ object LinkGraph {
     pages.flatMap { p =>
       if (p.html == null) Iterator.empty
       else {
-        val doc = new String(p.html, java.nio.charset.StandardCharsets.UTF_8)
-        HtmlLinks.extractLinks(doc, p.url).iterator.map(l =>
+        HtmlLinks.extractLinks(HtmlExtract.decodeBytes(p.html), p.url).iterator.map(l =>
           LinkRow(p.url, l.href, l.dst, l.anchor, l.nofollow, l.boilerplate))
       }
     }
@@ -85,27 +84,17 @@ object LinkGraph {
 
   /** First rel="next" target in the page head/body — the pagination link
     * (<link rel="next"> or <a rel="next">) multi-page articles carry.
-    * Lenient scan, quote-aware attrs, rel is a whitespace token list. */
+    * One [[HtmlTokenizer]] pass; rel is a whitespace token list. */
   private[ops] def relNextOf(html: String): Option[String] = {
-    var i = 0
-    while (i < html.length) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) return None
-      val gt = html.indexOf('>', lt)
-      if (gt < 0) return None
-      val body = html.substring(lt + 1, gt)
-      val name = body.takeWhile(c => !c.isWhitespace && c != '/')
-        .toLowerCase(java.util.Locale.ROOT)
-      if (name == "link" || name == "a") {
-        val isNext = graft.core.html.HtmlExtract.attr(body, "rel")
-          .exists(_.toLowerCase(java.util.Locale.ROOT)
-            .split("\\s+").contains("next"))
-        if (isNext) {
-          val href = graft.core.html.HtmlExtract.attr(body, "href")
-          if (href.exists(_.nonEmpty)) return href
-        }
+    val t = new HtmlTokenizer(html)
+    while (t.next()) if (t.isStart("link") || t.isStart("a")) {
+      val body = t.body
+      val isNext = HtmlExtract.attr(body, "rel")
+        .exists(_.toLowerCase(java.util.Locale.ROOT).split("\\s+").contains("next"))
+      if (isNext) {
+        val href = HtmlExtract.attr(body, "href")
+        if (href.exists(_.nonEmpty)) return href
       }
-      i = gt + 1
     }
     None
   }
@@ -127,7 +116,7 @@ object LinkGraph {
     import spark.implicits._
     val edges = pages.flatMap { p =>
       if (p.html == null) None
-      else relNextOf(new String(p.html, java.nio.charset.StandardCharsets.UTF_8))
+      else relNextOf(HtmlExtract.decodeBytes(p.html))
         .map(n => (p.url, n))
     }.toDF("src", "next")
     val urls = pages.map(_.url).toDF("url")

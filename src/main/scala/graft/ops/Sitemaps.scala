@@ -29,24 +29,12 @@ object Sitemaps {
       changefreq: String,
       priority: String)
 
-  private def isGzip(b: Array[Byte]): Boolean =
-    b.length > 1 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b
-
-  /** Parse one sitemap payload (gzip-sniffed) into its entries. */
+  /** Parse one sitemap payload (gzip-sniffed) into its entries; a body
+    * over `maxBytes`, compressed or plain, gives none
+    * ([[graft.core.Http.sniffedBody]]). */
   def parseSitemap(sitemapUrl: String, body: Array[Byte], maxBytes: Int = 64 << 20): Vector[SitemapEntry] = {
     if (body == null || body.isEmpty) return Vector.empty
-    val xmlBytes =
-      if (isGzip(body)) {
-        try {
-          val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(body))
-          val out = new java.io.ByteArrayOutputStream(math.min(maxBytes, body.length * 4))
-          val buf = new Array[Byte](8192)
-          var n = in.read(buf)
-          while (n >= 0 && out.size() <= maxBytes) { out.write(buf, 0, n); n = in.read(buf) }
-          if (out.size() > maxBytes) return Vector.empty
-          out.toByteArray
-        } catch { case _: java.io.IOException => return Vector.empty }
-      } else body
+    val xmlBytes = graft.core.Http.sniffedBody(body, maxBytes).getOrElse(return Vector.empty)
     val xml = new String(xmlBytes, UTF_8)
     val out = Vector.newBuilder[SitemapEntry]
     var i = 0

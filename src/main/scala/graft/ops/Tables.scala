@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.core.html.HtmlTables
+import graft.core.html.{HtmlExtract, HtmlTables}
 import graft.spark.PageRow
 
 /** DataFrame surface over [[graft.core.html.HtmlTables]]: web-table cells
@@ -25,8 +25,7 @@ object Tables {
     import spark.implicits._
     pages.flatMap { p =>
       if (p.html == null) Iterator.empty
-      else HtmlTables.extractTables(
-          new String(p.html, java.nio.charset.StandardCharsets.UTF_8))
+      else HtmlTables.extractTables(HtmlExtract.decodeBytes(p.html))
         .iterator.map(c =>
           CellRow(p.url, c.tableIdx, c.rowIdx, c.colIdx, c.header, c.colspan, c.text))
     }

@@ -743,8 +743,8 @@ object TextStats {
     * rightmost-min window selection, ONE md5 per gram in a tight typed
     * loop. Deliberately NOT a Catalyst higher-order expression: a lambda
     * that windows over a computed gram array re-evaluates the whole
-    * array per window after projection collapse (the `shingles3` pitfall
-    * above) — O(G²) md5 calls per row. Returns (n_grams, packed
+    * array per window after projection collapse — O(G²) md5 calls per
+    * row. Returns (n_grams, packed
     * selections) with each selection packed pos·2³¹ + hash (hash < 2³¹,
     * lossless), first-occurrence deduped. */
   private[ops] def winnowSelect(text: String, k: Int, w: Int): (Int, Array[Long]) = {
@@ -1261,17 +1261,6 @@ object TextStats {
         (-col("h.ns")).as("score"))
   }
 
-  /** Hyphenated-linebreak corpus: plant an "exam-\nple"-style soft line
-    * break inside every word of ≥ 5 lowercase letters followed by a space
-    * (the corpus text is space-joined lowercase words, so the regex
-    * `([a-z]{3})([a-z]{2}) ` splits the last five letters of each such
-    * word). Fixed-length pattern, non-overlapping global replace — the
-    * identical match sequence in Java regex and RE2, so the DuckDB oracle
-    * replays it verbatim. */
-  def corpusWithHyphenBreaks(docs: DataFrame): DataFrame =
-    docs.withColumn("text",
-      regexp_replace(col("text"), "([a-z]{3})([a-z]{2}) ", "$1-\n$2 "))
-
   /** The dehyphenation repair itself — the production column expression:
     * join `letter-\nletter` back into one word (the classic line-wrap
     * artifact of PDF/column text extraction; reference text output keeps
@@ -1279,9 +1268,13 @@ object TextStats {
   def dehyphenateCol(text: Column): Column =
     regexp_replace(text, "([a-z])-\n([a-z])", "$1$2")
 
-  /** Dehyphenation audit: break the corpus with [[corpusWithHyphenBreaks]],
-    * heal it with [[dehyphenateCol]], and prove the repair is the exact
-    * inverse — `restored` pins string equality with the original, and the
+  /** Dehyphenation audit: break the corpus by planting an "exam-\nple"-style
+    * soft line break inside every word of ≥ 5 lowercase letters followed by
+    * a space (the regex `([a-z]{3})([a-z]{2}) ` splits the last five
+    * letters of each such word; a fixed-length, non-overlapping global
+    * replace that Java regex and RE2 match identically, so the DuckDB
+    * oracle replays it verbatim), heal it with [[dehyphenateCol]], and
+    * prove the repair is the exact inverse — `restored` pins string equality with the original, and the
     * healed text is value-pinned by md5. Break/repair counts come from
     * length arithmetic (each planted break adds exactly "-\n" = 2 chars;
     * each repair removes them). One codegen'd projection, zero shuffle. */

@@ -261,8 +261,8 @@ object Warc {
       val (title, links) =
         if (p.html == null) ("", Vector.empty[String])
         else {
-          val docStr = new String(p.html, java.nio.charset.StandardCharsets.UTF_8)
-          (graft.core.html.HtmlExtract.parse(p.html).title,
+          val docStr = graft.core.html.HtmlExtract.decodeBytes(p.html)
+          (graft.core.html.HtmlExtract.parseString(docStr).title,
            graft.core.html.HtmlLinks.extractLinks(docStr, p.url).map(_.dst))
         }
       val json = "{\"Envelope\":{\"WARC-Header-Metadata\":{\"WARC-Target-URI\":\"" +
